@@ -6,643 +6,51 @@ import org.apache.spark.sql.functions._
 
 /** Ordered event-pattern recognition (MATCH_RECOGNIZE-class) — the
   * tier-V envelope row the reference inherits from Flink's full planner
-  * (`/root/reference/flink-runtime/build.gradle:37` pulls
-  * flink-table-planner, which ships SQL row-pattern recognition): detect
-  * occurrences of an N-stage ordered pattern per partition key, each stage
-  * with its own row predicate, the whole match bounded by a time window
-  * from the pattern's first row (MATCH_RECOGNIZE's `WITHIN`).
+  * (the reference's `flink-runtime/build.gradle:37` pulls
+  * flink-table-planner, which ships SQL row-pattern recognition).
   *
-  * Two AFTER MATCH modes, mirroring the standard's two useful skips:
+  * The six registry rows are stage sequences compiled by
+  * [[PatternCompiler.compile]] (`AFTER MATCH SKIP TO NEXT ROW`: one match
+  * per qualifying start row, so matches may overlap), each projected from
+  * the compiler's canonical `s{k}_*` schema onto the row's pinned column
+  * names, next to the DuckDB oracle SQL the row is hash-checked against.
+  * Every row matches view → (middle stage) → purchase WITHIN 24 hours of
+  * the view; only the middle stage varies (plain, `+`, alternation, `?`,
+  * `*`, and the quantified alternation of `evt_pattern_combo`).
   *
-  *  - [[matchPattern]] — `AFTER MATCH SKIP TO NEXT ROW`: one match per
-  *    qualifying START row (matches may overlap). Fully declarative:
-  *    N−1 join+min-agg rounds, so Catalyst plans it and it scales like
-  *    any keyed join. This is the registry/oracle form.
-  *  - [[matchPatternGreedy]] — `AFTER MATCH SKIP PAST LAST ROW` (the
-  *    Flink CEP default): leftmost-earliest match, then resume scanning
-  *    after the match's last row — matches never overlap. A per-key
-  *    ordered scan (the funnel family's posture: per-user state is the
-  *    axis that stays constant as users grow); the pure matcher
-  *    [[greedyMatches]] is shared verbatim by the streaming twin
-  *    ([[graft.streaming.StreamOps.streamingPattern]]), so twin
-  *    equality is equality of inputs, not of two implementations.
-  *
-  * Stage-anchor semantics (both modes): stage 1 anchors at a row
-  * satisfying its predicate; stage k>1 anchors at the EARLIEST row with
-  * ts STRICTLY after stage k−1's anchor and ts ≤ t1 + within. Greedy
-  * earliest anchoring is optimal for match existence: a later stage-k
-  * choice only narrows every later stage's window (c > t_k is harder for
-  * larger t_k), so if any completion exists the greedy one completes.
-  * That argument is what makes the declarative min-agg form EXACT, not
-  * heuristic.
-  *
-  * Scale: the join in [[matchPattern]] bands event time into the equi-key
-  * (the r15 w_interval_join fix): stage-k candidates key on
-  * (user, ⌊ts/within⌋) and each anchor probes the two bands its window
-  * (t_{k−1}, t1+within] ⊆ (t_{k−1}, t_{k−1}+within] can touch, with the
-  * exact bounds as residual filters — a user holding 30% of a corpus
-  * shuffles into per-(user, band) work units instead of one quadratic
-  * task. A candidate row lives in exactly one band, so no pair
-  * duplicates arise.
+  * The pattern semantics, the pure greedy matcher (`AFTER MATCH SKIP PAST
+  * LAST ROW`, [[PatternCompiler.genericMatches]]) and its streaming twin
+  * ([[graft.streaming.StreamOps.streamingPatternSpecTtl]]) are documented
+  * with [[PatternCompiler]].
   */
 object EventPattern {
+  import PatternCompiler.{PStage, QOpt, QPlus, QStar}
 
-  /** One pattern stage: a display name and the row predicate over the
-    * events schema (event_type, value, props, …). */
-  final case class PatternStage(name: String, pred: Column)
-
-  /** Bitmask column: bit k set ⇔ the row satisfies stage k's predicate.
-    * One codegen'd projection qualifies every row for every stage at
-    * once — both the greedy scan and the streaming twin consume (ts,
-    * mask) pairs, never re-evaluating predicates per stage. */
-  def stageMask(stages: Seq[PatternStage]): Column = {
-    // 1 << 32 wraps to 1 on the JVM: a 32nd stage would silently alias
-    // onto stage 0 in every Int-mask consumer (greedyMatches, both
-    // streaming twins) — fail fast at the one place stages become bits
-    require(stages.size <= 31,
-      s"at most 31 pattern stages fit the Int stage mask, got ${stages.size}")
-    stages.zipWithIndex
-      .map { case (st, i) => when(st.pred, lit(1 << i)).otherwise(lit(0)) }
-      .reduce(_ bitwiseOR _)
-  }
-
-  /** `AFTER MATCH SKIP TO NEXT ROW`: one match per distinct qualifying
-    * (user_id, t1). Output: user_id, t1_us … tN_us (epoch micros),
-    * ordered by (user_id, t1_us). */
-  def matchPattern(events: DataFrame, stages: Seq[PatternStage],
-      withinUs: Long): DataFrame = {
-    require(stages.size >= 2, "a pattern needs at least two stages")
-    require(stages.size <= 31,
-      s"at most 31 pattern stages (Int stage-mask bound shared with the " +
-        s"greedy/streaming forms), got ${stages.size}")
-    val ev = events.filter(col("ts").isNotNull)
-    var cur = ev.filter(stages.head.pred)
-      .select(col("user_id"), unix_micros(col("ts")).as("t1"))
-      .distinct()
-    stages.zipWithIndex.drop(1).foreach { case (st, k) =>
-      val prev = s"t$k"
-      val cand = ev.filter(st.pred)
-        .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"),
-          floor(unix_micros(col("ts")) / withinUs).as("c_bkt"))
-      val probes = cur.withColumn("bkt",
-        explode(array(floor(col(prev) / withinUs),
-          floor(col(prev) / withinUs) + 1)))
-      cur = probes.join(cand,
-          col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-            col("c_ts") > col(prev) && col("c_ts") <= col("t1") + withinUs)
-        .groupBy(col("user_id") +: (1 to k).map(i => col(s"t$i")): _*)
-        .agg(min(col("c_ts")).as(s"t${k + 1}"))
-    }
-    cur.select(col("user_id") +:
-        (1 to stages.size).map(i => col(s"t$i").as(s"t${i}_us")): _*)
-      .orderBy(col("user_id"), col("t1_us"))
-  }
-
-  /** Pure greedy matcher over one key's (ts_us, mask) rows, sorted
-    * ascending: leftmost-earliest match, then SKIP PAST LAST ROW.
-    * Anchors are tried in row order; the first completable anchor yields
-    * the leftmost match (matches order by their first row, and greedy
-    * inner anchoring is completion-optimal — see object doc). Shared by
-    * the batch greedy form and the streaming twin. */
-  def greedyMatches(evs: IndexedSeq[(Long, Int)], nStages: Int,
-      withinUs: Long): List[IndexedSeq[Long]] = {
-    val out = List.newBuilder[IndexedSeq[Long]]
-    var from = 0
-    while (from < evs.length) {
-      var found: IndexedSeq[Long] = null
-      var i = from
-      while (found == null && i < evs.length) {
-        if ((evs(i)._2 & 1) != 0) {
-          val t1 = evs(i)._1
-          val anchors = new Array[Long](nStages)
-          anchors(0) = t1
-          var k = 1
-          var j = i + 1
-          var lastIdx = i
-          while (k < nStages && j < evs.length && evs(j)._1 <= t1 + withinUs) {
-            if ((evs(j)._2 & (1 << k)) != 0 && evs(j)._1 > anchors(k - 1)) {
-              anchors(k) = evs(j)._1; lastIdx = j; k += 1
-            }
-            j += 1
-          }
-          if (k == nStages) {
-            found = anchors.toIndexedSeq
-            // SKIP PAST LAST ROW at the TIMESTAMP grain: rows sharing the
-            // last anchor's instant are consumed with it. Index order
-            // among equal timestamps is sort tie-breaking, i.e. arbitrary
-            // — instant-grain skipping is the deterministic choice, and
-            // it is what lets the TTL twin's ts-cursor replay
-            // (StreamOps.streamingPatternTtl) be exactly this function.
-            from = lastIdx + 1
-            while (from < evs.length && evs(from)._1 <= anchors(nStages - 1))
-              from += 1
-          }
-        }
-        i += 1
-      }
-      if (found == null) from = evs.length else out += found
-    }
-    out.result()
-  }
-
-  /** `AFTER MATCH SKIP PAST LAST ROW` (Flink CEP default): non-overlapping
-    * matches via a per-user ordered scan. Rows dedup on (ts, mask) first —
-    * same-instant same-qualification duplicates are inert to the pattern
-    * (strict > makes the duplicate unconsumable), and the dedup is what
-    * makes the streaming twin's at-least-once re-delivery tolerance hold
-    * definitionally. Output: user_id, stage_ts (array of epoch-µs anchors,
-    * one per stage), one row per match. */
-  def matchPatternGreedy(events: DataFrame, stages: Seq[PatternStage],
-      withinUs: Long)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val n = stages.size
-    events.filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        stageMask(stages).as("mask"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (uid: Long, rows: Iterator[(Long, Long, Int)]) =>
-        val evs = rows.map(r => (r._2, r._3)).toIndexedSeq.distinct.sorted
-        greedyMatches(evs, n, withinUs).map(m => (uid, m.toSeq))
-      }
-      .toDF("user_id", "stage_ts")
-      .orderBy(col("user_id"), col("stage_ts"))
-  }
-
-  // ------------------------------------------- quantified pattern (B+)
-  /** `A B+ C` with MEASURES — the quantifier/aggregate slice of the
-    * MATCH_RECOGNIZE envelope (r16 verdict #3; the reference's full
-    * planner ships quantified row-pattern SQL via
-    * `/root/reference/flink-runtime/build.gradle:37`). Semantics are the
-    * engine's documented earliest-completion, relaxed-contiguity
-    * discipline, extended to a run stage:
-    *
-    *  - t1 anchors at a qualifying A row (`AFTER MATCH SKIP TO NEXT ROW`:
-    *    one match per distinct (user, t1));
-    *  - b1 = the EARLIEST B with t1 < ts ≤ t1 + within (the run's first
-    *    element — earliest anchoring maximizes the completion window,
-    *    the same optimality argument as [[matchPattern]]);
-    *  - t3 = the EARLIEST C with b1 < ts ≤ t1 + within;
-    *  - the B-run is every B in the OPEN interval (t1, t3): the run
-    *    consumes greedily up to the completing row, and a B at exactly
-    *    t3's instant belongs to C's reading frame, not the run (strict
-    *    <, pinned in EventPatternSpec).
-    *
-    * MEASURES emitted per match: b_count / b_sum(value) / b_last_us over
-    * the run (b_count ≥ 1 by construction — b1 is in the run).
-    *
-    * Scale: all three rounds (b1, t3, run aggregation) are the banded
-    * equi-key joins of [[matchPattern]] — a candidate lives in one
-    * (user, ⌊ts/within⌋) band, anchors probe two bands, run length is
-    * bounded by the window, so MEASURES cost is output-proportional.
-    * The run aggregate sums through DECIMAL(30,15) (exact, order-free,
-    * oracle-portable) and emits DOUBLE. */
-  def matchPatternPlus(events: DataFrame, aPred: Column, bPred: Column,
-      cPred: Column, withinUs: Long): DataFrame = {
-    val dec = "decimal(30,15)"
-    val ev = events.filter(col("ts").isNotNull)
-    def cand(pred: Column): DataFrame = ev.filter(pred)
-      .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"),
-        floor(unix_micros(col("ts")) / withinUs).as("c_bkt"), col("value"))
-    def probes(df: DataFrame): DataFrame = df.withColumn("bkt",
-      explode(array(floor(col("t1") / withinUs),
-        floor(col("t1") / withinUs) + 1)))
-    val a = ev.filter(aPred)
-      .select(col("user_id"), unix_micros(col("ts")).as("t1")).distinct()
-    val ab = probes(a).join(cand(bPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1")).agg(min(col("c_ts")).as("b1"))
-    val abc = probes(ab).join(cand(cPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("b1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1"), col("b1"))
-      .agg(min(col("c_ts")).as("t3"))
-    probes(abc).join(cand(bPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") < col("t3"))
-      .groupBy(col("user_id"), col("t1"), col("b1"), col("t3"))
-      .agg(count(lit(1)).as("b_count"),
-        (round(sum(col("value").cast(dec)).cast("double"), 6) + 0.0)
-          .as("b_sum"),
-        max(col("c_ts")).as("b_last_us"))
-      .select(col("user_id"), col("t1").as("t1_us"), col("b1").as("b1_us"),
-        col("b_count"), col("b_sum"), col("b_last_us"),
-        col("t3").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-  }
-
-  /** Pure greedy matcher for `A B+ C` over one key's (ts, mask, value)
-    * rows sorted ascending — the SKIP PAST LAST ROW twin of
-    * [[matchPatternPlus]]'s per-start form, sharing its stage-anchor and
-    * run semantics verbatim (earliest b1, earliest t3 after b1, run =
-    * B's in the open (t1, t3)). Returns (t1, b1, bCount, bSum, bLast,
-    * t3) per match; consumption skips past t3 at the instant grain
-    * (the [[greedyMatches]] rule). */
-  def greedyMatchesPlus(evs: IndexedSeq[(Long, Int, Double)],
-      withinUs: Long): List[(Long, Long, Long, Double, Long, Long)] = {
-    val out = List.newBuilder[(Long, Long, Long, Double, Long, Long)]
-    var from = 0
-    while (from < evs.length) {
-      var found = false
-      var i = from
-      while (!found && i < evs.length) {
-        if ((evs(i)._2 & 1) != 0) {
-          val t1 = evs(i)._1
-          var b1 = Long.MinValue
-          var t3 = Long.MinValue
-          var j = i + 1
-          while (t3 == Long.MinValue && j < evs.length &&
-              evs(j)._1 <= t1 + withinUs) {
-            if (b1 == Long.MinValue && (evs(j)._2 & 2) != 0 && evs(j)._1 > t1)
-              b1 = evs(j)._1
-            else if (b1 != Long.MinValue && (evs(j)._2 & 4) != 0 &&
-                evs(j)._1 > b1)
-              t3 = evs(j)._1
-            j += 1
-          }
-          if (t3 != Long.MinValue) {
-            found = true
-            // run aggregation over the slice ALREADY SCANNED, (i, j): every
-            // run member has t1 < ts < t3 ≤ evs(j−1)'s ts, and rows are
-            // ts-sorted, so nothing past j can qualify — bounding the scan
-            // here keeps the whole matcher O(n) per key instead of
-            // O(matches × n) (r17 advice; matters once this matcher rides
-            // the streaming TTL path on a hot key). Sorted order also makes
-            // the last qualifying row the max — no rescan for b_last.
-            var bCount = 0L
-            var bSum = BigDecimal(0)
-            var bLast = Long.MinValue
-            var r = i + 1
-            while (r < j) {
-              val e = evs(r)
-              if ((e._2 & 2) != 0 && e._1 > t1 && e._1 < t3) {
-                bCount += 1
-                bSum += BigDecimal(e._3)
-                  .setScale(15, BigDecimal.RoundingMode.HALF_UP)
-                bLast = e._1
-              }
-              r += 1
-            }
-            out += ((t1, b1, bCount,
-              BigDecimal(bSum.toDouble)
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0,
-              bLast, t3))
-            from = j
-            while (from < evs.length && evs(from)._1 <= t3) from += 1
-          }
-        }
-        i += 1
-      }
-      if (!found) from = evs.length
-    }
-    out.result()
-  }
-
-  // -------------------------------------- alternation: A (B|C) D (r18)
-  /** `A (B₀|B₁|…) D` — the alternation slice of the MATCH_RECOGNIZE
-    * envelope (r17 verdict #3; the reference's full planner ships
-    * alternation via `/root/reference/flink-runtime/build.gradle:37`).
-    * Semantics extend the engine's earliest-completion discipline with a
-    * branch-priority tie rule:
-    *
-    *  - t1 anchors at a qualifying A row (`AFTER MATCH SKIP TO NEXT ROW`);
-    *  - t2 = the EARLIEST row satisfying ANY alternative in
-    *    (t1, t1 + within]; a row satisfying several alternatives counts
-    *    as the FIRST-LISTED one, and two different-branch rows at the
-    *    same instant resolve to the first-listed branch (SQL row-pattern
-    *    alternation preference order) — both rules land in one
-    *    `min(struct(ts, branch))` (lexicographic struct min = earliest
-    *    ts, then lowest branch index);
-    *  - t3 = the EARLIEST D with t2 < ts ≤ t1 + within.
-    *
-    * The match carries PROVENANCE: `via` names the winning alternative —
-    * the thing a plain OR-predicate stage cannot report.
-    *
-    * Scale: both rounds are the banded equi-key joins of [[matchPattern]]
-    * (candidates live in one (user, ⌊ts/within⌋) band, anchors probe two);
-    * the branch dimension adds one int column, no extra shuffle. */
-  def matchPatternAlt(events: DataFrame, aPred: Column,
-      alts: Seq[(String, Column)], dPred: Column,
-      withinUs: Long): DataFrame = {
-    require(alts.nonEmpty, "alternation needs at least one branch")
-    val ev = events.filter(col("ts").isNotNull)
-    // first-listed branch wins when one row satisfies several alternatives
-    val biCol = alts.zipWithIndex.foldRight(lit(null).cast("int")) {
-      case (((_, pred), i), rest) => when(pred, lit(i)).otherwise(rest)
-    }
-    // filter with the explicit OR (it pushes to the parquet scan as
-    // Or(And(type,value),…)); bi is then provably non-null — a CASE-based
-    // IsNotNull filter would evaluate post-scan and push nothing
-    val mids = ev.filter(alts.map(_._2).reduce(_ || _))
-      .select(col("user_id").as("c_user"),
-        unix_micros(col("ts")).as("c_ts"),
-        floor(unix_micros(col("ts")) / withinUs).as("c_bkt"), biCol.as("bi"))
-    def probes(df: DataFrame, t: String): DataFrame = df.withColumn("bkt",
-      explode(array(floor(col(t) / withinUs), floor(col(t) / withinUs) + 1)))
-    val a = ev.filter(aPred)
-      .select(col("user_id"), unix_micros(col("ts")).as("t1")).distinct()
-    val ab = probes(a, "t1").join(mids,
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1"))
-      .agg(min(struct(col("c_ts"), col("bi"))).as("m"))
-      .select(col("user_id"), col("t1"), col("m.c_ts").as("t2"),
-        col("m.bi").as("bi"))
-    val dCand = ev.filter(dPred)
-      .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"),
-        floor(unix_micros(col("ts")) / withinUs).as("c_bkt"))
-    val viaCol = alts.zipWithIndex.foldRight(lit(null).cast("string")) {
-      case (((name, _), i), rest) => when(col("bi") === i, lit(name)).otherwise(rest)
-    }
-    probes(ab, "t1").join(dCand,
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t2") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1"), col("t2"), col("bi"))
-      .agg(min(col("c_ts")).as("t3"))
-      .select(col("user_id"), col("t1").as("t1_us"), col("t2").as("t2_us"),
-        viaCol.as("via"), col("t3").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-  }
-
-  /** Pure greedy matcher for `A (B₀|B₁|…) D` over one key's (ts, mask)
-    * rows sorted ascending — bit 0 = A, bit 1+i = alternative i, top bit
-    * (1 + nAlts) = D. SKIP PAST LAST ROW at the instant grain (the
-    * [[greedyMatches]] rule); the branch tie rule is
-    * [[matchPatternAlt]]'s (earliest instant, then lowest branch index —
-    * scanned across ALL rows at the winning instant). Returns
-    * (t1, t2, branchIdx, t3) per match. */
-  def greedyMatchesAlt(evs: IndexedSeq[(Long, Int)], nAlts: Int,
-      withinUs: Long): List[(Long, Long, Int, Long)] = {
-    val altMask = ((1 << nAlts) - 1) << 1
-    val dBit = 1 << (1 + nAlts)
-    val out = List.newBuilder[(Long, Long, Int, Long)]
-    var from = 0
-    while (from < evs.length) {
-      var found = false
-      var i = from
-      while (!found && i < evs.length) {
-        if ((evs(i)._2 & 1) != 0) {
-          val t1 = evs(i)._1
-          var t2 = Long.MinValue
-          var bi = Int.MaxValue
-          var t3 = Long.MinValue
-          var j = i + 1
-          while (t3 == Long.MinValue && j < evs.length &&
-              evs(j)._1 <= t1 + withinUs) {
-            val (ts, m) = evs(j)
-            if (t2 == Long.MinValue && (m & altMask) != 0 && ts > t1) {
-              t2 = ts
-              bi = Integer.numberOfTrailingZeros((m & altMask) >>> 1)
-            } else if (t2 == ts && (m & altMask) != 0) {
-              // another row at the winning instant: lowest branch wins
-              bi = math.min(bi, Integer.numberOfTrailingZeros((m & altMask) >>> 1))
-            } else if (t2 != Long.MinValue && (m & dBit) != 0 && ts > t2)
-              t3 = ts
-            j += 1
-          }
-          if (t3 != Long.MinValue) {
-            found = true
-            out += ((t1, t2, bi, t3))
-            from = j
-            while (from < evs.length && evs(from)._1 <= t3) from += 1
-          }
-        }
-        i += 1
-      }
-      if (!found) from = evs.length
-    }
-    out.result()
-  }
-
-  // ------------------------------- optional stage: A B? C (greedy, r18)
-  /** `A B? C` — the optional-stage slice of the quantifier envelope.
-    * `B?` is GREEDY under THIS ENGINE'S pinned envelope semantics (like
-    * the alternation tie rule): the with-B completion is PREFERRED
-    * whenever it exists ANYWHERE in the window, and the matcher
-    * backtracks to the zero-B form only when it doesn't. NOTE this is
-    * not the SQL-standard row-sequential greedy: standard
-    * MATCH_RECOGNIZE consumes rows contiguously, so A@0, C@5, B@10,
-    * C@15 matches zero-B at C@5 (B? cannot consume C@5), where this
-    * engine's relaxed-contiguity rule prefers (0, 10, 15). The
-    * preference rule is oracle-pinned (evt_pattern_opt hash) and
-    * recorded as a divergence in SURVEY.md §2's pattern row —
-    *
-    *  - with-B: b = earliest B in (t1, t1+W], t3 = earliest C in
-    *    (b, t1+W] (exactly [[matchPattern]]'s 3-stage rounds);
-    *  - zero-B fallback: t3 = earliest C in (t1, t1+W].
-    *
-    * A with-B completion implies a zero-B completion (a C after b is a C
-    * after t1), so the zero-B round is the anchor universe and the with-B
-    * round LEFT-joins onto it: took_b = the with-B row exists, b_us its
-    * anchor (NULL otherwise), t3 = COALESCE(with-B t3, zero-B t3). Output
-    * took_b as INT (0/1) for oracle-hash portability. */
-  def matchPatternOpt(events: DataFrame, aPred: Column, bPred: Column,
-      cPred: Column, withinUs: Long): DataFrame = {
-    val ev = events.filter(col("ts").isNotNull)
-    def cand(pred: Column): DataFrame = ev.filter(pred)
-      .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"),
-        floor(unix_micros(col("ts")) / withinUs).as("c_bkt"))
-    def probes(df: DataFrame): DataFrame = df.withColumn("bkt",
-      explode(array(floor(col("t1") / withinUs),
-        floor(col("t1") / withinUs) + 1)))
-    val a = ev.filter(aPred)
-      .select(col("user_id"), unix_micros(col("ts")).as("t1")).distinct()
-    val ab = probes(a).join(cand(bPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1")).agg(min(col("c_ts")).as("b1"))
-    val abc = probes(ab).join(cand(cPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("b1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1"), col("b1"))
-      .agg(min(col("c_ts")).as("t3w"))
-    val ac = probes(a).join(cand(cPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1")).agg(min(col("c_ts")).as("t3z"))
-    ac.join(abc, Seq("user_id", "t1"), "left")
-      .select(col("user_id"), col("t1").as("t1_us"),
-        when(col("t3w").isNotNull, 1).otherwise(0).cast("int").as("took_b"),
-        col("b1").as("b_us"),
-        coalesce(col("t3w"), col("t3z")).as("t3_us"))
-      .select(col("user_id"), col("t1_us"), col("took_b"),
-        when(col("took_b") === 1, col("b_us")).as("b_us"), col("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-  }
-
-  // ----------------------- zero-or-more: A B* C with MEASURES (r18)
-  /** `A B* C` with run MEASURES — [[matchPatternPlus]] with the
-    * at-least-one constraint lifted, under the same greedy-emptiness law
-    * as [[matchPatternOpt]]: the NON-EMPTY-run completion (the B+ rounds)
-    * is preferred whenever it exists; otherwise the zero-B completion
-    * (t3 = earliest C in (t1, t1+W]) matches with an EMPTY run —
-    * b_count = 0, b_sum = 0.0, b_last_us NULL. A non-empty-run completion
-    * implies a zero-B completion, so the zero-B round is the match
-    * universe and the B+ MEASURES left-join onto it. */
-  def matchPatternStar(events: DataFrame, aPred: Column, bPred: Column,
-      cPred: Column, withinUs: Long): DataFrame = {
-    val ev = events.filter(col("ts").isNotNull)
-    def cand(pred: Column): DataFrame = ev.filter(pred)
-      .select(col("user_id").as("c_user"), unix_micros(col("ts")).as("c_ts"),
-        floor(unix_micros(col("ts")) / withinUs).as("c_bkt"))
-    def probes(df: DataFrame): DataFrame = df.withColumn("bkt",
-      explode(array(floor(col("t1") / withinUs),
-        floor(col("t1") / withinUs) + 1)))
-    val a = ev.filter(aPred)
-      .select(col("user_id"), unix_micros(col("ts")).as("t1")).distinct()
-    val ac = probes(a).join(cand(cPred),
-        col("user_id") === col("c_user") && col("bkt") === col("c_bkt") &&
-          col("c_ts") > col("t1") && col("c_ts") <= col("t1") + withinUs)
-      .groupBy(col("user_id"), col("t1")).agg(min(col("c_ts")).as("t3z"))
-    val plus = matchPatternPlus(events, aPred, bPred, cPred, withinUs)
-      .select(col("user_id"), col("t1_us").as("t1"), col("b1_us"),
-        col("b_count"), col("b_sum"), col("b_last_us"), col("t3_us"))
-    ac.join(plus, Seq("user_id", "t1"), "left")
-      .select(col("user_id"), col("t1").as("t1_us"),
-        coalesce(col("b_count"), lit(0L)).as("b_count"),
-        (coalesce(col("b_sum"), lit(0.0)) + 0.0).as("b_sum"),
-        col("b_last_us"),
-        coalesce(col("t3_us"), col("t3z")).as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-  }
-
-  /** Pure greedy matcher for `A B? C` over one key's (ts, mask) rows
-    * sorted ascending (bits: A=1, B=2, C=4) — the SKIP PAST LAST ROW twin
-    * of [[matchPatternOpt]], sharing its greedy-`B?` law verbatim: the
-    * with-B completion (earliest b1, then earliest C after b1) is
-    * preferred whenever it exists inside the window; otherwise the zero-B
-    * completion (earliest C after t1). Returns (t1, b1Opt, t3);
-    * consumption skips past t3 at the instant grain. */
-  def greedyMatchesOpt(evs: IndexedSeq[(Long, Int)],
-      withinUs: Long): List[(Long, Option[Long], Long)] = {
-    val out = List.newBuilder[(Long, Option[Long], Long)]
-    var from = 0
-    while (from < evs.length) {
-      var found = false
-      var i = from
-      while (!found && i < evs.length) {
-        if ((evs(i)._2 & 1) != 0) {
-          val t1 = evs(i)._1
-          var b1 = Long.MinValue
-          var t3w = Long.MinValue
-          var t3z = Long.MinValue
-          var j = i + 1
-          while (t3w == Long.MinValue && j < evs.length &&
-              evs(j)._1 <= t1 + withinUs) {
-            val (ts, m) = evs(j)
-            if (b1 == Long.MinValue && (m & 2) != 0 && ts > t1) b1 = ts
-            if ((m & 4) != 0) {
-              if (t3z == Long.MinValue && ts > t1) t3z = ts
-              if (b1 != Long.MinValue && ts > b1) t3w = ts
-            }
-            j += 1
-          }
-          if (t3w != Long.MinValue || t3z != Long.MinValue) {
-            found = true
-            val t3 = if (t3w != Long.MinValue) t3w else t3z
-            out += ((t1, if (t3w != Long.MinValue) Some(b1) else None, t3))
-            // SKIP PAST LAST ROW resumes just past t3 — NOT past j: in the
-            // zero-B fallback the scan ran beyond t3z to the window edge
-            // hunting a with-B completion, and `from = j` there would
-            // silently consume every anchor in (t3, t1+W] (found by the
-            // fence-closed gate-corpus equality: the incremental TTL
-            // replay, which re-derives from the kept tail after each
-            // final, does NOT make that mistake — the two forms diverged)
-            from = i + 1
-            while (from < evs.length && evs(from)._1 <= t3) from += 1
-          }
-        }
-        i += 1
-      }
-      if (!found) from = evs.length
-    }
-    out.result()
-  }
-
-  /** Pure greedy matcher for `A B* C` with run MEASURES over one key's
-    * (ts, mask, value) rows sorted ascending — [[matchPatternStar]]'s
-    * SKIP PAST LAST ROW twin under the same greedy-emptiness law: the
-    * non-empty-run completion ([[greedyMatchesPlus]]'s rounds) is
-    * preferred; otherwise the zero-B completion matches with an empty
-    * run (the fallback's run is PROVABLY empty: a B inside (t1, t3z)
-    * would put b1 < t3z and make t3z itself a with-B completion).
-    * Returns (t1, bCount, bSum, bLastOpt, t3). */
-  def greedyMatchesStar(evs: IndexedSeq[(Long, Int, Double)],
-      withinUs: Long): List[(Long, Long, Double, Option[Long], Long)] = {
-    val out = List.newBuilder[(Long, Long, Double, Option[Long], Long)]
-    var from = 0
-    while (from < evs.length) {
-      var found = false
-      var i = from
-      while (!found && i < evs.length) {
-        if ((evs(i)._2 & 1) != 0) {
-          val t1 = evs(i)._1
-          var b1 = Long.MinValue
-          var t3w = Long.MinValue
-          var t3z = Long.MinValue
-          var j = i + 1
-          while (t3w == Long.MinValue && j < evs.length &&
-              evs(j)._1 <= t1 + withinUs) {
-            val (ts, m, _) = evs(j)
-            if (b1 == Long.MinValue && (m & 2) != 0 && ts > t1) b1 = ts
-            if ((m & 4) != 0) {
-              if (t3z == Long.MinValue && ts > t1) t3z = ts
-              if (b1 != Long.MinValue && ts > b1) t3w = ts
-            }
-            j += 1
-          }
-          if (t3w != Long.MinValue || t3z != Long.MinValue) {
-            found = true
-            val t3 = if (t3w != Long.MinValue) t3w else t3z
-            // run aggregation over the scanned slice (the
-            // greedyMatchesPlus bound): members have t1 < ts < t3 ≤ the
-            // last scanned row's ts, so nothing past j qualifies
-            var bCount = 0L
-            var bSum = BigDecimal(0)
-            var bLast = Long.MinValue
-            var r = i + 1
-            while (r < j) {
-              val e = evs(r)
-              if ((e._2 & 2) != 0 && e._1 > t1 && e._1 < t3) {
-                bCount += 1
-                bSum += BigDecimal(e._3)
-                  .setScale(15, BigDecimal.RoundingMode.HALF_UP)
-                bLast = e._1
-              }
-              r += 1
-            }
-            out += ((t1, bCount,
-              BigDecimal(bSum.toDouble)
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0,
-              if (bCount > 0) Some(bLast) else None, t3))
-            // resume just past t3, not past the scanned-ahead j (see
-            // greedyMatchesOpt — the zero-B fallback scans beyond t3z)
-            from = i + 1
-            while (from < evs.length && evs(from)._1 <= t3) from += 1
-          }
-        }
-        i += 1
-      }
-      if (!found) from = evs.length
-    }
-    out.result()
-  }
-
-  // ----------------------------------------------------- registry binding
-  /** The concrete registry pattern: view → click(value ≥ 50) → purchase
-    * WITHIN 24 hours of the view — a funnel-shaped pattern whose middle
-    * stage carries a non-type predicate (the thing q36 cannot express). */
   private val withinUs24h = 24L * 3600 * 1000000L
-  private def patternStages: Seq[PatternStage] = Seq(
-    PatternStage("view", col("event_type") === "view"),
-    PatternStage("click50",
-      col("event_type") === "click" && col("value") >= 50),
-    PatternStage("purchase", col("event_type") === "purchase"))
+  private def viewP = col("event_type") === "view"
+  private def click50P = col("event_type") === "click" && col("value") >= 50
+  private def purchaseP = col("event_type") === "purchase"
+  private def errorP = col("event_type") === "error"
+  private def clickOrError = Seq("click50" -> click50P, "error" -> errorP)
 
+  /** view → `mid` → purchase WITHIN 24 h, compiled, then projected onto
+    * `user_id` plus the row's pinned columns (which must name `t1_us`)
+    * and ordered by (user_id, t1_us). */
+  private def viewToPurchase(s: SparkSession, dir: String, mid: PStage,
+      cols: Column*): DataFrame =
+    PatternCompiler.compile(Tables.load(s, dir, "events"),
+        Seq(PStage.one("view", viewP), mid, PStage.one("purchase", purchaseP)),
+        withinUs24h)
+      .select(col("user_id") +: cols: _*)
+      .orderBy(col("user_id"), col("t1_us"))
+
+  /** view → click(value ≥ 50) → purchase WITHIN 24 hours of the view — a
+    * funnel-shaped pattern whose middle stage carries a non-type
+    * predicate (the thing q36 cannot express). */
   def evtPattern(s: SparkSession, dir: String): DataFrame =
-    matchPattern(Tables.load(s, dir, "events"), patternStages, withinUs24h)
+    viewToPurchase(s, dir, PStage.one("click50", click50P),
+      col("s1_ts").as("t1_us"), col("s2_ts").as("t2_us"),
+      col("s3_ts").as("t3_us"))
 
   val evtPatternSql: String =
     """WITH ev AS (
@@ -667,15 +75,15 @@ object EventPattern {
       |  epoch_us(CAST(t3 AS TIMESTAMP)) AS t3_us
       |FROM abc ORDER BY user_id, t1_us""".stripMargin
 
-  /** The registry quantified pattern: view → click(value ≥ 50)+ →
-    * purchase WITHIN 24 h, with run MEASURES — the value predicate rides
-    * the quantified stage so the pushed-filter plan property covers the
-    * run joins too. */
+  /** view → click(value ≥ 50)+ → purchase WITHIN 24 h, with run MEASURES
+    * (b_count / b_sum / b_last_us over every click50 in the open frame
+    * (t1, t3)) — the value predicate rides the quantified stage so the
+    * pushed-filter plan property covers the run joins too. */
   def evtPatternPlus(s: SparkSession, dir: String): DataFrame =
-    matchPatternPlus(Tables.load(s, dir, "events"),
-      col("event_type") === "view",
-      col("event_type") === "click" && col("value") >= 50,
-      col("event_type") === "purchase", withinUs24h)
+    viewToPurchase(s, dir, PStage(Seq("click50" -> click50P), QPlus),
+      col("s1_ts").as("t1_us"), col("s2_ts").as("b1_us"),
+      col("s2_count").as("b_count"), col("s2_sum").as("b_sum"),
+      col("s2_last").as("b_last_us"), col("s3_ts").as("t3_us"))
 
   val evtPatternPlusSql: String =
     """WITH ev AS (
@@ -711,15 +119,13 @@ object EventPattern {
       |  epoch_us(CAST(t3 AS TIMESTAMP)) AS t3_us
       |FROM runm ORDER BY user_id, t1_us""".stripMargin
 
-  /** The registry alternation: view → (click(value ≥ 50) | error) →
-    * purchase WITHIN 24 h — the mid-stage alternative carries provenance
-    * (`via`), the thing an OR-predicate stage cannot report. */
+  /** view → (click(value ≥ 50) | error) → purchase WITHIN 24 h — the
+    * middle alternative carries provenance (`via`), the thing an
+    * OR-predicate stage cannot report. */
   def evtPatternAlt(s: SparkSession, dir: String): DataFrame =
-    matchPatternAlt(Tables.load(s, dir, "events"),
-      col("event_type") === "view",
-      Seq("click50" -> (col("event_type") === "click" && col("value") >= 50),
-        "error" -> (col("event_type") === "error")),
-      col("event_type") === "purchase", withinUs24h)
+    viewToPurchase(s, dir, PStage(clickOrError),
+      col("s1_ts").as("t1_us"), col("s2_ts").as("t2_us"),
+      col("s2_via").as("via"), col("s3_ts").as("t3_us"))
 
   val evtPatternAltSql: String =
     """WITH ev AS (
@@ -754,13 +160,12 @@ object EventPattern {
       |  epoch_us(CAST(t3 AS TIMESTAMP)) AS t3_us
       |FROM abd ORDER BY user_id, t1_us""".stripMargin
 
-  /** The registry optional pattern: view → click(value ≥ 50)? →
-    * purchase WITHIN 24 h (greedy `B?`). */
+  /** view → click(value ≥ 50)? → purchase WITHIN 24 h (greedy `B?`:
+    * took_b = 1 with b_us when the with-click completion exists). */
   def evtPatternOpt(s: SparkSession, dir: String): DataFrame =
-    matchPatternOpt(Tables.load(s, dir, "events"),
-      col("event_type") === "view",
-      col("event_type") === "click" && col("value") >= 50,
-      col("event_type") === "purchase", withinUs24h)
+    viewToPurchase(s, dir, PStage(Seq("click50" -> click50P), QOpt),
+      col("s1_ts").as("t1_us"), col("s2_taken").as("took_b"),
+      col("s2_ts").as("b_us"), col("s3_ts").as("t3_us"))
 
   val evtPatternOptSql: String =
     """WITH ev AS (
@@ -793,13 +198,13 @@ object EventPattern {
       |FROM ac LEFT JOIN abc ON abc.user_id = ac.user_id AND abc.t1 = ac.t1
       |ORDER BY ac.user_id, t1_us""".stripMargin
 
-  /** The registry zero-or-more pattern: view → click(value ≥ 50)* →
-    * purchase WITHIN 24 h, with run MEASURES (empty run allowed). */
+  /** view → click(value ≥ 50)* → purchase WITHIN 24 h, with run MEASURES
+    * (an empty run reads 0 / 0.0 / NULL). */
   def evtPatternStar(s: SparkSession, dir: String): DataFrame =
-    matchPatternStar(Tables.load(s, dir, "events"),
-      col("event_type") === "view",
-      col("event_type") === "click" && col("value") >= 50,
-      col("event_type") === "purchase", withinUs24h)
+    viewToPurchase(s, dir, PStage(Seq("click50" -> click50P), QStar),
+      col("s1_ts").as("t1_us"), col("s2_count").as("b_count"),
+      col("s2_sum").as("b_sum"), col("s2_last").as("b_last_us"),
+      col("s3_ts").as("t3_us"))
 
   val evtPatternStarSql: String =
     """WITH ev AS (
@@ -843,85 +248,17 @@ object EventPattern {
       |FROM ac LEFT JOIN runm r ON r.user_id = ac.user_id AND r.t1 = ac.t1
       |ORDER BY ac.user_id, t1_us""".stripMargin
 
-  // -------------------- compiler-derived registry forms (r19 verdict #1)
-  // The five hash-pinned rows re-derive through PatternCompiler: each
-  // wrapper is the stage-sequence AST plus a thin projection from the
-  // compiler's canonical schema to the row's pinned legacy schema. The
-  // bespoke operators above stay as the semantic reference —
-  // EventPatternSpec pins compiled ≡ bespoke row-for-row, so the oracle
-  // hashes are unchanged by construction.
-  import PatternCompiler.{PStage, QOpt, QPlus, QStar}
-
-  private def viewP = col("event_type") === "view"
-  private def click50P = col("event_type") === "click" && col("value") >= 50
-  private def purchaseP = col("event_type") === "purchase"
-  private def errorP = col("event_type") === "error"
-
-  def evtPatternCompiled(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP), PStage.one("click50", click50P),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_ts").as("t2_us"), col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-
-  def evtPatternPlusCompiled(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP),
-          PStage(Seq("click50" -> click50P), QPlus),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_ts").as("b1_us"), col("s2_count").as("b_count"),
-        col("s2_sum").as("b_sum"), col("s2_last").as("b_last_us"),
-        col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-
-  def evtPatternAltCompiled(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP),
-          PStage(Seq("click50" -> click50P, "error" -> errorP)),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_ts").as("t2_us"), col("s2_via").as("via"),
-        col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-
-  def evtPatternOptCompiled(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP),
-          PStage(Seq("click50" -> click50P), QOpt),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_taken").as("took_b"), col("s2_ts").as("b_us"),
-        col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-
-  def evtPatternStarCompiled(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP),
-          PStage(Seq("click50" -> click50P), QStar),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_count").as("b_count"), col("s2_sum").as("b_sum"),
-        col("s2_last").as("b_last_us"), col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
-
-  /** The COMPOSED registry pattern the bespoke family could not express
-    * (r18 verdict #1's done-criterion): view → (click(value ≥ 50) |
-    * error)+ → purchase WITHIN 24 h — a quantified ALTERNATION stage
-    * carrying both run MEASURES (m_count / m_sum / m_last_us over every
-    * branch row in the open reading frame) and branch PROVENANCE (`via` =
-    * the run's first element's branch, first-listed preference at ties). */
+  /** view → (click(value ≥ 50) | error)+ → purchase WITHIN 24 h — a
+    * quantified ALTERNATION stage carrying both run MEASURES (m_count /
+    * m_sum / m_last_us over every branch row in the open reading frame)
+    * and branch PROVENANCE (`via` = the run's first element's branch,
+    * first-listed preference at ties). */
   def evtPatternCombo(s: SparkSession, dir: String): DataFrame =
-    PatternCompiler.compile(Tables.load(s, dir, "events"),
-        Seq(PStage.one("view", viewP),
-          PStage(Seq("click50" -> click50P, "error" -> errorP), QPlus),
-          PStage.one("purchase", purchaseP)), withinUs24h)
-      .select(col("user_id"), col("s1_ts").as("t1_us"),
-        col("s2_ts").as("r1_us"), col("s2_via").as("via"),
-        col("s2_count").as("m_count"), col("s2_sum").as("m_sum"),
-        col("s2_last").as("m_last_us"), col("s3_ts").as("t3_us"))
-      .orderBy(col("user_id"), col("t1_us"))
+    viewToPurchase(s, dir, PStage(clickOrError, QPlus),
+      col("s1_ts").as("t1_us"), col("s2_ts").as("r1_us"),
+      col("s2_via").as("via"), col("s2_count").as("m_count"),
+      col("s2_sum").as("m_sum"), col("s2_last").as("m_last_us"),
+      col("s3_ts").as("t3_us"))
 
   val evtPatternComboSql: String =
     """WITH ev AS (
@@ -968,11 +305,11 @@ object EventPattern {
       |FROM runm ORDER BY user_id, t1_us""".stripMargin
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "evt_pattern" -> (evtPatternCompiled _),
-    "evt_pattern_plus" -> (evtPatternPlusCompiled _),
-    "evt_pattern_alt" -> (evtPatternAltCompiled _),
-    "evt_pattern_opt" -> (evtPatternOptCompiled _),
-    "evt_pattern_star" -> (evtPatternStarCompiled _),
+    "evt_pattern" -> (evtPattern _),
+    "evt_pattern_plus" -> (evtPatternPlus _),
+    "evt_pattern_alt" -> (evtPatternAlt _),
+    "evt_pattern_opt" -> (evtPatternOpt _),
+    "evt_pattern_star" -> (evtPatternStar _),
     "evt_pattern_combo" -> (evtPatternCombo _))
 
   val oracles: Map[String, String] = Map(

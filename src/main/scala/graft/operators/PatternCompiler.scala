@@ -3,21 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Row-pattern COMPILER — one stage-sequence AST that generates both
-  * execution forms of the MATCH_RECOGNIZE envelope (r18 verdict #1):
+/** Row-pattern COMPILER — the engine's one row-pattern path: a
+  * stage-sequence AST that generates every execution form of the
+  * MATCH_RECOGNIZE envelope (r18 verdict #1):
   *
   *  - [[compile]] — the declarative banded-rounds plan (`AFTER MATCH SKIP
-  *    TO NEXT ROW`): the generator emits exactly the join+min-agg round
-  *    discipline the five bespoke operators ([[EventPattern.matchPattern]]
-  *    / Plus / Alt / Opt / Star) hand-derived, so Catalyst plans every
-  *    composed pattern the same way it plans the bespoke ones — banded
-  *    equi-key hash joins with stage predicates pushed to the scan, never
-  *    a nested loop;
+  *    TO NEXT ROW`): N−1 join+min-agg rounds, so Catalyst plans every
+  *    pattern as banded equi-key hash joins with stage predicates pushed
+  *    to the scan, never a nested loop. Stage-k candidates key on
+  *    (user, ⌊ts/within⌋) and each anchor probes the two bands its window
+  *    can touch, exact bounds as residual filters — a user holding 30% of
+  *    a corpus shuffles into per-(user, band) work units instead of one
+  *    quadratic task (the r15 w_interval_join fix);
   *  - [[genericMatches]] — ONE pure greedy matcher (`AFTER MATCH SKIP
-  *    PAST LAST ROW`) over a key's sorted (ts, mask, value) rows, driven
-  *    by the same AST, generalizing greedyMatches/Plus/Alt/Opt/Star and
-  *    shared verbatim by the streaming TTL twin
-  *    ([[graft.streaming.StreamOps.streamingPatternSpecTtl]]).
+  *    PAST LAST ROW`, the Flink CEP default) over a key's sorted (ts,
+  *    mask, value) rows, driven by the same AST and shared verbatim by
+  *    the streaming TTL twin
+  *    ([[graft.streaming.StreamOps.streamingPatternSpecTtl]]), so twin
+  *    equality is equality of inputs, not of two implementations.
   *
   * The AST: a pattern is a SEQUENCE of stages; each stage is an
   * ALTERNATION of named predicates (singleton = plain stage) with a
@@ -29,11 +32,11 @@ import org.apache.spark.sql.functions._
   * regex set through Flink's planner
   * (`/root/reference/flink-runtime/build.gradle:37`); this compiler covers
   * the sequence/alternation/quantifier core of it under the engine's
-  * pinned envelope semantics (below), which is what the five oracle rows
-  * and the composed `evt_pattern_combo` row hash-check.
+  * pinned envelope semantics (below), which is what the six
+  * `evt_pattern*` oracle rows hash-check ([[EventPattern]]).
   *
   * == Pinned envelope semantics (NOT the SQL-standard row-sequential
-  * contiguity — see the matchPatternOpt scaladoc for the divergence) ==
+  * contiguity) ==
   *
   *  - t1 anchors at a qualifying first-stage row; the whole match lives
   *    in (t1, t1 + within].
@@ -44,9 +47,10 @@ import org.apache.spark.sql.functions._
   *  - A `+` stage anchors at its earliest qualifying row r1 (the run's
   *    first element); the NEXT stage reads strictly after r1; the run =
   *    every qualifying row in the OPEN reading frame (prevAnchor,
-  *    nextAnchor) — earliest anchoring is completion-optimal (a later r1
-  *    only narrows every later window), the same exactness argument as
-  *    [[EventPattern.matchPattern]].
+  *    nextAnchor). Earliest anchoring is completion-optimal: a later
+  *    anchor at any stage only narrows every later stage's window, so if
+  *    any completion exists the earliest-anchored one completes — which
+  *    is what makes the declarative min-agg rounds EXACT, not heuristic.
   *  - `?` and `*` are GREEDY with whole-completion backtracking: the
   *    taken/non-empty arm is preferred whenever it completes inside the
   *    window; the skip/empty arm is the fallback. A taken completion
@@ -54,6 +58,11 @@ import org.apache.spark.sql.functions._
   *    every later reading frame), so the skip arm is the anchor universe
   *    and the taken arm LEFT-joins onto it — the declarative form stays
   *    exact, with 2^(#optional stages) arms, each a shared-prefix plan.
+  *    This preference is the engine's, not the standard's: standard
+  *    MATCH_RECOGNIZE consumes rows contiguously, so A@0, C@5, B@10, C@15
+  *    matches `A B? C` zero-B at C@5, where this engine prefers
+  *    (0, 10, 15). The rule is oracle-pinned (evt_pattern_opt) and
+  *    recorded as a divergence in SURVEY.md §2's pattern row.
   *  - MEASURES per quantified stage: count / sum(value) / last-ts over
   *    the run, summed through DECIMAL(30,15) (exact, order-free,
   *    oracle-portable), emitted as DOUBLE; an empty `*` run degrades to
@@ -63,9 +72,8 @@ import org.apache.spark.sql.functions._
   * `user_id`, then per stage k (1-based): `sk_ts` (anchor epoch-µs; NULL
   * for a skipped `?`/`*`), `sk_via` (alternations only), `sk_taken`
   * (`?` only, INT 0/1), `sk_count`/`sk_sum`/`sk_last` (`+`/`*` only).
-  * The five legacy operators' pinned schemas are thin projections of
-  * this (see [[EventPattern]]'s registry wrappers — re-derived through
-  * this compiler with unchanged oracle hashes).
+  * The registry rows' pinned schemas are thin projections of this (see
+  * [[EventPattern]]).
   */
 object PatternCompiler {
 
@@ -152,8 +160,7 @@ object PatternCompiler {
     // branch-priority column: first-listed satisfied alternative wins.
     // The row filter is the explicit OR (it pushes to the parquet scan
     // as Or(And(...),...)); bi is then provably non-null — a CASE-based
-    // IsNotNull filter would evaluate post-scan and push nothing (the
-    // matchPatternAlt lesson, kept by the generator).
+    // IsNotNull filter would evaluate post-scan and push nothing.
     def biCol(st: PStage): Column =
       st.alts.zipWithIndex.foldRight(lit(null).cast("int")) {
         case (((_, pred), i), rest) => when(pred, lit(i)).otherwise(rest)
@@ -339,16 +346,16 @@ object PatternCompiler {
 
   /** ONE pure greedy matcher (`AFTER MATCH SKIP PAST LAST ROW`) for any
     * compiled stage sequence, over one key's (ts_us, mask, value) rows
-    * sorted ascending — mask from [[specMask]]. Generalizes
-    * greedyMatches / Plus / Alt / Opt / Star (equality is spec-pinned in
-    * EventPatternSpec): anchors are tried in row order; each stage
+    * sorted ascending — mask from [[specMask]]. Equality with the five
+    * hand-written per-shape matchers it generalizes is spec-pinned
+    * (PatternCompilerSpec): anchors are tried in row order; each stage
     * anchors earliest-after-cursor with first-listed branch preference
     * at the winning instant; `?`/`*` backtrack at whole-completion
     * granularity (taken arm preferred); runs aggregate over the open
     * reading frame with the DECIMAL(30,15) sum discipline; consumption
     * skips past the final anchor at the instant grain, resuming from the
     * anchor's successor (never from the scan cursor — the r18
-    * zero-B-fallback lesson, `EventPattern.greedyMatchesOpt`). */
+    * zero-B-fallback lesson). */
   def genericMatches(evs: IndexedSeq[(Long, Int, Double)],
       stages: Seq[PStage], withinUs: Long): List[IndexedSeq[GStageRes]] =
     genericMatchesShape(evs, shapesOf(stages), withinUs)

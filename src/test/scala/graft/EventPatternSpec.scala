@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.EventPattern
-import graft.operators.EventPattern.PatternStage
+import graft.operators.{EventPattern, PatternCompiler}
+import graft.operators.PatternCompiler.{GStageRes, QOpt, QPlus, QStar}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,38 +13,52 @@ import org.scalatest.funsuite.AnyFunSuite
   * a naive single-anchor scan gets wrong), and streaming twin ≡ batch on
   * multi-batch out-of-order arrival. evt_pattern's oracle row covers the
   * declarative form end-to-end; this spec is where the SEMANTICS are
-  * chosen and frozen.
+  * chosen and frozen. Every case runs the engine's one pattern path —
+  * [[PatternCompiler.compile]], [[PatternCompiler.genericMatches]] and
+  * [[StreamOps.streamingPatternSpecTtl]] — read through the thin
+  * per-shape projections of [[PatternKit]].
   */
 class EventPatternSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = GraftSession.local("4")
   import spark.implicits._
+  import PatternKit._
 
   private def ts(sec: Long): java.sql.Timestamp =
     new java.sql.Timestamp(sec * 1000L)
   private def us(sec: Long): Long = sec * 1000000L
 
-  private val stages = Seq(
-    PatternStage("a", col("event_type") === "A"),
-    PatternStage("b", col("event_type") === "B"),
-    PatternStage("c", col("event_type") === "C"))
+  private val stages = abc(col("event_type") === "A",
+    col("event_type") === "B", col("event_type") === "C")
+
+  /** The generic greedy matcher's anchors over (ts, mask) rows. */
+  private def greedyAnchors(evs: IndexedSeq[(Long, Int)],
+      withinUs: Long): List[IndexedSeq[Long]] =
+    PatternCompiler.genericMatches(evs.map(e => (e._1, e._2, 0.0)), stages,
+      withinUs).map(_.map(_.anchor))
+
+  /** A memory-sink table of generic TTL emissions, per user and stage. */
+  private def finals(name: String): Seq[(Long, IndexedSeq[GStageRes])] =
+    specFinals(spark.table(name))
+
+  private val regStages = abc(viewP, click50P, purchaseP)
 
   private def ev(rows: (Long, String, Long)*): DataFrame =
     rows.map { case (u, t, sec) => (u, t, 1.0, ts(sec)) }
       .toDF("user_id", "event_type", "value", "ts")
 
-  // ------------------------------------------------ greedyMatches (pure)
+  // ------------------------------------------ generic greedy matcher (pure)
   test("greedy: leftmost match, then skip past last row (non-overlapping)") {
     // A@0 B@10 C@20 A@5 B@25 C@30, within 30s: leftmost match (0,10,20);
     // resume AFTER row C@20 — A@5 is consumed/skipped, so no second match
     // even though (5,25,30) completes in isolation
     val evs = IndexedSeq((us(0), 1), (us(5), 1), (us(10), 2),
       (us(20), 4), (us(25), 2), (us(30), 4))
-    assert(EventPattern.greedyMatches(evs, 3, us(30)) ==
+    assert(greedyAnchors(evs, us(30)) ==
       List(IndexedSeq(us(0), us(10), us(20))))
     // two disjoint full sequences -> two matches
     val evs2 = IndexedSeq((us(0), 1), (us(1), 2), (us(2), 4),
       (us(100), 1), (us(101), 2), (us(102), 4))
-    assert(EventPattern.greedyMatches(evs2, 3, us(30)) ==
+    assert(greedyAnchors(evs2, us(30)) ==
       List(IndexedSeq(us(0), us(1), us(2)),
         IndexedSeq(us(100), us(101), us(102))))
   }
@@ -54,7 +68,7 @@ class EventPatternSpec extends AnyFunSuite {
     // ((4,12,14] all within (4, 14]) — a single-anchor scan that only
     // resets on window expiry would sit on A@0 and miss the match
     val evs = IndexedSeq((us(0), 1), (us(4), 1), (us(12), 2), (us(14), 4))
-    assert(EventPattern.greedyMatches(evs, 3, us(10)) ==
+    assert(greedyAnchors(evs, us(10)) ==
       List(IndexedSeq(us(4), us(12), us(14))))
   }
 
@@ -62,24 +76,24 @@ class EventPatternSpec extends AnyFunSuite {
     // row at t=5 qualifies for BOTH b and c (mask 6): after anchoring b
     // there, c requires ts STRICTLY greater, so a same-instant c is inert
     val noC = IndexedSeq((us(0), 1), (us(5), 6))
-    assert(EventPattern.greedyMatches(noC, 3, us(30)).isEmpty)
+    assert(greedyAnchors(noC, us(30)).isEmpty)
     val laterC = IndexedSeq((us(0), 1), (us(5), 6), (us(6), 4))
-    assert(EventPattern.greedyMatches(laterC, 3, us(30)) ==
+    assert(greedyAnchors(laterC, us(30)) ==
       List(IndexedSeq(us(0), us(5), us(6))))
   }
 
   test("greedy: WITHIN is inclusive of t1 + within, exclusive past it") {
     val atBound = IndexedSeq((us(0), 1), (us(10), 2), (us(30), 4))
-    assert(EventPattern.greedyMatches(atBound, 3, us(30)).nonEmpty)
+    assert(greedyAnchors(atBound, us(30)).nonEmpty)
     val pastBound = IndexedSeq((us(0), 1), (us(10), 2), (us(30) + 1, 4))
-    assert(EventPattern.greedyMatches(pastBound, 3, us(30)).isEmpty)
+    assert(greedyAnchors(pastBound, us(30)).isEmpty)
   }
 
-  // ------------------------------------- matchPattern (skip to next row)
+  // ----------------------------------- compiled form (skip to next row)
   test("skip-to-next-row: one match per qualifying start, overlaps allowed") {
     val df = ev((1L, "A", 0), (1L, "A", 5), (1L, "B", 10), (1L, "C", 20),
       (2L, "A", 0), (2L, "C", 5)) // user 2: no B -> no match
-    val got = EventPattern.matchPattern(df, stages, us(30)).collect()
+    val got = PatternCompiler.compile(df, stages, us(30)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == Seq(
       (1L, us(0), us(10), us(20)),
@@ -91,7 +105,7 @@ class EventPatternSpec extends AnyFunSuite {
     // C@20 qualifies. A LATER B (@22) would leave no room for any C, so
     // min-agg anchoring is what makes the match exist.
     val df = ev((1L, "A", 0), (1L, "B", 10), (1L, "B", 22), (1L, "C", 20))
-    val got = EventPattern.matchPattern(df, stages, us(25)).collect()
+    val got = PatternCompiler.compile(df, stages, us(25)).collect()
     assert(got.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq ==
       Seq((us(0), us(10), us(20))))
   }
@@ -101,7 +115,7 @@ class EventPatternSpec extends AnyFunSuite {
     // window inside band 1 (its own band 0's successor) — the two-band
     // probe must find B@31 and C@58
     val df = ev((1L, "A", 29), (1L, "B", 31), (1L, "C", 58))
-    val got = EventPattern.matchPattern(df, stages, us(30)).collect()
+    val got = PatternCompiler.compile(df, stages, us(30)).collect()
     assert(got.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq ==
       Seq((us(29), us(31), us(58))))
   }
@@ -110,18 +124,13 @@ class EventPatternSpec extends AnyFunSuite {
   test("first greedy match per user == earliest skip-to-next-row match") {
     val dir = "/root/testdata/sf0.01"
     val events = Tables.load(spark, dir, "events")
-    val regStages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     val w = 24L * 3600 * 1000000L
-    val nextRow = EventPattern.matchPattern(events, regStages, w).collect()
+    val nextRow = PatternCompiler.compile(events, regStages, w).collect()
       .groupBy(_.getLong(0)).view
       .mapValues(_.map(r => Seq(r.getLong(1), r.getLong(2), r.getLong(3)))
         .minBy(_.head)).toMap
-    val greedy = EventPattern.matchPatternGreedy(events, regStages, w)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
+    val greedy = greedyBatch(events, regStages, w)
+      .map { case (u, m) => (u, anchors(m)) }
       .groupBy(_._1).view.mapValues(_.map(_._2).minBy(_.head)).toMap
     assert(greedy.keySet == nextRow.keySet,
       "the two modes must agree on WHICH users match")
@@ -137,11 +146,6 @@ class EventPatternSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val regStages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     val w = 48L * 3600 * 1000000L
     val horizon = 2L * 3600 * 1000000L
     val rows = Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
@@ -160,7 +164,7 @@ class EventPatternSpec extends AnyFunSuite {
     }
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternTtl(df, regStages, w, horizon).toDF()
+    val q = StreamOps.streamingPatternSpecTtl(df, regStages, w, horizon).toDF()
       .writeStream.outputMode("update").format("memory")
       .queryName("pat_ttl_out").start()
     try {
@@ -171,11 +175,9 @@ class EventPatternSpec extends AnyFunSuite {
     } finally q.stop()
     def canonAll(xs: Seq[(Long, Seq[Long])]): Seq[String] =
       xs.map { case (u, m) => u + ":" + m.mkString(",") }.sorted
-    val streamed = spark.table("pat_ttl_out").collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq
-    val batch = EventPattern.matchPatternGreedy(
-        Tables.load(spark, dir, "events"), regStages, w)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq
+    val streamed = finals("pat_ttl_out").map { case (u, m) => (u, anchors(m)) }
+    val batch = greedyBatch(Tables.load(spark, dir, "events"), regStages, w)
+      .map { case (u, m) => (u, anchors(m)) }
     assert(canonAll(streamed) == canonAll(batch),
       "fence-closed TTL finals must equal the batch greedy match list")
     assert(streamed.nonEmpty)
@@ -191,7 +193,7 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternTtl(df, stages, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, stages, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_ttl_hand").start()
     try {
@@ -233,8 +235,10 @@ class EventPatternSpec extends AnyFunSuite {
   private val bP = col("event_type") === "B"
   private val cP = col("event_type") === "C"
 
+  private val plusStages = abc(aP, bP, cP, QPlus)
+
   private def plusRows(df: DataFrame, w: Long) =
-    EventPattern.matchPatternPlus(df, aP, bP, cP, w).collect()
+    PatternCompiler.compile(df, plusStages, w).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5), r.getLong(6))).toSeq
 
@@ -247,7 +251,7 @@ class EventPatternSpec extends AnyFunSuite {
     // the pure greedy matcher agrees, and resumes past t3 (no 2nd match)
     val evs = IndexedSeq((us(0), 1, 0.0), (us(10), 2, 5.0), (us(20), 2, 7.0),
       (us(25), 2, 9.0), (us(30), 4, 0.0), (us(40), 2, 1.0), (us(50), 4, 0.0))
-    assert(EventPattern.greedyMatchesPlus(evs, us(60)) ==
+    assert(PatternCompiler.genericMatches(evs, plusStages, us(60)).map(plusOf) ==
       List((us(0), us(10), 3L, 21.0, us(25), us(30))))
   }
 
@@ -282,22 +286,12 @@ class EventPatternSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5), r.getLong(6))))
       .groupBy(_._1).view.mapValues(_.map(_._2).minBy(_._1)).toMap
-    val regStages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
-    val byUser = events.filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(regStages).as("mask"), col("value"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int, Double)].collect()
-      .groupBy(_._1)
-    val greedy = byUser.flatMap { case (u, rows) =>
-      EventPattern.greedyMatchesPlus(
-        rows.map(r => (r._2, r._3, r._4)).toIndexedSeq.sorted, w)
-        .headOption.map(u -> _)
-    }.toMap
+    val greedy = maskedRows(events, abc(viewP, click50P, purchaseP, QPlus))
+      .flatMap { case (u, evs) =>
+        PatternCompiler.genericMatches(evs,
+            abc(viewP, click50P, purchaseP, QPlus), w)
+          .headOption.map(m => u -> plusOf(m))
+      }
     assert(greedy.keySet == decl.keySet,
       "the two modes must agree on WHICH users match")
     greedy.foreach { case (u, m) =>
@@ -320,7 +314,7 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternTtl(df, stages, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, stages, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_ttl_tie").start()
     val allRows = Seq(
@@ -353,8 +347,8 @@ class EventPatternSpec extends AnyFunSuite {
     // and the batch greedy form agrees on the same event multiset
     val batchDf = allRows.map { case (u, tt, id, ty, v) => (u, ty, v, tt) }
       .toDF("user_id", "event_type", "value", "ts")
-    val batch = EventPattern.matchPatternGreedy(batchDf, stages, w)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
+    val batch = greedyBatch(batchDf, stages, w)
+      .map { case (u, m) => (u, anchors(m)) }
     assert(batch.toSeq == out.toSeq,
       "streaming tie semantics must equal batch greedy")
   }
@@ -366,7 +360,7 @@ class EventPatternSpec extends AnyFunSuite {
   private val dP = col("event_type") === "D"
 
   private def altRows(df: DataFrame, w: Long) =
-    EventPattern.matchPatternAlt(df, aP, altBranches, dP, w).collect()
+    PatternCompiler.compile(df, altStages(aP, altBranches, dP), w).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
         r.getLong(4))).toSeq
 
@@ -387,7 +381,9 @@ class EventPatternSpec extends AnyFunSuite {
     assert(altRows(tied, us(60)) == Seq((1L, us(0), us(10), "b", us(20))))
     // and the pure greedy twin agrees on the tie (mask: A=1, b=2, c=4, D=8)
     val evs = IndexedSeq((us(0), 1), (us(10), 2), (us(10), 4), (us(20), 8))
-    assert(EventPattern.greedyMatchesAlt(evs, 2, us(60)) ==
+    assert(PatternCompiler.genericMatches(evs.map(e => (e._1, e._2, 0.0)),
+        altStages(aP, altBranches, dP), us(60))
+      .map(m => (m(0).anchor, m(1).anchor, m(1).bi, m(2).anchor)) ==
       List((us(0), us(10), 0, us(20))))
   }
 
@@ -407,25 +403,13 @@ class EventPatternSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(3),
         r.getLong(4))))
       .groupBy(_._1).view.mapValues(_.map(_._2).minBy(_._1)).toMap
-    // greedy twin input: bit0 = view, bit1 = click50, bit2 = error, bit3 =
-    // purchase — the registry alternation's mask layout
-    val regStages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("error", col("event_type") === "error"),
-      PatternStage("purchase", col("event_type") === "purchase"))
-    val byUser = Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(regStages).as("mask"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int)].collect().groupBy(_._1)
-    val names = Seq("click50", "error")
-    val greedy = byUser.flatMap { case (u, rows) =>
-      EventPattern.greedyMatchesAlt(
-        rows.map(r => (r._2, r._3)).toIndexedSeq.distinct.sorted, 2, w)
-        .headOption.map { case (t1, t2, bi, t3) => u -> (t1, t2, names(bi), t3) }
-    }.toMap
+    val alts = Seq("click50" -> click50P, "error" -> errorP)
+    val altS = altStages(viewP, alts, purchaseP)
+    val greedy = maskedRows(Tables.load(spark, dir, "events"), altS)
+      .flatMap { case (u, evs) =>
+        PatternCompiler.genericMatches(evs, altS, w).headOption
+          .map(m => u -> altOf(m, alts.map(_._1)))
+      }
     assert(greedy.keySet == decl.keySet,
       "the two modes must agree on WHICH users match")
     greedy.foreach { case (u, m) =>
@@ -435,7 +419,8 @@ class EventPatternSpec extends AnyFunSuite {
   }
 
   private def optRows(df: DataFrame, w: Long) =
-    EventPattern.matchPatternOpt(df, aP, bP, cP, w).collect()
+    PatternCompiler.compile(df, abc(aP, bP, cP, QOpt), w)
+      .select("user_id", "s1_ts", "s2_taken", "s2_ts", "s3_ts").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4))).toSeq
 
@@ -460,7 +445,9 @@ class EventPatternSpec extends AnyFunSuite {
   }
 
   private def starRows(df: DataFrame, w: Long) =
-    EventPattern.matchPatternStar(df, aP, bP, cP, w).collect()
+    PatternCompiler.compile(df, abc(aP, bP, cP, QStar), w)
+      .select("user_id", "s1_ts", "s2_count", "s2_sum", "s2_last", "s3_ts")
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5))).toSeq
 
@@ -534,7 +521,8 @@ class EventPatternSpec extends AnyFunSuite {
     }
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternAltTtl(df, aPg, branches, dPg, w, horizon)
+    val altS = altStages(aPg, branches, dPg)
+    val q = StreamOps.streamingPatternSpecTtl(df, altS, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_alt_ttl_out").start()
     try {
@@ -543,22 +531,15 @@ class EventPatternSpec extends AnyFunSuite {
       }
       mem.addData(fences.toIndexedSeq: _*); q.processAllAvailable()
     } finally q.stop()
-    val streamed = spark.table("pat_alt_ttl_out").collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(3),
-        r.getLong(4)))).toSeq
-    // batch reference: the SAME pure matcher over per-user collected rows
-    val regStages = Seq(PatternStage("a", aPg)) ++
-      branches.map { case (nm, p) => PatternStage(nm, p) } :+
-      PatternStage("d", dPg)
     val names = branches.map(_._1)
-    val batch = Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(regStages).as("mask"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int)].collect()
-      .groupBy(_._1).toSeq.flatMap { case (u, rs) =>
-        EventPattern.greedyMatchesAlt(
-          rs.map(r => (r._2, r._3)).toIndexedSeq.distinct.sorted, 2, w)
+    val streamed = finals("pat_alt_ttl_out")
+      .map { case (u, m) => (u, altOf(m, names)) }
+    // batch reference: the hand-written alternation matcher over per-user
+    // collected rows
+    val batch = maskedRows(Tables.load(spark, dir, "events"), altS)
+      .toSeq.flatMap { case (u, rs) =>
+        GreedyReference.greedyMatchesAlt(
+          rs.map(r => (r._1, r._2)).distinct, 2, w)
           .map { case (t1, t2, bi, t3) => (u, (t1, t2, names(bi), t3)) }
       }
     def canonA(xs: Seq[(Long, (Long, Long, String, Long))]) =
@@ -579,7 +560,8 @@ class EventPatternSpec extends AnyFunSuite {
       "c" -> (col("event_type") === "C"))
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternAltTtl(df, aP, branches, dP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df,
+        altStages(aP, branches, dP), w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_alt_ttl_hand").start()
     try {
@@ -603,9 +585,10 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 6L, "A", 0.0)) // fence
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_alt_ttl_hand").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3),
-        r.getLong(4)))
+    val out = finals("pat_alt_ttl_hand").map { case (u, m) =>
+      val (t1, t2, via, t3) = altOf(m, branches.map(_._1))
+      (u, t1, t2, via, t3)
+    }
     def us2(s: String) = t(s).getTime * 1000L
     assert(out.toSeq == Seq((1L, us2("2024-01-01 12:00:00"),
       us2("2024-01-01 12:20:00"), "c", us2("2024-01-01 12:45:00"))),
@@ -636,7 +619,8 @@ class EventPatternSpec extends AnyFunSuite {
     }
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternPlusTtl(df, aPg, bPg, cPg, w, horizon)
+    val plusS = abc(aPg, bPg, cPg, QPlus)
+    val q = StreamOps.streamingPatternSpecTtl(df, plusS, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_plus_ttl_out").start()
     try {
@@ -647,21 +631,13 @@ class EventPatternSpec extends AnyFunSuite {
     } finally q.stop()
     def canonAll(xs: Seq[(Long, (Long, Long, Long, Double, Long, Long))]) =
       xs.map { case (u, m) => s"$u:$m" }.sorted
-    val streamed = spark.table("pat_plus_ttl_out").collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getLong(5), r.getLong(6)))).toSeq
-    // batch reference: the SAME pure matcher over per-user collected rows
-    val regStages = Seq(PatternStage("a", aPg), PatternStage("b", bPg),
-      PatternStage("c", cPg))
-    val batch = Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(regStages).as("mask"), col("value"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int, Double)].collect()
-      .groupBy(_._1).toSeq.flatMap { case (u, rs) =>
-        EventPattern.greedyMatchesPlus(
-          rs.map(r => (r._2, r._3, r._4)).toIndexedSeq.distinct.sorted, w)
-          .map(u -> _)
+    val streamed = finals("pat_plus_ttl_out")
+      .map { case (u, m) => (u, plusOf(m)) }
+    // batch reference: the hand-written quantified matcher over per-user
+    // collected rows
+    val batch = maskedRows(Tables.load(spark, dir, "events"), plusS)
+      .toSeq.flatMap { case (u, rs) =>
+        GreedyReference.greedyMatchesPlus(rs, w).map(u -> _)
       }
     assert(canonAll(streamed) == canonAll(batch),
       "fence-closed plus-TTL finals must equal batch greedyMatchesPlus")
@@ -677,7 +653,7 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternPlusTtl(df, aP, bP, cP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, plusStages, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_plus_ttl_hand").start()
     try {
@@ -703,9 +679,10 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 6L, "A", 0.0))
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_plus_ttl_hand").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getLong(5), r.getLong(6)))
+    val out = finals("pat_plus_ttl_hand").map { case (u, m) =>
+      val (t1, b1, n, sum, last, t3) = plusOf(m)
+      (u, t1, b1, n, sum, last, t3)
+    }
     def us2(s: String) = t(s).getTime * 1000L
     assert(out.toSeq == Seq((1L, us2("2024-01-01 12:00:00"),
       us2("2024-01-01 12:10:00"), 2L, 6.0, us2("2024-01-01 12:30:00"),
@@ -724,7 +701,7 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternPlusTtl(df, aP, bP, cP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, plusStages, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_plus_ttl_tie").start()
     try {
@@ -750,9 +727,10 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 6L, "A", 0.0)) // fence
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_plus_ttl_tie").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getLong(5), r.getLong(6)))
+    val out = finals("pat_plus_ttl_tie").map { case (u, m) =>
+      val (t1, b1, n, sum, last, t3) = plusOf(m)
+      (u, t1, b1, n, sum, last, t3)
+    }
     def us2(s: String) = t(s).getTime * 1000L
     assert(out.toSeq == Seq((1L, us2("2024-01-01 12:00:00"),
       us2("2024-01-01 12:30:00"), 1L, 4.0, us2("2024-01-01 12:30:00"),
@@ -793,25 +771,22 @@ class EventPatternSpec extends AnyFunSuite {
         mem.addData(fences.toIndexedSeq: _*); q.processAllAvailable()
       } finally q.stop()
     }
+    val optS = abc(aPg, bPg, cPg, QOpt)
+    val starS = abc(aPg, bPg, cPg, QStar)
     drive("pat_opt_ttl_out",
-      d => StreamOps.streamingPatternOptTtl(d, aPg, bPg, cPg, w, horizon))
+      d => StreamOps.streamingPatternSpecTtl(d, optS, w, horizon))
     drive("pat_star_ttl_out",
-      d => StreamOps.streamingPatternStarTtl(d, aPg, bPg, cPg, w, horizon))
-    val regStages = Seq(PatternStage("a", aPg), PatternStage("b", bPg),
-      PatternStage("c", cPg))
-    val byUser = Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(regStages).as("mask"), col("value"))
-      .filter(col("mask") =!= 0)
-      .as[(Long, Long, Int, Double)].collect().groupBy(_._1)
+      d => StreamOps.streamingPatternSpecTtl(d, starS, w, horizon))
+    // opt and star share the mask layout (A=1, B=2, C=4)
+    val byUser = maskedRows(Tables.load(spark, dir, "events"), optS)
     def canonS(xs: Seq[String]): Seq[String] = xs.sorted
     // opt
-    val streamedOpt = spark.table("pat_opt_ttl_out").collect()
-      .map(r => s"${r.getLong(0)}:${r.getLong(1)},${r.getInt(2)}," +
-        s"${if (r.isNullAt(3)) -1L else r.getLong(3)},${r.getLong(4)}").toSeq
+    val streamedOpt = finals("pat_opt_ttl_out").map { case (u, m) =>
+      val (t1, b1, t3) = optOf(m)
+      s"$u:$t1,${if (b1.isDefined) 1 else 0},${b1.getOrElse(-1L)},$t3"
+    }
     val batchOpt = byUser.toSeq.flatMap { case (u, rs) =>
-      EventPattern.greedyMatchesOpt(
-        rs.map(r => (r._2, r._3)).toIndexedSeq.distinct.sorted, w)
+      GreedyReference.greedyMatchesOpt(rs.map(r => (r._1, r._2)).distinct, w)
         .map { case (t1, b1, t3) =>
           s"$u:$t1,${if (b1.isDefined) 1 else 0},${b1.getOrElse(-1L)},$t3" }
     }
@@ -819,13 +794,12 @@ class EventPatternSpec extends AnyFunSuite {
       "fence-closed opt-TTL finals must equal batch greedyMatchesOpt")
     assert(streamedOpt.nonEmpty)
     // star
-    val streamedStar = spark.table("pat_star_ttl_out").collect()
-      .map(r => s"${r.getLong(0)}:${r.getLong(1)},${r.getLong(2)}," +
-        s"${r.getDouble(3)},${if (r.isNullAt(4)) -1L else r.getLong(4)}," +
-        s"${r.getLong(5)}").toSeq
+    val streamedStar = finals("pat_star_ttl_out").map { case (u, m) =>
+      val (t1, n, s2, last, t3) = starOf(m)
+      s"$u:$t1,$n,$s2,${last.getOrElse(-1L)},$t3"
+    }
     val batchStar = byUser.toSeq.flatMap { case (u, rs) =>
-      EventPattern.greedyMatchesStar(
-        rs.map(r => (r._2, r._3, r._4)).toIndexedSeq.distinct.sorted, w)
+      GreedyReference.greedyMatchesStar(rs, w)
         .map { case (t1, n, s2, last, t3) =>
           s"$u:$t1,$n,$s2,${last.getOrElse(-1L)},$t3" }
     }
@@ -850,7 +824,8 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternOptTtl(df, aP, bP, cP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, abc(aP, bP, cP, QOpt), w,
+        horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_opt_ttl_hand").start()
     try {
@@ -873,9 +848,10 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 5L, "A", 0.0)) // fence
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_opt_ttl_hand").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4)))
+    val out = finals("pat_opt_ttl_hand").map { case (u, m) =>
+      val (t1, b1, t3) = optOf(m)
+      (u, t1, if (b1.isDefined) 1 else 0, b1.getOrElse(-1L), t3)
+    }
     def us2(s: String) = t(s).getTime * 1000L
     assert(out.toSeq == Seq((1L, us2("2024-01-01 12:00:00"), 1,
       us2("2024-01-01 12:20:00"), us2("2024-01-01 12:40:00"))),
@@ -890,7 +866,8 @@ class EventPatternSpec extends AnyFunSuite {
     val horizon = 2L * 3600 * 1000000L
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternStarTtl(df, aP, bP, cP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, abc(aP, bP, cP, QStar), w,
+        horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_star_ttl_hand").start()
     try {
@@ -905,9 +882,10 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 5L, "A", 0.0)) // fence
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_star_ttl_hand").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
-        if (r.isNullAt(4)) -1L else r.getLong(4), r.getLong(5)))
+    val out = finals("pat_star_ttl_hand").map { case (u, m) =>
+      val (t1, n, sum, last, t3) = starOf(m)
+      (u, t1, n, sum, last.getOrElse(-1L), t3)
+    }
     def us2(s: String) = t(s).getTime * 1000L
     assert(out.toSeq == Seq((1L, us2("2024-01-01 12:00:00"), 0L, 0.0, -1L,
       us2("2024-01-01 12:10:00"))),
@@ -935,7 +913,7 @@ class EventPatternSpec extends AnyFunSuite {
       (1L, "C", 0.0, t("2024-01-01 12:20:00")))
       .toDF("user_id", "event_type", "value", "ts")
     // declarative: every source row is a run member -> count 2, sum 14
-    val decl = EventPattern.matchPatternPlus(batchDf, aP, bP, cP, w).collect()
+    val decl = PatternCompiler.compile(batchDf, plusStages, w).collect()
     assert(decl.length == 1 &&
       (decl.head.getLong(3), decl.head.getDouble(4)) == (2L, 14.0),
       s"declarative must count both duplicate rows: ${decl.mkString}")
@@ -943,13 +921,13 @@ class EventPatternSpec extends AnyFunSuite {
     val evs = IndexedSeq((us2("2024-01-01 12:00:00"), 1, 0.0),
       (us2("2024-01-01 12:10:00"), 2, 7.0),
       (us2("2024-01-01 12:20:00"), 4, 0.0))
-    assert(EventPattern.greedyMatchesPlus(evs, w).map(m => (m._3, m._4)) ==
-      List((1L, 7.0)))
+    assert(PatternCompiler.genericMatches(evs, plusStages, w)
+      .map(m => (m(1).count, m(1).sum)) == List((1L, 7.0)))
     // TTL twin end-to-end: the two events carry DIFFERENT event_ids, so
     // the seen-set keeps both — the collapse happens at the state tuple
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = StreamOps.streamingPatternPlusTtl(df, aP, bP, cP, w, horizon)
+    val q = StreamOps.streamingPatternSpecTtl(df, plusStages, w, horizon)
       .toDF().writeStream.outputMode("update").format("memory")
       .queryName("pat_dup_conv").start()
     try {
@@ -961,8 +939,7 @@ class EventPatternSpec extends AnyFunSuite {
       mem.addData((1L, t("2024-01-02 12:00:00"), 5L, "A", 0.0)) // fence
       q.processAllAvailable()
     } finally q.stop()
-    val out = spark.table("pat_dup_conv").collect()
-      .map(r => (r.getLong(3), r.getDouble(4)))
+    val out = finals("pat_dup_conv").map { case (_, m) => (m(1).count, m(1).sum) }
     assert(out.toSeq == Seq((1L, 7.0)),
       s"TTL family must collapse the duplicate: ${out.mkString("; ")}")
   }
@@ -972,21 +949,20 @@ class EventPatternSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val regStages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     val w = 48L * 3600 * 1000000L // wider window: sf0.001 is sparse
+    // a horizon wider than the corpus's 30-day span: no arrival order
+    // makes a row late, so the fence-closed finals are the whole answer
+    val horizon = 31L * 24 * 3600 * 1000000L
     val rows = Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("event_type"), col("value"), col("ts"))
-      .as[(Long, String, Double, java.sql.Timestamp)].collect()
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
+        col("value"))
+      .as[EvRow].collect()
     // out-of-order thirds (shuffled deterministically), plus a replayed
     // batch — at-least-once re-delivery must be a no-op
     val shuffled = new scala.util.Random(20260816L).shuffle(rows.toSeq)
-    val mem = MemoryStream[(Long, String, Double, java.sql.Timestamp)]
-    val df = mem.toDF.toDF("user_id", "event_type", "value", "ts")
-    val q = StreamOps.streamingPattern(df, regStages, w)
+    val mem = MemoryStream[EvRow]
+    val df = mem.toDF.toDF("user_id", "ts", "event_id", "event_type", "value")
+    val q = StreamOps.streamingPatternSpecTtl(df, regStages, w, horizon)
       .writeStream.outputMode("update").format("memory")
       .queryName("pat_out").start()
     try {
@@ -994,22 +970,17 @@ class EventPatternSpec extends AnyFunSuite {
         mem.addData(b); q.processAllAvailable()
       }
       mem.addData(shuffled.take(500)); q.processAllAvailable() // replay
+      mem.addData(fences(rows.filter(_._2 != null).toSeq, horizon, w))
+      q.processAllAvailable()
     } finally q.stop()
-    // latest snapshot per user
-    val snaps = spark.table("pat_out")
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))
-          .orderBy(monotonically_increasing_id().desc)))
-      .filter(col("rn") === 1).drop("rn")
-      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[Long]](1))
-      .toMap.filter(_._2.nonEmpty)
     def canonM(ms: Iterable[Seq[Long]]): Seq[String] =
       ms.map(_.mkString(",")).toSeq.sorted
-    val batch = EventPattern.matchPatternGreedy(
-        Tables.load(spark, dir, "events"), regStages, w)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-      .groupBy(_._1).view.mapValues(v => canonM(v.map(_._2.toSeq))).toMap
-    val streamed = snaps.view.mapValues(v => canonM(v.map(_.toSeq))).toMap
+    def byUser(ms: Seq[(Long, IndexedSeq[GStageRes])]): Map[Long, Seq[String]] =
+      ms.groupBy(_._1).view.mapValues(v => canonM(v.map(m => anchors(m._2))))
+        .toMap
+    val batch = byUser(greedyBatch(Tables.load(spark, dir, "events"),
+      regStages, w))
+    val streamed = byUser(finals("pat_out"))
     assert(streamed == batch,
       "streaming snapshots must equal the batch greedy matches")
     assert(batch.nonEmpty, "corpus should produce at least one match")

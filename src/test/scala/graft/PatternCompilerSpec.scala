@@ -2,20 +2,19 @@ package graft
 
 import graft.operators.{EventPattern, PatternCompiler}
 import graft.operators.PatternCompiler.{PStage, QOpt, QPlus, QStar}
-import graft.operators.EventPattern.PatternStage
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pattern COMPILER's contract (r18 verdict #1): one stage-sequence
-  * AST must re-derive all five bespoke, hash-pinned pattern forms —
-  * unchanged rows, hence unchanged oracle hashes — and open composition
-  * (`A (B|C)+ D`, `A B+ C? D`) that the bespoke family could not
-  * express. Equality is pinned three ways: compiled ≡ bespoke
-  * DataFrames on the gate corpus, genericMatches ≡ each bespoke pure
-  * matcher (full per-user match lists), and the generic TTL twin's
-  * fence-closed finals ≡ the generic matcher run in batch.
+  * AST must derive every hash-pinned registry pattern — the rows their
+  * oracle SQL produces — and open composition (`A (B|C)+ D`,
+  * `A B+ C? D`). Equality is pinned three ways: registry DataFrames ≡
+  * their oracle SQL run on Spark over the gate corpus, genericMatches ≡
+  * each hand-written per-shape greedy matcher ([[GreedyReference]], full
+  * per-user match lists), and the generic TTL twin's fence-closed
+  * finals ≡ the generic matcher run in batch.
   */
 class PatternCompilerSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = GraftSession.local("4")
@@ -31,27 +30,21 @@ class PatternCompilerSpec extends AnyFunSuite {
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
-  // --------------------- compiled ≡ bespoke (the hash-unchanged warrant)
-  test("compiled == bespoke: all five hash-pinned forms (gate corpus)") {
-    val pairs: Seq[(String, DataFrame, DataFrame)] = Seq(
-      ("evt_pattern", EventPattern.evtPattern(spark, dir),
-        EventPattern.evtPatternCompiled(spark, dir)),
-      ("evt_pattern_plus", EventPattern.evtPatternPlus(spark, dir),
-        EventPattern.evtPatternPlusCompiled(spark, dir)),
-      ("evt_pattern_alt", EventPattern.evtPatternAlt(spark, dir),
-        EventPattern.evtPatternAltCompiled(spark, dir)),
-      ("evt_pattern_opt", EventPattern.evtPatternOpt(spark, dir),
-        EventPattern.evtPatternOptCompiled(spark, dir)),
-      ("evt_pattern_star", EventPattern.evtPatternStar(spark, dir),
-        EventPattern.evtPatternStarCompiled(spark, dir)))
-    pairs.foreach { case (name, bespoke, compiled) =>
-      assert(bespoke.columns.toSeq == compiled.columns.toSeq,
-        s"$name: compiled schema diverged")
-      val b = canon(bespoke)
+  // ------------------- compiled ≡ oracle SQL (the hash-unchanged warrant)
+  test("compiled == oracle SQL on Spark: all six hash-pinned forms (gate corpus)") {
+    // the oracle strings are DuckDB SQL; epoch_us is the one function
+    // Spark spells differently (unix_micros)
+    Tables.load(spark, dir, "events").createOrReplaceTempView("events")
+    try EventPattern.all.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val compiled = fn(spark, dir)
+      val oracle = spark.sql(
+        EventPattern.oracles(name).replace("epoch_us(", "unix_micros("))
+      assert(oracle.columns.toSeq == compiled.columns.toSeq,
+        s"$name: compiled schema diverged from the oracle")
       val c = canon(compiled)
-      assert(b == c, s"$name: compiled rows diverged from bespoke")
-      assert(b.nonEmpty, s"$name: gate corpus should produce matches")
-    }
+      assert(canon(oracle) == c, s"$name: compiled rows diverged from the oracle")
+      assert(c.nonEmpty, s"$name: gate corpus should produce matches")
+    } finally spark.catalog.dropTempView("events")
   }
 
   // ------------------------------------------ composed-form hand cases
@@ -155,12 +148,12 @@ class PatternCompilerSpec extends AnyFunSuite {
       List((us(0), Long.MinValue, us(5)), (us(8), us(12), us(14))))
   }
 
-  // ------------------- generic matcher ≡ the five bespoke pure matchers
-  private def gateRows(stagesB: Seq[PatternStage], withValue: Boolean)
+  // ------ generic matcher ≡ the five hand-written per-shape matchers
+  private def gateRows(stages: Seq[PStage], withValue: Boolean)
       : Map[Long, IndexedSeq[(Long, Int, Double)]] =
     Tables.load(spark, dir, "events").filter(col("ts").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(stagesB).as("mask"), col("value"))
+        PatternCompiler.specMask(stages).as("mask"), col("value"))
       .filter(col("mask") =!= 0)
       .as[(Long, Long, Int, Double)].collect().groupBy(_._1)
       .view.mapValues { rs =>
@@ -178,15 +171,13 @@ class PatternCompilerSpec extends AnyFunSuite {
 
   test("genericMatches == greedyMatches / Plus / Alt / Opt / Star (gate corpus)") {
     // fixed 3-stage
-    val fixedB = Seq(PatternStage("view", viewP),
-      PatternStage("click50", click50P), PatternStage("purchase", purchaseP))
     val fixedS = Seq(PStage.one("view", viewP),
       PStage.one("click50", click50P), PStage.one("purchase", purchaseP))
-    val rowsNoV = gateRows(fixedB, withValue = false)
-    val rowsV = gateRows(fixedB, withValue = true)
+    val rowsNoV = gateRows(fixedS, withValue = false)
+    val rowsV = gateRows(fixedS, withValue = true)
     var nonEmpty = 0
     rowsNoV.foreach { case (u, evs) =>
-      val legacy = EventPattern.greedyMatches(
+      val legacy = GreedyReference.greedyMatches(
         evs.map(e => (e._1, e._2)), 3, w24)
       val gen = PatternCompiler.genericMatches(evs, fixedS, w24)
         .map(_.map(_.anchor))
@@ -200,7 +191,7 @@ class PatternCompilerSpec extends AnyFunSuite {
       PStage(Seq("click50" -> click50P), QPlus),
       PStage.one("purchase", purchaseP))
     rowsV.foreach { case (u, evs) =>
-      val legacy = EventPattern.greedyMatchesPlus(evs, w24)
+      val legacy = GreedyReference.greedyMatchesPlus(evs, w24)
       val gen = PatternCompiler.genericMatches(evs, plusS, w24)
         .map(m => (m(0).anchor, m(1).anchor, m(1).count, m(1).sum,
           m(1).last, m(2).anchor))
@@ -215,14 +206,14 @@ class PatternCompilerSpec extends AnyFunSuite {
       PStage(Seq("click50" -> click50P), QStar),
       PStage.one("purchase", purchaseP))
     rowsV.foreach { case (u, evs) =>
-      val legacyO = EventPattern.greedyMatchesOpt(
+      val legacyO = GreedyReference.greedyMatchesOpt(
         evs.map(e => (e._1, e._2)), w24)
       val genO = PatternCompiler.genericMatches(evs, optS, w24)
         .map(m => (m(0).anchor,
           if (m(1).anchor == Long.MinValue) None else Some(m(1).anchor),
           m(2).anchor))
       assert(genO == legacyO, s"opt: user $u diverged")
-      val legacyS = EventPattern.greedyMatchesStar(evs, w24)
+      val legacyS = GreedyReference.greedyMatchesStar(evs, w24)
       val genS = PatternCompiler.genericMatches(evs, starS, w24)
         .map(m => (m(0).anchor, m(1).count, m(1).sum,
           if (m(1).last == Long.MinValue) None else Some(m(1).last),
@@ -231,14 +222,11 @@ class PatternCompilerSpec extends AnyFunSuite {
     }
 
     // alternation (bits: view=1, click50=2, error=4, purchase=8)
-    val altB = Seq(PatternStage("view", viewP),
-      PatternStage("click50", click50P), PatternStage("error", errorP),
-      PatternStage("purchase", purchaseP))
     val altS = Seq(PStage.one("view", viewP),
       PStage(Seq("click50" -> click50P, "error" -> errorP)),
       PStage.one("purchase", purchaseP))
-    gateRows(altB, withValue = false).foreach { case (u, evs) =>
-      val legacy = EventPattern.greedyMatchesAlt(
+    gateRows(altS, withValue = false).foreach { case (u, evs) =>
+      val legacy = GreedyReference.greedyMatchesAlt(
         evs.map(e => (e._1, e._2)), 2, w24)
       val gen = PatternCompiler.genericMatches(evs, altS, w24)
         .map(m => (m(0).anchor, m(1).anchor, m(1).bi, m(2).anchor))
@@ -254,11 +242,8 @@ class PatternCompilerSpec extends AnyFunSuite {
     val comboS = Seq(PStage.one("view", viewP),
       PStage(Seq("click50" -> click50P, "error" -> errorP), QPlus),
       PStage.one("purchase", purchaseP))
-    val maskB = Seq(PatternStage("view", viewP),
-      PatternStage("click50", click50P), PatternStage("error", errorP),
-      PatternStage("purchase", purchaseP))
     val names = IndexedSeq("click50", "error")
-    val greedy = gateRows(maskB, withValue = true).flatMap { case (u, evs) =>
+    val greedy = gateRows(comboS, withValue = true).flatMap { case (u, evs) =>
       PatternCompiler.genericMatches(evs, comboS, w24).headOption.map(m =>
         u -> (m(0).anchor, m(1).anchor, names(m(1).bi), m(1).count,
           m(1).sum, m(1).last, m(2).anchor))
@@ -306,12 +291,9 @@ class PatternCompilerSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), (r.getSeq[Long](1), r.getSeq[Int](2),
         r.getSeq[Long](3), r.getSeq[Double](4), r.getSeq[Long](5))))
       .toSeq
-    val maskB = Seq(PatternStage("view", viewP),
-      PatternStage("click50", click50P), PatternStage("error", errorP),
-      PatternStage("purchase", purchaseP))
     val batch = Tables.load(spark, sdir, "events").filter(col("ts").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        EventPattern.stageMask(maskB).as("mask"), col("value"))
+        PatternCompiler.specMask(comboS).as("mask"), col("value"))
       .filter(col("mask") =!= 0)
       .as[(Long, Long, Int, Double)].collect().groupBy(_._1)
       .toSeq.flatMap { case (u, rs) =>

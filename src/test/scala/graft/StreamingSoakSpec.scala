@@ -36,6 +36,13 @@ class StreamingSoakSpec extends AnyFunSuite {
   private val srcDir = sys.env.getOrElse("GRAFT_SOAK_SRC", "/root/testdata/sf0.1")
   private val factor = 30
   implicit lazy val spark: SparkSession = GraftSession.local()
+  import PatternKit._
+  import graft.operators.PatternCompiler.{QOpt, QPlus, QStar}
+
+  /** The registry pattern stages every pattern rung drives:
+    * view → (middle stage) → purchase. */
+  private val fixedStages = abc(viewP, click50P, purchaseP)
+  private val clickOrError = Seq("click50" -> click50P, "error" -> errorP)
 
   /** 60 half-day parquet files, written sequentially in event-time order
     * (clone rule = ScaleSmoke's events derivation: event_id AND user_id
@@ -252,16 +259,10 @@ class StreamingSoakSpec extends AnyFunSuite {
 
   test("skew soak: horizon-bounded pattern matcher under a 30% hot user") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    import graft.operators.EventPattern.PatternStage
-    val stages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     val ps = soak(
-      StreamOps.streamingPatternTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir, soakSchema),
-        stages, withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
+        fixedStages, withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_skew")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
     // hot-user state = qualifying rows in the horizon+W tail (~6h of one
@@ -279,17 +280,15 @@ class StreamingSoakSpec extends AnyFunSuite {
 
   test("skew soak: horizon-bounded QUANTIFIED pattern (B+ MEASURES) under a 30% hot user") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    // the r18 quantified twin rides the same replay discipline as the
-    // fixed-stage matcher; its extra surface is the per-match run
-    // aggregation, which the greedyMatchesPlus slice bound keeps O(n)
+    // the quantified stage rides the same replay discipline as the
+    // fixed-stage pattern; its extra surface is the per-match run
+    // aggregation, which the matcher's frame-bounded run scan keeps O(n)
     // per key per batch — state and wall must match the fixed-stage
     // rung's flatness
     val ps = soak(
-      StreamOps.streamingPatternPlusTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir, soakSchema),
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+        abc(viewP, click50P, purchaseP, QPlus),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_plus_skew")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
@@ -310,12 +309,9 @@ class StreamingSoakSpec extends AnyFunSuite {
     // value predicate, so ~20% of the hot user's stream qualifies for a
     // stage mask — the rung proves the horizon+W tail still bounds it
     val ps = soak(
-      StreamOps.streamingPatternAltTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir, soakSchema),
-        col("event_type") === "view",
-        Seq("click50" -> (col("event_type") === "click" && col("value") >= 50),
-          "error" -> (col("event_type") === "error")),
-        col("event_type") === "purchase",
+        altStages(viewP, clickOrError, purchaseP),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_alt_skew")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
@@ -337,11 +333,9 @@ class StreamingSoakSpec extends AnyFunSuite {
     // whole-completion backtracking per anchor — still O(tail) per key
     // per batch, so state and wall must hold the family's flatness
     val ps = soak(
-      StreamOps.streamingPatternOptTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir, soakSchema),
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+        abc(viewP, click50P, purchaseP, QOpt),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_opt_skew")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
@@ -363,11 +357,9 @@ class StreamingSoakSpec extends AnyFunSuite {
     // this rung is the one that would first expose an emission-volume
     // or state-tail regression
     val ps = soak(
-      StreamOps.streamingPatternStarTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir, soakSchema),
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+        abc(viewP, click50P, purchaseP, QStar),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_star_skew")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
@@ -509,14 +501,8 @@ class StreamingSoakSpec extends AnyFunSuite {
 
   test("soak: pattern-TTL kill-and-resume at p30-skew == uninterrupted") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    import graft.operators.EventPattern.PatternStage
-    val stages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternTtl(df, stages,
+      df => StreamOps.streamingPatternSpecTtl(df, fixedStages,
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_ttl")
   }
@@ -527,53 +513,44 @@ class StreamingSoakSpec extends AnyFunSuite {
     // and the run MEASURES to the emission — both must survive the
     // checkpoint round-trip byte-identically
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternPlusTtl(df,
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+      df => StreamOps.streamingPatternSpecTtl(df,
+        abc(viewP, click50P, purchaseP, QPlus),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_plus_ttl")
   }
 
   test("soak: alternation-pattern-TTL kill-and-resume at p30-skew == uninterrupted") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    // r18 verdict #4: the alt twin's emission carries a STRING (the
-    // winning branch name) through the encoder — provenance must survive
-    // the kill/restore byte-identically
+    // r18 verdict #4: the alternation emission carries the winning
+    // branch (provenance) through the encoder — it must survive the
+    // kill/restore byte-identically
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternAltTtl(df,
-        col("event_type") === "view",
-        Seq("click50" -> (col("event_type") === "click" &&
-          col("value") >= 50),
-          "error" -> (col("event_type") === "error")),
-        col("event_type") === "purchase",
+      df => StreamOps.streamingPatternSpecTtl(df,
+        altStages(viewP, clickOrError, purchaseP),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_alt_ttl")
   }
 
   test("soak: optional-pattern-TTL kill-and-resume at p30-skew == uninterrupted") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    // the opt twin's emission carries Option[Long] (b_us, NULL when the
-    // zero-B arm won) — the None/Some distinction must survive recovery,
-    // and a replayed batch must re-derive the same backtracking decision
+    // the optional stage's anchor is absent (the Long.MinValue sentinel)
+    // when the zero-B arm won — the taken/skipped distinction must survive
+    // recovery, and a replayed batch must re-derive the same
+    // backtracking decision
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternOptTtl(df,
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+      df => StreamOps.streamingPatternSpecTtl(df,
+        abc(viewP, click50P, purchaseP, QOpt),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_opt_ttl")
   }
 
   test("soak: star-pattern-TTL kill-and-resume at p30-skew == uninterrupted") {
     assume(soakOn, "set GRAFT_SOAK=1 to run the streaming soak")
-    // star combines the plus state class (Double values) with the
-    // Option[Long] empty-run emission — both cross the kill here
+    // star combines the run MEASURES (Double values) with the empty-run
+    // emission — both cross the kill here
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternStarTtl(df,
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+      df => StreamOps.streamingPatternSpecTtl(df,
+        abc(viewP, click50P, purchaseP, QStar),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_star_ttl")
   }
@@ -686,11 +663,9 @@ class StreamingSoakSpec extends AnyFunSuite {
   test("decade soak: quantified-pattern-TTL under a 3M-event hot user") {
     assume(decadeOn, "set GRAFT_SOAK_DECADE=1 to run the decade soak")
     val ps = soak(
-      StreamOps.streamingPatternPlusTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir100, soakSchema),
-        col("event_type") === "view",
-        col("event_type") === "click" && col("value") >= 50,
-        col("event_type") === "purchase",
+        abc(viewP, click50P, purchaseP, QPlus),
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_plus_skew100")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
@@ -707,16 +682,10 @@ class StreamingSoakSpec extends AnyFunSuite {
 
   test("decade soak: pattern-TTL under a 3M-event hot user") {
     assume(decadeOn, "set GRAFT_SOAK_DECADE=1 to run the decade soak")
-    import graft.operators.EventPattern.PatternStage
-    val stages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     val ps = soak(
-      StreamOps.streamingPatternTtl(
+      StreamOps.streamingPatternSpecTtl(
         StreamOps.readParquetStream(spark, skewSoakDir100, soakSchema),
-        stages, withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
+        fixedStages, withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "update", "soak_pat_skew100")
     assert(ps.length >= 50, s"expected >=50 data batches, got ${ps.length}")
     val bytes = ps.map(stateBytes)
@@ -745,14 +714,8 @@ class StreamingSoakSpec extends AnyFunSuite {
 
   test("decade soak: pattern-TTL kill-and-resume at p100-skew == uninterrupted") {
     assume(decadeOn, "set GRAFT_SOAK_DECADE=1 to run the decade soak")
-    import graft.operators.EventPattern.PatternStage
-    val stages = Seq(
-      PatternStage("view", col("event_type") === "view"),
-      PatternStage("click50",
-        col("event_type") === "click" && col("value") >= 50),
-      PatternStage("purchase", col("event_type") === "purchase"))
     ckptRecoveryRunUpdate(
-      df => StreamOps.streamingPatternTtl(df, stages,
+      df => StreamOps.streamingPatternSpecTtl(df, fixedStages,
         withinUs = 4L * 3600 * 1000000L)(spark).toDF(),
       "ckpt_pat_ttl_p100", Some(skewSoakDir100))
   }
