@@ -1379,8 +1379,13 @@ object TextQueries {
     * no backrefs.
     *
     * Scale: one map-side projection — four regexp_count + four
-    * regexp_replace per row, no shuffle at any corpus size. */
-  private val EmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+    * regexp_replace per row, no shuffle at any corpus size. The email
+    * parts are length-bounded at the RFC 5321 limits (64-char local
+    * part, 255-char domain): an unbounded `+` before the required `@`
+    * backtracks quadratically over a long run of characters with no
+    * `@`, the bounded repeat keeps the scan linear. */
+  private val EmailRe =
+    "[A-Za-z0-9._%+-]{1,64}@[A-Za-z0-9.-]{1,255}\\.[A-Za-z]{2,}"
   private val PhoneRe = "\\+[0-9]{1,3}-[0-9]{3}-[0-9]{3,4}"
   private val Ipv4Re =
     "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"

@@ -339,7 +339,7 @@ class CorpusMaintenanceSpec extends AnyFunSuite {
 
   // -------------------------------------------------------------- txt_pii
   test("txt_pii counts, flags, and redaction match a java.util.regex replay") {
-    val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+    val emailRe = "[A-Za-z0-9._%+-]{1,64}@[A-Za-z0-9.-]{1,255}\\.[A-Za-z]{2,}"
     val phoneRe = "\\+[0-9]{1,3}-[0-9]{3}-[0-9]{3,4}"
     val ipv4Re = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
     val idRunRe = "\\b[0-9]{9,}\\b"

@@ -108,11 +108,19 @@ class DegenerateContentSpec extends AnyFunSuite {
       "cut" -> (StreamOps.streamingSubstringCut(_, sketch)),
       "dsir" -> (StreamOps.streamingDsirScore(_, buckets)),
       "bpe" -> (StreamOps.streamingBpeApply(_, merges)))
+    // hostile input must cost linear time: a kernel that backtracks
+    // quadratically over the 100,000-char document takes minutes here
+    val wallBoundS = 60.0
     twins.foreach { case (tag, f) =>
+      val t0 = System.nanoTime()
       val streamed = runToCompletion(f(stream), "append", s"degen_${tag}_out")
       val batch = f(d)
       assert(canon(streamed) == canon(batch),
         s"$tag twin diverged from batch on hostile rows")
+      val wallS = (System.nanoTime() - t0) / 1e9
+      info(f"$tag twin: $wallS%.1f s streamed + batch")
+      assert(wallS <= wallBoundS,
+        f"$tag twin took $wallS%.1f s on hostile rows (bound $wallBoundS%.0f s)")
     }
   }
 
