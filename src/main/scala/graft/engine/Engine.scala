@@ -191,16 +191,25 @@ final class EngineSession(val spark: SparkSession) {
       case "datagen" =>
         specs.put(spec.name, spec) // materialized readStream per query
       case "filesystem" =>
-        val path = spec.options("path")
-        val fmt = spec.options.getOrElse("format", "parquet")
-        spark.read.format(fmt).schema(spec.schema).load(path)
-          .createOrReplaceTempView(spec.name)
+        loadFilesystem(spec).createOrReplaceTempView(spec.name)
         specs.put(spec.name, spec)
       case _ =>
         // kafka / cdc / jdbc: recorded for catalog parity; SELECT fails
         // with a clear message when the backing system is unreachable.
         specs.put(spec.name, spec)
     }
+  }
+
+  /** A filesystem table's batch view: the path's current contents, or an
+    * empty table of the declared schema while the path does not exist yet
+    * — a Flink filesystem sink table reads empty before its first write. */
+  private def loadFilesystem(spec: TableSpec): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(spec.options("path"))
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), spec.schema)
+    else spark.read.format(spec.options.getOrElse("format", "parquet"))
+      .schema(spec.schema).load(path.toString)
   }
 
   /** Relation identifiers the statement references — from the PARSED plan,
@@ -501,9 +510,7 @@ final class EngineSession(val spark: SparkSession) {
           case "jdbc" =>
             graft.sources.Jdbc.reader(spark, spec).createOrReplaceTempView(spec.name)
           case "filesystem" =>
-            spark.read.format(spec.options.getOrElse("format", "parquet"))
-              .schema(spec.schema).load(spec.options("path"))
-              .createOrReplaceTempView(spec.name)
+            loadFilesystem(spec).createOrReplaceTempView(spec.name)
           case c if c.endsWith("-cdc") =>
             // same validation as the streaming path — a missing key or
             // endpoint must fail with the SAME clear diagnostics, not a

@@ -608,6 +608,21 @@ class EngineSpec extends AnyFunSuite {
     session.executeSync("DROP TABLE fs_sink")
   }
 
+  test("filesystem connector: CREATE on a missing path reads empty until the first INSERT") {
+    val path = java.nio.file.Files.createTempDirectory("graft-fs-new").toString +
+      "/not_yet_written"
+    session.executeSync(
+      s"""CREATE TABLE fs_new (id INT, name STRING) WITH (
+         |'connector' = 'filesystem', 'path' = '$path', 'format' = 'parquet')""".stripMargin)
+    def count(): Any =
+      drain(session.executeSync("SELECT COUNT(*) FROM fs_new").handle).head.fields.head
+    assert(count() == 0L)
+    session.executeSync(
+      "INSERT INTO fs_new SELECT * FROM VALUES (1, 'a'), (2, 'b'), (3, 'c') AS t(id, name)")
+    assert(count() == 3L)
+    session.executeSync("DROP TABLE fs_new")
+  }
+
   // ------------------------------------------- statement sets + sessions
   test("EXECUTE STATEMENT SET runs contained inserts sequentially") {
     val path = java.nio.file.Files.createTempDirectory("graft-ss").toString
