@@ -2051,6 +2051,28 @@ object DedupOps {
       |  doc_id AS canonical_id, n_chars AS canonical_chars
       |FROM sized WHERE rn = 1 ORDER BY group_rep""".stripMargin
 
+  /** Driver union-find over Long node pairs (path halving), each
+    * component rooted at its MINIMUM node value. Returns node → root for
+    * every node named in `pairs`. Shared by [[connectedComponents]]' ≤cap
+    * finish and mm_dedup_groups' code graph. */
+  private[graft] def unionFindMin(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val nodes = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).distinct.toArray
+    val idx = nodes.zipWithIndex.toMap
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(idx(a)), find(idx(b)))
+      if (ra != rb) {
+        if (nodes(ra) <= nodes(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    nodes.indices.iterator.map(i => nodes(i) -> nodes(find(i))).toMap
+  }
+
   /** Min-label connected components over a SYMMETRIC (src, dst) edge frame.
     * Returns (doc_id, label) where label = min node id of the component,
     * for exactly the nodes that appear in an edge — the overwhelming
@@ -2133,25 +2155,9 @@ object DedupOps {
     val session = edges.sparkSession
     // driver union-find by MIN LABEL VALUE over a complete residual set
     // (the component contract): returns (from, to) renames, from != to
-    def unionFindMap(adj: Array[org.apache.spark.sql.Row]): Seq[(Long, Long)] = {
-      val nodes = adj.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      val idx = nodes.zipWithIndex.toMap
-      val parent = Array.tabulate(nodes.length)(identity)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-        r
-      }
-      adj.foreach { e =>
-        val (ra, rb) = (find(idx(e.getLong(0))), find(idx(e.getLong(1))))
-        if (ra != rb) {
-          if (nodes(ra) <= nodes(rb)) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      nodes.zipWithIndex.toSeq
-        .map { case (l, i) => (l, nodes(find(i))) }
-        .filter { case (l, root) => l != root }
-    }
+    def unionFindMap(adj: Array[org.apache.spark.sql.Row]): Seq[(Long, Long)] =
+      unionFindMin(adj.toSeq.map(r => (r.getLong(0), r.getLong(1))))
+        .toSeq.filter { case (l, root) => l != root }
     // r20: the EDGE TABLE is touched exactly once. One labeled-edge pass
     // (edges ⋈ labels twice) builds the RESIDUAL LABEL GRAPH — one
     // distinct (label(src), label(dst)) adjacency per edge still crossing

@@ -474,21 +474,12 @@ object MultimodalOps {
     val compDf: DataFrame =
       if (driverPath) {
         val present = presentDf.collect().map(_.getLong(0))
-        val idx = present.zipWithIndex.toMap
-        val parent = Array.tabulate(present.length)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-          r
-        }
-        def union(a: Int, b: Int): Unit = {
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        for (c <- present; b <- 0 until width) {
-          idx.get(c ^ (1L << b)).foreach(j => union(idx(c), j))
-        }
-        val compRows = present.map(c => (c, present(find(idx(c))))).toSeq
+        val isPresent = present.toSet
+        val root = DedupOps.unionFindMin(for {
+          c <- present.toSeq; b <- 0 until width
+          n = c ^ (1L << b) if isPresent(n)
+        } yield (c, n))
+        val compRows = present.map(c => (c, root.getOrElse(c, c))).toSeq
         s.createDataFrame(compRows).toDF("phash", "comp")
       } else {
         // distributed twin: same code-level graph, solved by the dedup
