@@ -956,11 +956,17 @@ class EventPatternSpec extends AnyFunSuite {
     val rows = Tables.load(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
         col("value"))
-      .as[EvRow].collect()
+      .as[(Long, java.sql.Timestamp, Long, String, Double)].collect()
+    // closing fence: a far-future 'view' per user finalizes every real row
+    val maxMs = rows.filter(_._2 != null).map(_._2.getTime).max
+    val fences = rows.map(_._1).distinct.zipWithIndex.map { case (u, i) =>
+      (u, new java.sql.Timestamp(maxMs + (horizon + w) / 1000L + 3600000L),
+        -2000L - i, "view", 0.0)
+    }
     // out-of-order thirds (shuffled deterministically), plus a replayed
     // batch — at-least-once re-delivery must be a no-op
     val shuffled = new scala.util.Random(20260816L).shuffle(rows.toSeq)
-    val mem = MemoryStream[EvRow]
+    val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
     val df = mem.toDF.toDF("user_id", "ts", "event_id", "event_type", "value")
     val q = StreamOps.streamingPatternSpecTtl(df, regStages, w, horizon)
       .writeStream.outputMode("update").format("memory")
@@ -970,8 +976,7 @@ class EventPatternSpec extends AnyFunSuite {
         mem.addData(b); q.processAllAvailable()
       }
       mem.addData(shuffled.take(500)); q.processAllAvailable() // replay
-      mem.addData(fences(rows.filter(_._2 != null).toSeq, horizon, w))
-      q.processAllAvailable()
+      mem.addData(fences.toIndexedSeq: _*); q.processAllAvailable()
     } finally q.stop()
     def canonM(ms: Iterable[Seq[Long]]): Seq[String] =
       ms.map(_.mkString(",")).toSeq.sorted

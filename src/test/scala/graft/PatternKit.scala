@@ -3,12 +3,12 @@ package graft
 import graft.operators.PatternCompiler
 import graft.operators.PatternCompiler.{GStageRes, PStage, QOne, Quant}
 import graft.streaming.StreamOps.FinalMatchSpec
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared fixtures for the row-pattern specs: the registry predicates,
-  * per-user greedy matching over a collected corpus, a fence-closed
-  * streaming driver, and thin projections from the generic match
+  * per-user greedy matching over a collected corpus, and thin
+  * projections from the generic match
   * ([[GStageRes]] per stage, or a [[FinalMatchSpec]] emission) onto the
   * tuple each assertion reads. */
 object PatternKit {
@@ -48,56 +48,13 @@ object PatternKit {
       PatternCompiler.genericMatches(evs, stages, withinUs).map(u -> _)
     }
 
-  type EvRow = (Long, java.sql.Timestamp, Long, String, Double)
-
-  /** Event rows (user_id, ts, event_id, event_type, value) in ts order. */
-  def eventRows(events: DataFrame)(implicit spark: SparkSession): Array[EvRow] = {
-    import spark.implicits._
-    events.filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
-        col("value"))
-      .as[EvRow].collect().sortBy(_._2.getTime)
-  }
-
-  /** One far-future stage-1-qualifying row per user: it opens a start
-    * no event can complete and pushes the floor past every real row, so
-    * everything real finalizes (mask-0 rows never reach state, so the
-    * fence must itself qualify). */
-  def fences(rows: Seq[EvRow], horizonUs: Long, withinUs: Long,
-      eventType: String = "view"): Seq[EvRow] = {
-    val maxMs = rows.map(_._2.getTime).max
-    rows.map(_._1).distinct.zipWithIndex.map { case (u, i) =>
-      (u, new java.sql.Timestamp(maxMs + (horizonUs + withinUs) / 1000L +
-        3600000L), -2000L - i, eventType, 0.0)
-    }
-  }
-
-  /** Drive a streaming pattern operator over `batches` (one micro-batch
-    * each) into a memory sink and return every emitted row's table. */
-  def drive[T](name: String, batches: Seq[Seq[EvRow]],
-      mk: DataFrame => Dataset[T])(implicit spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[EvRow]
-    val df = mem.toDF().toDF("user_id", "ts", "event_id", "event_type", "value")
-    val q = mk(df).toDF().writeStream.outputMode("update").format("memory")
-      .queryName(name).start()
-    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-    finally q.stop()
-    spark.table(name)
-  }
-
-  /** A generic streaming emission as the matcher's per-stage results. */
-  def stagesOf(f: FinalMatchSpec): IndexedSeq[GStageRes] =
-    f.stage_ts.indices.map(k => GStageRes(f.stage_ts(k), f.stage_bi(k),
-      f.run_count(k), f.run_sum(k), f.run_last(k)))
-
   /** Every row of a [[FinalMatchSpec]] sink as (user, per-stage results). */
   def specFinals(out: DataFrame)(
       implicit spark: SparkSession): Seq[(Long, IndexedSeq[GStageRes])] = {
     import spark.implicits._
-    out.as[FinalMatchSpec].collect().toSeq.map(f => f.user_id -> stagesOf(f))
+    out.as[FinalMatchSpec].collect().toSeq.map(f => f.user_id ->
+      f.stage_ts.indices.map(k => GStageRes(f.stage_ts(k), f.stage_bi(k),
+        f.run_count(k), f.run_sum(k), f.run_last(k))))
   }
 
   private def opt(ts: Long): Option[Long] =
