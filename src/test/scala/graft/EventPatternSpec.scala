@@ -286,12 +286,8 @@ class EventPatternSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5), r.getLong(6))))
       .groupBy(_._1).view.mapValues(_.map(_._2).minBy(_._1)).toMap
-    val greedy = maskedRows(events, abc(viewP, click50P, purchaseP, QPlus))
-      .flatMap { case (u, evs) =>
-        PatternCompiler.genericMatches(evs,
-            abc(viewP, click50P, purchaseP, QPlus), w)
-          .headOption.map(m => u -> plusOf(m))
-      }
+    val greedy = greedyBatch(events, abc(viewP, click50P, purchaseP, QPlus), w)
+      .groupBy(_._1).map { case (u, ms) => u -> plusOf(ms.head._2) }
     assert(greedy.keySet == decl.keySet,
       "the two modes must agree on WHICH users match")
     greedy.foreach { case (u, m) =>
@@ -405,11 +401,9 @@ class EventPatternSpec extends AnyFunSuite {
       .groupBy(_._1).view.mapValues(_.map(_._2).minBy(_._1)).toMap
     val alts = Seq("click50" -> click50P, "error" -> errorP)
     val altS = altStages(viewP, alts, purchaseP)
-    val greedy = maskedRows(Tables.load(spark, dir, "events"), altS)
-      .flatMap { case (u, evs) =>
-        PatternCompiler.genericMatches(evs, altS, w).headOption
-          .map(m => u -> altOf(m, alts.map(_._1)))
-      }
+    val greedy = greedyBatch(Tables.load(spark, dir, "events"), altS, w)
+      .groupBy(_._1)
+      .map { case (u, ms) => u -> altOf(ms.head._2, alts.map(_._1)) }
     assert(greedy.keySet == decl.keySet,
       "the two modes must agree on WHICH users match")
     greedy.foreach { case (u, m) =>
