@@ -31,6 +31,9 @@ final class SessionManager(root: SparkSession,
       es
     })
 
+  /** The open session, if any — never creates one. */
+  def get(notebookId: String): Option[EngineSession] = sessions.get(notebookId)
+
   def close(notebookId: String): Unit =
     sessions.remove(notebookId).foreach(_.close())
 

@@ -1,7 +1,9 @@
 package graft.engine
 
-import java.net.URI
+import java.net.{HttpURLConnection, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the REST facade over real HTTP exactly as the reference clients
@@ -35,6 +37,17 @@ class RestGatewaySpec extends AnyFunSuite {
   private def delete(url: String): Int =
     http.send(HttpRequest.newBuilder(URI.create(url)).DELETE().build(),
       HttpResponse.BodyHandlers.ofString()).statusCode()
+
+  /** One GET on a blocking HTTP/1.1 keep-alive connection — the client
+    * shape of the notebook and the benchmark. Reads the whole body so the
+    * connection goes back to the keep-alive cache. */
+  private def blockingGet(url: String): Int = {
+    val c = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+    val code = c.getResponseCode
+    val in = if (code >= 400) c.getErrorStream else c.getInputStream
+    try in.readAllBytes() finally in.close()
+    code
+  }
 
   private def obj(v: Any): Map[String, Any] = v.asInstanceOf[Map[String, Any]]
   private def arr(v: Any): Seq[Any] = v.asInstanceOf[Seq[Any]]
@@ -211,6 +224,76 @@ class RestGatewaySpec extends AnyFunSuite {
     assert(get(s"$base/v1/sessions/$h/operations/$op/result/abc")._1 == 400)
     assert(get(s"$base/v1/sessions/$h/operations/no-such-op/result/0")._1 == 404)
     assert(delete(s"$base/v1/sessions/$h") == 200)
+  }
+
+  test("wire latency: keep-alive round trips on gateway and monitor take milliseconds") {
+    // Nagle's algorithm held each reply body back until the client's
+    // delayed ACK (40 ms on Linux): every median sat at about 44 ms
+    val base = gw.gatewayAddress
+    val h = obj(post(s"$base/v1/sessions",
+      """{"properties":{"execution.runtime-mode":"batch"}}""")._2)("sessionHandle").toString
+    val op = obj(post(s"$base/v1/sessions/$h/statements",
+      """{"statement":"SELECT 1"}""")._2)("operationHandle").toString
+    assert(pollStatus(base, h, op, Set("FINISHED", "ERROR")) == "FINISHED")
+    def medianMs(url: String): Double = {
+      assert(blockingGet(url) == 200) // opens the kept-alive connection
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        assert(blockingGet(url) == 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      (ms(14) + ms(15)) / 2
+    }
+    val medians = Seq(
+      "GET /v1/info" -> medianMs(s"$base/v1/info"),
+      "GET status" -> medianMs(s"$base/v1/sessions/$h/operations/$op/status"),
+      "GET /config" -> medianMs(s"${gw.monitorAddress}/config"))
+    assert(delete(s"$base/v1/sessions/$h") == 200)
+    assert(medians.forall(_._2 < 10.0),
+      medians.map { case (what, ms) => f"$what $ms%.1f ms" }
+        .mkString("median over 30 round trips: ", ", ", ""))
+  }
+
+  test("session DELETE racing status polls and statement POSTs leaves no session open") {
+    // own gateway: the other tests leave sessions open on the shared one
+    val g = new RestGateway(spark)
+    g.start()
+    try {
+      val base = g.gatewayAddress
+      val codes = new ConcurrentLinkedQueue[Int]()
+      for (_ <- 1 to 10) {
+        val h = obj(post(s"$base/v1/sessions",
+          """{"properties":{"execution.runtime-mode":"batch"}}""")._2)("sessionHandle").toString
+        val op = obj(post(s"$base/v1/sessions/$h/statements",
+          """{"statement":"SELECT 1"}""")._2)("operationHandle").toString
+        assert(pollStatus(base, h, op, Set("FINISHED", "ERROR")) == "FINISHED")
+        val go = new CountDownLatch(1)
+        val deleted = new CountDownLatch(1)
+        // each client keeps firing until five of its requests went out
+        // after the DELETE returned
+        val clients = (0 until 4).map { i =>
+          new Thread(() => {
+            go.await()
+            var after = 0
+            while (after < 5) {
+              if (deleted.getCount == 0) after += 1
+              codes.add(
+                if (i % 2 == 0) get(s"$base/v1/sessions/$h/operations/$op/status")._1
+                else post(s"$base/v1/sessions/$h/statements", """{"statement":"SELECT 1"}""")._1)
+            }
+          })
+        }
+        clients.foreach(_.start())
+        go.countDown()
+        Thread.sleep(20)
+        assert(delete(s"$base/v1/sessions/$h") == 200)
+        deleted.countDown()
+        clients.foreach(_.join())
+      }
+      // a request that found the session gone answers 404, never 500
+      assert(codes.asScala.toSet.subsetOf(Set(200, 404)), s"codes: ${codes.asScala.toSet}")
+      assert(g.sessions.active.isEmpty, s"sessions left open: ${g.sessions.active}")
+    } finally g.stop()
   }
 
   test("servers bind loopback, not the wildcard address") {
