@@ -1,10 +1,15 @@
 package graft.engine
 
+import java.nio.file.Files
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import graft.sources.Datagen
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.ChangelogOps
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id, row_number, struct}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** One engine session ≈ one gateway session in the reference: mutable conf
   * (execution.runtime-mode), registered tables, async statement execution
@@ -16,6 +21,15 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * client rule (flinkNotebookController.ts:256-260): a statement is
   * "streaming" iff its store keeps filling while the operation stays
   * RUNNING; bounded sources finish with EOS even in streaming mode.
+  *
+  * Every streaming statement (plain query, SQL top-N, CDC scan and
+  * transformation, streaming INSERT) runs one lifecycle, [[stream]]: the
+  * operation publishes its store, starts one query on the session's
+  * trigger and checkpoint, and runs until a cancel stops it (from the
+  * cell's DELETE, the job monitor's PATCH, or session close — all through
+  * `OperationManager.cancel`) or the query fails; the store then ends at
+  * EOS and a temporary checkpoint is deleted. The kinds differ only in
+  * their source, output mode and sink.
   */
 final class EngineSession(val spark: SparkSession) {
 
@@ -109,7 +123,7 @@ final class EngineSession(val spark: SparkSession) {
             else streamingTables(refs)
           if (streams.nonEmpty) {
             // streaming INSERT: continuous append job into the table path
-            // (writeStream file sink; the op stays RUNNING until canceled —
+            // (file sink; the op stays RUNNING until canceled —
             // the reference's "INSERT INTO spawns a monitored job" shape,
             // jobMonitorProvider.ts:41-43)
             if (overwrite) throw new IllegalArgumentException(
@@ -120,24 +134,10 @@ final class EngineSession(val spark: SparkSession) {
               // INSERT; stream names excluded so the batch re-registration
               // can't clobber the streaming views registered above
               materializeBounded(refs -- streams.map(_.name.toLowerCase))
-              val df = spark.sql(query)
-              val store = new ResultStore(Seq("result"), columnTypes = Seq(("VARCHAR", true)))
-              info.store = Some(store)
-              info.isStreaming = true
-              val q = df.writeStream
-                .format(spec.options.getOrElse("format", "parquet"))
-                .option("path", spec.options("path"))
-                .option("checkpointLocation",
-                  checkpointDir.getOrElse(
-                    java.nio.file.Files.createTempDirectory("graft-ck").toString) +
-                    s"/${info.handle.id}")
-                .outputMode(OutputMode.Append())
-                .trigger(Trigger.ProcessingTime(triggerInterval))
-                .start()
-              info.streamingQuery = Some(q)
-              q.awaitTermination()
-              store.append(Seq("OK"))
-              store.markEos()
+              stream(info, statementStore(), spark.sql(query)) {
+                _.format(spec.options.getOrElse("format", "parquet"))
+                  .option("path", spec.options("path"))
+              }
             }
           } else sync(sql) { _ =>
             // batch INSERT INTO/OVERWRITE a path-backed table (SURVEY §2.1):
@@ -154,13 +154,6 @@ final class EngineSession(val spark: SparkSession) {
     case DialectShim.Passthrough(rewritten) => runQuery(sql, rewritten)
   }
 
-  /** SET 'graft.protocol.emit-update-before' = 'true' → Flink-changelog
-    * retraction pairs for keyed updates (models/types.ts:24-27 parity),
-    * honored by every keyed delivery path (update-mode aggregates AND cdc
-    * changelog scans). */
-  private def protocolUpdateBefore: Boolean =
-    spark.conf.getOption("graft.protocol.emit-update-before").exists(_.toBoolean)
-
   /** Execute and block until terminal state — convenience for DDL/tests. */
   def executeSync(sql: String): OperationInfo = awaitFinished(execute(sql))
 
@@ -176,12 +169,29 @@ final class EngineSession(val spark: SparkSession) {
   // ------------------------------------------------------------- routing
   private def sync(sql: String)(body: OperationInfo => Unit): OperationHandle =
     ops.submit(sql) { info =>
-      val store = new ResultStore(Seq("result"), columnTypes = Seq(("VARCHAR", true)))
+      val store = statementStore()
       info.store = Some(store)
       body(info)
       store.append(Seq("OK"))
       store.markEos()
     }
+
+  /** The one-column status store of a statement that returns no rows. */
+  private def statementStore(): ResultStore =
+    new ResultStore(Seq("result"), columnTypes = Seq(("VARCHAR", true)))
+
+  /** The store of a keyed delivery path (update-mode aggregates, CDC
+    * scans, recomputed results). SET 'graft.protocol.emit-update-before' =
+    * 'true' turns keyed updates into Flink-changelog retraction pairs
+    * (models/types.ts:24-27 parity). */
+  private def keyedStore(schema: StructType): ResultStore =
+    new ResultStore(schema.fieldNames.toSeq,
+      columnTypes = FlinkDdl.logicalTypes(schema),
+      emitUpdateBefore =
+        spark.conf.getOption("graft.protocol.emit-update-before").exists(_.toBoolean))
+
+  private def emptyOf(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   private def registerTable(spec: TableSpec): Unit = {
     spec.connector match {
@@ -206,8 +216,7 @@ final class EngineSession(val spark: SparkSession) {
   private def loadFilesystem(spec: TableSpec): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(spec.options("path"))
     if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), spec.schema)
+      emptyOf(spec.schema)
     else spark.read.format(spec.options.getOrElse("format", "parquet"))
       .schema(spec.schema).load(path.toString)
   }
@@ -232,7 +241,7 @@ final class EngineSession(val spark: SparkSession) {
     val streams = if (runtimeMode == "batch") Nil else streamingTables(refs)
     val cdc = streams.filter(_.connector.endsWith("-cdc"))
     if (streams.isEmpty) runBatch(rewritten, refs)
-    else if (cdc.nonEmpty) runCdcScan(original, rewritten, cdc, streams)
+    else if (cdc.nonEmpty) runCdc(original, rewritten, cdc, streams, refs)
     else {
       // Flink's streaming top-N idiom can't go through the streaming
       // planner (Spark rejects rank-over-stream) — detect and route to the
@@ -264,31 +273,49 @@ final class EngineSession(val spark: SparkSession) {
     }
   }
 
-  /** CDC table scan: the Debezium changelog streams through
-    * `ChangelogOps.mergeBatch` into the keyed store — upserts for c/u/r,
-    * tombstoned Delete kinds for d (the reference's cdc tables render as a
-    * converging changelog view, CONNECTORS.md:126-140). A real
-    * postgres-cdc/mysql-cdc endpoint is unreachable here; a file-backed
-    * Debezium-JSON directory ('debezium.json.path') drives the identical
-    * pipeline. */
-  /** Shared CDC preamble: key + file-backed-endpoint validation, changelog
-    * stream construction. */
-  private def cdcChangelog(spec: TableSpec): DataFrame = {
+  /** The Debezium changelog stream of a cdc table. */
+  private def cdcChangelog(spec: TableSpec): DataFrame =
+    graft.sources.DebeziumJson.fileStream(spark, cdcPath(spec), spec.schema)
+
+  /** The file-backed changelog directory of a cdc table, after the checks
+    * both the streaming and the batch path need: a missing key or endpoint
+    * fails with these clear diagnostics, not a generic
+    * TABLE_OR_VIEW_NOT_FOUND or a silently global compaction (empty
+    * partitionBy = one row survives). A real postgres-cdc/mysql-cdc
+    * endpoint is unreachable here; a Debezium-JSON directory
+    * ('debezium.json.path') drives the identical pipeline. */
+  private def cdcPath(spec: TableSpec): String = {
     if (spec.primaryKey.isEmpty) throw new IllegalArgumentException(
       s"cdc table ${spec.name} needs PRIMARY KEY (...) NOT ENFORCED for changelog merge")
-    val path = spec.options.getOrElse("debezium.json.path",
+    spec.options.getOrElse("debezium.json.path",
       throw new IllegalStateException(
         s"connector '${spec.connector}' (table ${spec.name}) endpoint is unreachable " +
           "in this environment; set 'debezium.json.path' for a file-backed changelog"))
-    graft.sources.DebeziumJson.fileStream(spark, path, spec.schema)
   }
 
-  private def ckLocation(id: String): String =
-    checkpointDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-ck").toString) + s"/$id"
-
-  private def runCdcScan(sql: String, rewritten: String,
-      cdc: Seq[TableSpec], streams: Seq[TableSpec]): OperationHandle = {
+  /** CDC table scan: the Debezium changelog streams through
+    * `ChangelogOps.mergeBatch` into the keyed store — upserts for c/u/r,
+    * tombstoned Delete kinds for d (the reference's cdc tables render as a
+    * converging changelog view, CONNECTORS.md:126-140).
+    *
+    * Transformations over a CDC table — to the reference a cdc table is a
+    * normal table Flink SQL plans with changelog semantics — recompute
+    * over a COMPACTED SNAPSHOT ([[recompute]]): last-writer-wins per
+    * primary key, deletes drop the key. The fold state carries, PER KEY,
+    * the winning (__ord=ts_ms, __bat=micro-batch id, __seq=read position)
+    * alongside the payload — plus the winning __op, so a delete's ordinal
+    * keeps shadowing older changes that arrive in later batches. A change
+    * in a later micro-batch with an OLDER ts_ms therefore LOSES to the
+    * value already folded in: timestamp-wins, the same winner the batch
+    * compaction in materializeBounded picks over the whole directory
+    * (ts_ms, then arrival, then position) — a streaming transform and a
+    * later batch query over the same out-of-order changelog agree. Flink
+    * instead propagates retractions incrementally through each operator;
+    * for a Spark-native engine that would be flatMapGroupsWithState per
+    * operator — out of proportion to the reference's interactive-notebook
+    * use. */
+  private def runCdc(sql: String, rewritten: String, cdc: Seq[TableSpec],
+      streams: Seq[TableSpec], refs: Set[String]): OperationHandle = {
     val spec = cdc match {
       case Seq(one) => one
       case _ => throw new IllegalArgumentException(
@@ -300,104 +327,26 @@ final class EngineSession(val spark: SparkSession) {
         "mixing a CDC table with other unbounded sources in one statement is not supported")
     if (isDirectScan(sql, spec.name)) ops.submit(sql) { info =>
       val changelog = cdcChangelog(spec)
-      val store = new ResultStore(spec.schema.fieldNames.toSeq,
-        columnTypes = FlinkDdl.logicalTypes(spec.schema),
-        emitUpdateBefore = protocolUpdateBefore)
-      info.store = Some(store)
-      info.isStreaming = true
-      val merge = graft.streaming.ChangelogOps.mergeBatch(
-        store, spec.primaryKey,
-        org.apache.spark.sql.functions.col("__ord"), opCol = "__op") _
-      val q = changelog.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.ProcessingTime(triggerInterval))
-        .option("checkpointLocation", ckLocation(info.handle.id))
-        .foreachBatch(merge)
-        .start()
-      info.streamingQuery = Some(q)
-      q.awaitTermination()
-      store.markEos()
+      val store = keyedStore(spec.schema)
+      val merge = ChangelogOps.mergeBatch(
+        store, spec.primaryKey, col("__ord"), opCol = "__op") _
+      stream(info, store, changelog)(_.foreachBatch(merge))
     }
-    else runCdcTransform(sql, rewritten, spec)
-  }
-
-  /** Transformations over a CDC table — to the reference a cdc table is a
-    * normal table Flink SQL plans with changelog semantics
-    * (CONNECTORS.md:126-140). Parity route: per micro-batch, fold the new
-    * changes into a COMPACTED SNAPSHOT (last-writer-wins per primary key,
-    * deletes drop the key), register the snapshot as the table's temp view,
-    * re-run the user's query over it, and deliver keyed-convergent results:
-    * upserts for changed keys, Deletes for keys that left the result (so
-    * the client-visible set converges to query(current-table-state), the
-    * changelog view the reference renders).
-    *
-    * Scale posture: the snapshot is a bounded entity table (localCheckpoint
-    * per batch truncates lineage — O(table), not O(changelog-history)), and
-    * re-running the query is the standard foreachBatch "recompute on
-    * change" shape. Flink instead propagates retractions incrementally
-    * through each operator; for a Spark-native engine the incremental path
-    * would be flatMapGroupsWithState per operator — out of proportion to
-    * the reference's interactive-notebook use. Delivery keys: grouping
-    * columns for a top-level aggregate, the whole row + occurrence index
-    * otherwise (exact multiset convergence either way). */
-  private def runCdcTransform(sql: String, rewritten: String,
-      spec: TableSpec): OperationHandle = ops.submit(sql) { info =>
-    import org.apache.spark.sql.functions.{col, lit, struct}
-    val changelog = cdcChangelog(spec)
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), spec.schema)
-    // jdbc/filesystem dims joinable; the cdc table itself is excluded — its
-    // view is this operator's own incremental snapshot, registered below
-    materializeBounded(referencedTables(sql) - spec.name.toLowerCase)
-    empty.createOrReplaceTempView(spec.name)
-    val probe = spark.sql(rewritten) // plan once against the empty snapshot
-    val keyIdx = aggKeyIndexes(probe).getOrElse(Nil)
-    val store = new ResultStore(probe.schema.fieldNames.toSeq,
-      columnTypes = FlinkDdl.logicalTypes(probe.schema),
-      emitUpdateBefore = protocolUpdateBefore)
-    info.store = Some(store)
-    info.isStreaming = true
-    // The fold state carries, PER KEY, the winning (__ord=ts_ms, __bat=
-    // micro-batch id, __seq=read position) alongside the payload — plus the
-    // winning __op, so a delete's ordinal keeps shadowing older changes
-    // that arrive in later batches. A change in a later micro-batch with an
-    // OLDER ts_ms therefore LOSES to the value already folded in:
-    // timestamp-wins, the same winner the batch compaction path in
-    // materializeBounded picks over the whole directory (ts_ms, then
-    // arrival, then position) — a streaming transform and a later batch
-    // query over the same out-of-order changelog agree.
-    var snapshot = empty
-      .withColumn("__op", lit("r"))
-      .withColumn("__ord", lit(Long.MinValue))
-      .withColumn("__bat", lit(-1L))
-      .withColumn("__seq", lit(-1L))
-    val prevKeys = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    val q = changelog.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", ckLocation(info.handle.id))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    else ops.submit(sql) { info =>
+      recompute(info, rewritten, spec, refs, cdcChangelog(spec))(
         // equal-ts changes to one key tie-break by arrival: batch id, then
         // read position within the batch (monotonically_increasing_id is
         // batch-legal here, and a file micro-batch's partitions are byte
         // ranges in file order). __seq values are only comparable within
         // one batch — __bat ranks across batches first.
-        val batchSeq = batch
-          .withColumn("__bat", lit(batchId))
-          .withColumn("__seq", org.apache.spark.sql.functions.monotonically_increasing_id())
-        snapshot = graft.streaming.ChangelogOps.compact(
-            snapshot.unionByName(batchSeq), spec.primaryKey,
-            struct(col("__ord"), col("__bat"), col("__seq")))
-          .localCheckpoint()
-        snapshot.filter(col("__op") =!= "d")
-          .drop("__op", "__ord", "__bat", "__seq")
-          .createOrReplaceTempView(spec.name)
-        deliverConvergent(store, spark.sql(rewritten), keyIdx, prevKeys)
-      }
-      .start()
-    info.streamingQuery = Some(q)
-    q.awaitTermination()
-    store.markEos()
+        fold = (snapshot, batch, batchId) => ChangelogOps.compact(
+          snapshot.unionByName(batch
+            .withColumn("__bat", lit(batchId))
+            .withColumn("__seq", monotonically_increasing_id()),
+            allowMissingColumns = true),
+          spec.primaryKey, struct(col("__ord"), col("__bat"), col("__seq"))),
+        view = _.filter(col("__op") =!= "d").drop("__op", "__ord", "__bat", "__seq"))
+    }
   }
 
   /** Convergent delivery of a recomputed batch result: upsert every row —
@@ -406,20 +355,15 @@ final class EngineSession(val spark: SparkSession) {
     * Delete the keys that left the result, so the client-visible set
     * converges to the latest recomputation. `prevKeys` is the caller's
     * across-batch key memory. */
-  /** Key components normalized to value-equality (see ResultStore.keyable:
-    * BINARY columns surface as Array[Byte] with identity equals). */
-  private def keyable(v: Any): Any = ResultStore.keyable(v)
-
   private def deliverConvergent(store: ResultStore, result: DataFrame,
-      keyIdx: Seq[Int],
-      prevKeys: scala.collection.mutable.HashSet[Seq[Any]]): Unit = {
-    val newKeys = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    val occ = scala.collection.mutable.HashMap.empty[Seq[Any], Int]
+      keyIdx: Seq[Int], prevKeys: mutable.HashSet[Seq[Any]]): Unit = {
+    val newKeys = mutable.HashSet.empty[Seq[Any]]
+    val occ = mutable.HashMap.empty[Seq[Any], Int]
     val it = result.toLocalIterator()
     while (it.hasNext) {
       val fields = it.next().toSeq
       val keyFields =
-        (if (keyIdx.nonEmpty) keyIdx.map(fields) else fields).map(keyable)
+        (if (keyIdx.nonEmpty) keyIdx.map(fields) else fields).map(ResultStore.keyable)
       val key =
         if (keyIdx.nonEmpty) keyFields
         else {
@@ -434,6 +378,36 @@ final class EngineSession(val spark: SparkSession) {
     ()
   }
 
+  /** Recompute over an accumulator: the streaming form of a statement
+    * Spark's streaming planner cannot run (CDC transformations, SQL
+    * top-N). The query is planned once against an empty view of the table
+    * (store columns and delivery keys: grouping columns for a top-level
+    * aggregate, else the whole row + occurrence index). Per micro-batch,
+    * `fold` merges the batch into the accumulated state — localCheckpoint
+    * truncates lineage, so the cost is O(state), not O(history) — `view`
+    * projects the state onto the table's columns under the table's name,
+    * and the user's query re-runs over it with keyed-convergent delivery
+    * (the standard foreachBatch "recompute on change" shape). */
+  private def recompute(info: OperationInfo, sql: String, spec: TableSpec,
+      refs: Set[String], source: DataFrame)(
+      fold: (DataFrame, DataFrame, Long) => DataFrame,
+      view: DataFrame => DataFrame = identity): Unit = {
+    // bounded dims joinable; the streamed table itself is excluded — its
+    // view is this operator's own accumulator, registered below
+    materializeBounded(refs - spec.name.toLowerCase)
+    var acc = emptyOf(source.schema)
+    view(acc).createOrReplaceTempView(spec.name)
+    val probe = spark.sql(sql)
+    val keyIdx = aggKeyIndexes(probe).getOrElse(Nil)
+    val store = keyedStore(probe.schema)
+    val prevKeys = mutable.HashSet.empty[Seq[Any]]
+    stream(info, store, source)(_.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      acc = fold(acc, batch, batchId).localCheckpoint()
+      view(acc).createOrReplaceTempView(spec.name)
+      deliverConvergent(store, spark.sql(sql), keyIdx, prevKeys)
+    })
+  }
+
   /** SQL streaming top-N — the Flink `ROW_NUMBER() OVER (…) WHERE rn <= k`
     * idiom on an unbounded table, which Spark's streaming planner rejects
     * (rank-over-stream). Semantics: the result converges to the batch
@@ -443,50 +417,21 @@ final class EngineSession(val spark: SparkSession) {
     * current top-k can never re-enter it as more rows arrive, so per
     * micro-batch the accumulated state compacts to the top-k rows per
     * partition key — state is O(k · |keys|), never O(stream). The user's
-    * original query then re-runs over the compacted accumulator (registered
-    * under the table's name), and results deliver via the same
-    * keyed-convergent path as CDC transformations. Ties beyond the rank
-    * bound resolve like any batch ROW_NUMBER: nondeterministically — an
-    * ORDER BY with a tiebreaker column is deterministic end-to-end. */
+    * original query then re-runs over the compacted accumulator
+    * ([[recompute]]). Ties beyond the rank bound resolve like any batch
+    * ROW_NUMBER: nondeterministically — an ORDER BY with a tiebreaker
+    * column is deterministic end-to-end. */
   private def runStreamTopN(sql: String, spec: TableSpec, refs: Set[String],
       shape: StreamTopNShape): OperationHandle = ops.submit(sql) { info =>
-    import org.apache.spark.sql.functions.{col, row_number}
-    val source = streamSource(spec)
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), source.schema)
-    // bounded dims joinable; the streamed table itself is excluded — its
-    // view is this operator's own top-k accumulator, registered below
-    materializeBounded(refs - spec.name.toLowerCase)
-    empty.createOrReplaceTempView(spec.name)
-    val probe = spark.sql(sql) // plan once against the empty accumulator
-    val store = new ResultStore(probe.schema.fieldNames.toSeq,
-      columnTypes = FlinkDdl.logicalTypes(probe.schema),
-      emitUpdateBefore = protocolUpdateBefore)
-    info.store = Some(store)
-    info.isStreaming = true
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(shape.partitionCols.map(col): _*)
       .orderBy(shape.orderCols.map { case (c, desc) =>
         if (desc) col(c).desc else col(c).asc }: _*)
-    var acc = empty
-    val prevKeys = scala.collection.mutable.HashSet.empty[Seq[Any]]
-    val q = source.writeStream
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .option("checkpointLocation", ckLocation(info.handle.id))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        acc = acc.unionByName(batch)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= shape.limit)
-          .drop("__rn")
-          .localCheckpoint()
-        acc.createOrReplaceTempView(spec.name)
-        deliverConvergent(store, spark.sql(sql), Nil, prevKeys)
-      }
-      .start()
-    info.streamingQuery = Some(q)
-    q.awaitTermination()
-    store.markEos()
+    recompute(info, sql, spec, refs, streamSource(spec))(
+      fold = (acc, batch, _) => acc.unionByName(batch)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= shape.limit)
+        .drop("__rn"))
   }
 
   /** Bounded spec-backed tables that must materialize per query (jdbc: the
@@ -512,22 +457,11 @@ final class EngineSession(val spark: SparkSession) {
           case "filesystem" =>
             loadFilesystem(spec).createOrReplaceTempView(spec.name)
           case c if c.endsWith("-cdc") =>
-            // same validation as the streaming path — a missing key or
-            // endpoint must fail with the SAME clear diagnostics, not a
-            // generic TABLE_OR_VIEW_NOT_FOUND or a silently global
-            // compaction (empty partitionBy = one row survives)
-            if (spec.primaryKey.isEmpty) throw new IllegalArgumentException(
-              s"cdc table ${spec.name} needs PRIMARY KEY (...) NOT ENFORCED for changelog merge")
-            val path = spec.options.getOrElse("debezium.json.path",
-              throw new IllegalStateException(
-                s"connector '$c' (table ${spec.name}) endpoint is unreachable " +
-                  "in this environment; set 'debezium.json.path' for a file-backed changelog"))
-            import org.apache.spark.sql.functions.{col, monotonically_increasing_id, struct}
             // order: ts_ms, then source-file mtime (write order), then
             // in-file position — matches the streaming replay's winner
-            val log = graft.sources.DebeziumJson.fileBatch(spark, path, spec.schema)
+            val log = graft.sources.DebeziumJson.fileBatch(spark, cdcPath(spec), spec.schema)
               .withColumn("__seq", monotonically_increasing_id())
-            graft.streaming.ChangelogOps.latestSnapshot(
+            ChangelogOps.latestSnapshot(
                 log, spec.primaryKey,
                 struct(col("__ord"), col("__mt"), col("__seq")), opCol = "__op")
               .drop("__ord", "__mt", "__seq")
@@ -618,46 +552,64 @@ final class EngineSession(val spark: SparkSession) {
       val df = spark.sql(sql)
       val keys = aggKeyIndexes(df)
       val keyIdx = keys.getOrElse(Nil)
-      val store = new ResultStore(df.schema.fieldNames.toSeq,
-        columnTypes = FlinkDdl.logicalTypes(df.schema),
-        emitUpdateBefore = protocolUpdateBefore)
-      info.store = Some(store)
-      info.isStreaming = true
+      val store = keyedStore(df.schema)
       val mode = if (keys.isDefined) OutputMode.Update() else OutputMode.Append()
-      val writer0 = df.writeStream
-        .outputMode(mode)
-        .trigger(Trigger.ProcessingTime(triggerInterval))
-      val q = checkpointDir
-        .map(d => writer0.option("checkpointLocation",
-          s"$d/${info.handle.id}"))
-        .getOrElse(writer0)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Driver memory stays bounded for ANY micro-batch size: rows pull
-          // one partition at a time (toLocalIterator), never a full
-          // collect — a fast source's first batch, or an aggregate over an
-          // unbounded key domain, can exceed the 10k client cap by orders
-          // of magnitude. Append mode additionally stops pulling at the
-          // store's capacity; update mode must see every changed key (an
-          // update to an already-stored key applies even at capacity), but
-          // holds at most one partition of them at a time.
-          val bounded =
-            if (keyIdx.nonEmpty) batch
-            else batch.limit(store.remainingCapacity)
-          val it = bounded.toLocalIterator()
-          while (it.hasNext && !(keyIdx.isEmpty && store.atCapacity)) {
-            val fields = it.next().toSeq
-            if (keyIdx.nonEmpty) store.upsert(keyIdx.map(fields), fields)
-            else store.append(fields)
-          }
+      stream(info, store, df, mode)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+        // Driver memory stays bounded for ANY micro-batch size: rows pull
+        // one partition at a time (toLocalIterator), never a full
+        // collect — a fast source's first batch, or an aggregate over an
+        // unbounded key domain, can exceed the 10k client cap by orders
+        // of magnitude. Append mode additionally stops pulling at the
+        // store's capacity; update mode must see every changed key (an
+        // update to an already-stored key applies even at capacity), but
+        // holds at most one partition of them at a time.
+        val bounded =
+          if (keyIdx.nonEmpty) batch
+          else batch.limit(store.remainingCapacity)
+        val it = bounded.toLocalIterator()
+        while (it.hasNext && !(keyIdx.isEmpty && store.atCapacity)) {
+          val fields = it.next().toSeq
+          if (keyIdx.nonEmpty) store.upsert(keyIdx.map(fields), fields)
+          else store.append(fields)
         }
-        .start()
-      info.streamingQuery = Some(q)
-      q.awaitTermination()
-      store.markEos()
+      })
     }
 
-  def close(): Unit = {
-    spark.streams.active.foreach(_.stop())
-    ops.shutdown()
+  /** The one streaming lifecycle (class doc). Publishes `store`, starts
+    * `source` into `sink` on the session's trigger and checkpoint, and
+    * blocks until the query ends; the query never outlives this call.
+    *
+    * Checkpoint: `<execution.checkpointing.dir>/<operation id>` after SET,
+    * else a temporary directory deleted when the query ends. A cancel
+    * that lands before the query is published finds nothing to stop
+    * (`OperationManager.cancel` reads `streamingQuery`), so the query
+    * stops here at once if the operation was canceled meanwhile. */
+  private def stream(info: OperationInfo, store: ResultStore, source: DataFrame,
+      mode: OutputMode = OutputMode.Append())(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    info.store = Some(store)
+    info.isStreaming = true
+    val (location, temp) = checkpointDir match {
+      case Some(dir) => (s"$dir/${info.handle.id}", None)
+      case None =>
+        val tmp = Files.createTempDirectory("graft-ck")
+        (tmp.toString, Some(tmp))
+    }
+    try {
+      val q = sink(source.writeStream.outputMode(mode))
+        .trigger(Trigger.ProcessingTime(triggerInterval))
+        .option("checkpointLocation", location)
+        .start()
+      info.streamingQuery = Some(q)
+      if (info.status == OpStatus.Canceled) q.stop()
+      try q.awaitTermination() finally q.stop()
+      store.markEos()
+    } finally temp.foreach(t => org.apache.commons.io.FileUtils.deleteQuietly(t.toFile))
   }
+
+  /** Cancels the session's live operations, stopping their streams. Goes
+    * through the operations rather than `spark.streams`, which would hang
+    * a StreamingQueryListenerBus on the shared Spark bus for every batch-
+    * only session. */
+  def close(): Unit = ops.shutdown()
 }

@@ -5,12 +5,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 /** Job monitoring parity (SURVEY.md §3.3): overview / per-job metrics /
-  * details / cancel, fed by SparkListener (batch) + StreamingQueryListener
-  * (streaming), replacing the reference's JobManager REST polling
+  * details / cancel, fed by one SparkListener on the shared context,
+  * replacing the reference's JobManager REST polling
   * (flinkJobClient.ts:107-146, metrics numRecordsIn/Out ≈ numInputRows).
+  * Spark posts every session's streaming-query events to that same bus,
+  * so the one listener sees the queries of all sessions.
   */
 final case class JobInfo(
     id: String,
@@ -140,82 +143,76 @@ final class JobRegistry(spark: SparkSession) {
       case s: SparkListenerSQLExecutionStart =>
         executionPlans.put(s.executionId, s.sparkPlanInfo)
         pruneL(executionPlans, MaxPlans)
+      case e: QueryStartedEvent =>
+        streamJobs.put(e.id, JobInfo(e.id.toString,
+          Option(e.name).getOrElse(""), "RUNNING", 0, 0, 0))
+      case e: QueryProgressEvent => streamProgressed(e.progress)
+      case e: QueryTerminatedEvent => streamTerminated(e)
       case _ => ()
     }
   }
 
-  private val streamListener = new StreamingQueryListener {
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-      streamJobs.put(e.id, JobInfo(e.id.toString,
-        Option(e.name).getOrElse(""), "RUNNING", 0, 0, 0))
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      streamProgress.put(e.progress.id, e.progress)
-      val isNewBatch = streamLastBatch.put(e.progress.id, e.progress.batchId)
-        .forall(_ < e.progress.batchId)
-      if (isNewBatch) {
-        streamCommits.updateWith(e.progress.id)(c => Some(c.getOrElse(0L) + 1L))
-        import scala.jdk.CollectionConverters._
-        val dur = e.progress.durationMs.asScala
-          .get("triggerExecution").map(_.longValue()).getOrElse(0L)
-        val entry = CheckpointEntry(
-          id = e.progress.batchId,
-          status = "COMPLETED",
-          // progress.timestamp is ISO-8601 UTC; the wire field is epoch ms
-          triggerTimestamp =
-            java.time.Instant.parse(e.progress.timestamp).toEpochMilli,
-          durationMs = dur,
-          stateRows = e.progress.stateOperators.map(_.numRowsTotal).sum,
-          stateBytes = e.progress.stateOperators.map(_.memoryUsedBytes).sum)
-        streamHistory.updateWith(e.progress.id)(h =>
-          Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
-      }
-      streamJobs.updateWith(e.progress.id) {
-        case Some(j) => Some(j.copy(
-          numRecordsIn = j.numRecordsIn + e.progress.numInputRows,
-          numRecordsOut = j.numRecordsOut +
-            Option(e.progress.sink).map(_.numOutputRows).filter(_ > 0).getOrElse(0L)))
-        case None => None
-      }
+  private def streamProgressed(p: StreamingQueryProgress): Unit = {
+    streamProgress.put(p.id, p)
+    val isNewBatch = streamLastBatch.put(p.id, p.batchId).forall(_ < p.batchId)
+    if (isNewBatch) {
+      streamCommits.updateWith(p.id)(c => Some(c.getOrElse(0L) + 1L))
+      import scala.jdk.CollectionConverters._
+      val dur = p.durationMs.asScala
+        .get("triggerExecution").map(_.longValue()).getOrElse(0L)
+      val entry = CheckpointEntry(
+        id = p.batchId,
+        status = "COMPLETED",
+        // progress.timestamp is ISO-8601 UTC; the wire field is epoch ms
+        triggerTimestamp = java.time.Instant.parse(p.timestamp).toEpochMilli,
+        durationMs = dur,
+        stateRows = p.stateOperators.map(_.numRowsTotal).sum,
+        stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum)
+      streamHistory.updateWith(p.id)(h =>
+        Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
     }
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-      if (e.exception.isDefined) {
-        streamFailures.updateWith(e.id)(c => Some(c.getOrElse(0L) + 1L))
-        // a failed run is one FAILED history row (Flink records failed
-        // checkpoints in the same list); id = the batch that didn't commit
-        val failedId = streamLastBatch.get(e.id).map(_ + 1L).getOrElse(0L)
-        val entry = CheckpointEntry(failedId, "FAILED",
-          System.currentTimeMillis(), 0L, 0L, 0L)
-        streamHistory.updateWith(e.id)(h =>
-          Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
-      }
-      streamJobs.updateWith(e.id) {
-        case Some(j) => Some(j.copy(state =
-          if (e.exception.isDefined) "FAILED"
-          else if (canceledStreams.contains(e.id.toString)) "CANCELED"
-          else "FINISHED"))
-        case None => None
-      }
-      // cap terminated-stream history: drop the heavy per-query state
-      // (last progress) for the oldest terminated queries beyond the cap
-      if (streamProgress.size > MaxPlans) {
-        val active = spark.streams.active.map(_.id).toSet
-        streamProgress.keys.filterNot(active.contains)
-          .take(streamProgress.size - MaxPlans)
-          .foreach { id => streamProgress.remove(id); streamHistory.remove(id) }
-      }
+    streamJobs.updateWith(p.id) {
+      case Some(j) => Some(j.copy(
+        numRecordsIn = j.numRecordsIn + p.numInputRows,
+        numRecordsOut = j.numRecordsOut +
+          Option(p.sink).map(_.numOutputRows).filter(_ > 0).getOrElse(0L)))
+      case None => None
+    }
+  }
+
+  private def streamTerminated(e: QueryTerminatedEvent): Unit = {
+    if (e.exception.isDefined) {
+      streamFailures.updateWith(e.id)(c => Some(c.getOrElse(0L) + 1L))
+      // a failed run is one FAILED history row (Flink records failed
+      // checkpoints in the same list); id = the batch that didn't commit
+      val failedId = streamLastBatch.get(e.id).map(_ + 1L).getOrElse(0L)
+      val entry = CheckpointEntry(failedId, "FAILED",
+        System.currentTimeMillis(), 0L, 0L, 0L)
+      streamHistory.updateWith(e.id)(h =>
+        Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
+    }
+    val canceled = canceledStreams.remove(e.id.toString).isDefined
+    streamJobs.updateWith(e.id) {
+      case Some(j) => Some(j.copy(state =
+        if (e.exception.isDefined) "FAILED"
+        else if (canceled) "CANCELED"
+        else "FINISHED"))
+      case None => None
+    }
+    // cap terminated-stream history: drop the heavy per-query state (last
+    // progress) for the oldest streams this registry no longer sees RUNNING
+    if (streamProgress.size > MaxPlans) {
+      val running = streamJobs.collect { case (id, j) if j.state == "RUNNING" => id }.toSet
+      streamProgress.keys.filterNot(running.contains)
+        .take(streamProgress.size - MaxPlans)
+        .foreach { id =>
+          Seq(streamProgress, streamHistory, streamCommits, streamLastBatch, streamFailures)
+            .foreach(_.remove(id))
+        }
     }
   }
 
   spark.sparkContext.addSparkListener(sparkListener)
-  spark.streams.addListener(streamListener)
-
-  /** Observe streaming queries started from ANOTHER session over the same
-    * SparkContext — `newSession()` children get their own
-    * StreamingQueryManager, so the constructor's listener registration
-    * doesn't see their queries. Batch jobs need no attach (the
-    * SparkListener sits on the shared context). */
-  def attach(session: SparkSession): Unit =
-    session.streams.addListener(streamListener)
 
   /** Overview grouped by state (jobMonitorProvider.ts:112,146-157). */
   def overview(): Map[String, Seq[JobInfo]] =
@@ -288,19 +285,20 @@ final class JobRegistry(spark: SparkSession) {
   private def flatten(p: SparkPlanInfo): Seq[SparkPlanInfo] =
     p +: p.children.flatMap(flatten)
 
-  /** Cancel by id: streaming query stop or batch job-group cancel
-    * (flinkJobClient.ts:164-175 analogue). */
-  def cancel(id: String): Boolean = {
-    spark.streams.active.find(_.id.toString == id) match {
-      case Some(q) => canceledStreams.put(id, true); q.stop(); true
-      case None =>
-        jobGroups.collectFirst { case (jid, g) if jid.toString == id && g.nonEmpty => g }
-          .exists { g => spark.sparkContext.cancelJobGroup(g); true }
-    }
-  }
+  /** Cancel by id (flinkJobClient.ts:164-175 analogue): a RUNNING stream
+    * stops through `stopStream` — by default the registry session's own
+    * query; the gateway passes `SessionManager.cancelStream`, which
+    * cancels the operation that owns the query — and a batch job cancels
+    * its job group. */
+  def cancel(id: String, stopStream: String => Boolean = stopOwnStream): Boolean =
+    if (streamJobs.exists { case (uid, j) => uid.toString == id && j.state == "RUNNING" }) {
+      canceledStreams.put(id, true)
+      stopStream(id)
+    } else jobGroups.collectFirst { case (jid, g) if jid.toString == id && g.nonEmpty => g }
+      .exists { g => spark.sparkContext.cancelJobGroup(g); true }
 
-  def close(): Unit = {
-    spark.sparkContext.removeSparkListener(sparkListener)
-    spark.streams.removeListener(streamListener)
-  }
+  private def stopOwnStream(id: String): Boolean =
+    spark.streams.active.find(_.id.toString == id).exists { q => q.stop(); true }
+
+  def close(): Unit = spark.sparkContext.removeSparkListener(sparkListener)
 }

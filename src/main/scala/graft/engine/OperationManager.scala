@@ -2,6 +2,7 @@ package graft.engine
 
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, Executors}
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -107,6 +108,12 @@ final class OperationManager(spark: SparkSession) {
   def get(handle: OperationHandle): Option[OperationInfo] =
     Option(ops.get(handle.id))
 
+  /** Cancels the operation running the streaming query `queryId`; false
+    * when no operation here runs it. */
+  def cancelStream(queryId: String): Boolean =
+    ops.values.asScala.find(_.streamingQuery.exists(_.id.toString == queryId))
+      .map(info => cancel(info.handle)).isDefined
+
   def status(handle: OperationHandle): OpStatus.Value =
     get(handle).map(_.status).getOrElse(OpStatus.Error)
 
@@ -146,5 +153,11 @@ final class OperationManager(spark: SparkSession) {
     info.store.foreach(_.markEos())
   }
 
-  def shutdown(): Unit = pool.shutdownNow()
+  /** Cancels every live operation, stopping its stream, then the pool. */
+  def shutdown(): Unit = {
+    ops.values.asScala
+      .filter(i => i.status == OpStatus.Pending || i.status == OpStatus.Running)
+      .foreach(i => cancel(i.handle))
+    pool.shutdownNow()
+  }
 }

@@ -166,7 +166,7 @@ final class RestGateway(root: SparkSession,
     bindAddress: java.net.InetAddress = java.net.InetAddress.getLoopbackAddress) {
 
   val registry = new JobRegistry(root)
-  val sessions = new SessionManager(root, es => registry.attach(es.spark))
+  val sessions = new SessionManager(root)
 
   // TCP_NODELAY, or every reply stalls 40 ms on the client's delayed ACK
   // (class doc). The JDK reads it once per JVM, at the first HttpServer.
@@ -427,7 +427,7 @@ final class RestGateway(root: SparkSession,
 
       case ("PATCH", Seq("jobs", id))
           if Option(ex.getRequestURI.getQuery).exists(_.contains("mode=cancel")) =>
-        val ok = registry.cancel(id)
+        val ok = registry.cancel(id, sessions.cancelStream)
         reply(ex, if (ok) 202 else 404, Map("canceled" -> ok))
 
       case _ => reply(ex, 404, Map("errors" -> Seq(s"no route: $method /${segs.mkString("/")}")))

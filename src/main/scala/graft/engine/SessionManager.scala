@@ -8,10 +8,7 @@ import org.apache.spark.sql.SparkSession
   * SparkContext. Mirrors the reference's per-notebook gateway session
   * (flinkNotebookController.ts:932-977, SURVEY §1.1 sessions row).
   */
-final class SessionManager(root: SparkSession,
-    /** Called once per newly created session — e.g. a JobRegistry attaching
-      * its streaming listener to the child's own StreamingQueryManager. */
-    onCreate: EngineSession => Unit = _ => ()) {
+final class SessionManager(root: SparkSession) {
   private val sessions = TrieMap.empty[String, EngineSession]
 
   def getOrCreate(notebookId: String,
@@ -27,9 +24,11 @@ final class SessionManager(root: SparkSession,
       engineProps.foreach { case (k, v) =>
         es.executeSync(s"SET '$k' = '$v'")
       }
-      onCreate(es)
       es
     })
+
+  /** Cancels the operation running stream `queryId`, as an operation DELETE does. */
+  def cancelStream(queryId: String): Boolean = sessions.values.exists(_.ops.cancelStream(queryId))
 
   /** The open session, if any — never creates one. */
   def get(notebookId: String): Option[EngineSession] = sessions.get(notebookId)

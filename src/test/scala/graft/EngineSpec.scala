@@ -692,6 +692,120 @@ class EngineSpec extends AnyFunSuite {
     session.executeSync("DROP TABLE si_src")
   }
 
+  // ------------------------------------------- the one streaming lifecycle
+  /** A fresh child session, so `spark.streams.active` holds only the
+    * queries of the test that owns it. */
+  private def withStreamingSession(body: EngineSession => Unit): Unit = {
+    val es = new EngineSession(spark.newSession())
+    try {
+      es.executeSync("SET 'execution.runtime-mode' = 'streaming'")
+      es.executeSync(
+        """CREATE TABLE life_src (g INT, v INT) WITH (
+          |'connector' = 'datagen', 'rows-per-second' = '50',
+          |'fields.g.min' = '1', 'fields.g.max' = '3',
+          |'fields.v.min' = '1', 'fields.v.max' = '1000')""".stripMargin)
+      body(es)
+    } finally es.close()
+  }
+
+  private def awaitTrue(what: String, deadlineMs: Long = 30000)(cond: => Boolean): Unit = {
+    val end = System.currentTimeMillis() + deadlineMs
+    while (!cond && System.currentTimeMillis() < end) Thread.sleep(50)
+    assert(cond, what)
+  }
+
+  /** Waits until the statement's query has committed a micro-batch. */
+  private def awaitCommitted(es: EngineSession, h: OperationHandle): OperationInfo = {
+    val info = es.ops.get(h).get
+    awaitTrue(s"'${info.statement}' should commit a micro-batch") {
+      info.error.foreach(throw _)
+      info.streamingQuery.exists(_.lastProgress != null)
+    }
+    info
+  }
+
+  test("a cancel that lands during stream setup stops the stream once it starts") {
+    withStreamingSession { es =>
+      (1 to 10).foreach { round =>
+        val h = es.execute("SELECT g, COUNT(*) AS n FROM life_src GROUP BY g")
+        val info = es.ops.get(h).get
+        val end = System.nanoTime() + 30e9.toLong
+        while (info.status == OpStatus.Pending && System.nanoTime() < end) Thread.onSpinWait()
+        assert(info.status == OpStatus.Running && info.streamingQuery.isEmpty,
+          s"round $round: the cancel should land during setup")
+        es.ops.cancel(h)
+        // setup goes on after the cancel: the query still starts, and must
+        // then stop on its own
+        awaitTrue(s"round $round: the query should be published")(info.streamingQuery.nonEmpty)
+        awaitTrue(s"round $round: the stream kept running after its cancel") {
+          es.spark.streams.active.isEmpty
+        }
+        assert(info.status == OpStatus.Canceled)
+      }
+    }
+  }
+
+  test("streaming statements leave no temporary checkpoint directory behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpointDirs(): Set[String] = tmp.list().toSet
+      .filter(n => n.startsWith("graft-ck") || n.startsWith("temporary-"))
+    val cdcDir = java.nio.file.Files.createTempDirectory("graft-cdc-life")
+    java.nio.file.Files.writeString(cdcDir.resolve("a.json"),
+      """{"before":null,"after":{"id":1,"region":"east"},"op":"c","ts_ms":100}
+        |{"before":null,"after":{"id":2,"region":"north"},"op":"c","ts_ms":101}
+        |""".stripMargin)
+    val sinkDir = java.nio.file.Files.createTempDirectory("graft-si-life")
+    withStreamingSession { es =>
+      es.executeSync(
+        s"""CREATE TABLE life_cdc (id INT, region STRING,
+           |  PRIMARY KEY (id) NOT ENFORCED) WITH (
+           |'connector' = 'postgres-cdc', 'debezium.json.path' = '$cdcDir')""".stripMargin)
+      es.executeSync(
+        s"""CREATE TABLE life_sink (g INT, v INT) WITH (
+           |'connector' = 'filesystem', 'path' = '$sinkDir', 'format' = 'parquet')""".stripMargin)
+      Seq(
+        "top-N" -> """SELECT g, v, rn FROM (
+          |  SELECT g, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY v DESC) AS rn
+          |  FROM life_src) WHERE rn <= 2""".stripMargin,
+        "CDC scan" -> "SELECT * FROM life_cdc",
+        "CDC transform" -> "SELECT region, COUNT(*) AS n FROM life_cdc GROUP BY region",
+        "streaming INSERT" -> "INSERT INTO life_sink SELECT g, v FROM life_src",
+        "plain streaming" -> "SELECT g, COUNT(*) AS n FROM life_src GROUP BY g"
+      ).foreach { case (kind, sql) =>
+        val before = checkpointDirs()
+        val h = es.execute(sql)
+        awaitCommitted(es, h)
+        es.ops.cancel(h)
+        awaitTrue(s"$kind left ${checkpointDirs() -- before} behind", 15000) {
+          (checkpointDirs() -- before).isEmpty
+        }
+      }
+    }
+  }
+
+  test("SET 'execution.checkpointing.dir' checkpoints each stream under <dir>/<operation id>") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-setdir")
+    withStreamingSession { es =>
+      es.executeSync(s"SET 'execution.checkpointing.dir' = '$dir'")
+      val h = es.execute("SELECT g, COUNT(*) AS n FROM life_src GROUP BY g")
+      awaitCommitted(es, h)
+      val commits = dir.resolve(h.id).resolve("commits").toFile
+      awaitTrue(s"$commits should hold a committed batch") {
+        Option(commits.list()).exists(_.nonEmpty)
+      }
+      es.ops.cancel(h)
+    }
+  }
+
+  test("DROP TABLE: a missing table errors by name, IF EXISTS finishes") {
+    val h = session.execute("DROP TABLE no_such_table")
+    val err = intercept[IllegalArgumentException](session.awaitFinished(h))
+    assert(session.ops.status(h) == OpStatus.Error)
+    assert(err.getMessage.contains("no_such_table"), err.getMessage)
+    assert(session.executeSync("DROP TABLE IF EXISTS no_such_table").status ==
+      OpStatus.Finished)
+  }
+
   test("kafka JSON shape: serialize -> parse round-trips the declared schema") {
     import graft.sources.KafkaJson
     import spark.implicits._

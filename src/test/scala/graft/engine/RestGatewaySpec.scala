@@ -34,6 +34,13 @@ class RestGatewaySpec extends AnyFunSuite {
     (r.statusCode(), Json.parse(r.body()))
   }
 
+  private def patch(url: String): (Int, Any) = {
+    val r = http.send(HttpRequest.newBuilder(URI.create(url))
+      .method("PATCH", HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), Json.parse(r.body()))
+  }
+
   private def delete(url: String): Int =
     http.send(HttpRequest.newBuilder(URI.create(url)).DELETE().build(),
       HttpResponse.BodyHandlers.ofString()).statusCode()
@@ -203,6 +210,54 @@ class RestGatewaySpec extends AnyFunSuite {
       s"history ids must strictly increase, got $ids")
     assert(delete(s"$base/v1/sessions/$h/operations/$op") == 200)
     assert(pollStatus(base, h, op, Set("CANCELED", "FINISHED", "ERROR")) == "CANCELED")
+  }
+
+  test("monitor PATCH cancel stops a gateway session's stream through its operation") {
+    val base = gw.gatewayAddress
+    val mon = gw.monitorAddress
+    val h = obj(post(s"$base/v1/sessions", "{}")._2)("sessionHandle").toString
+    val ddl = obj(post(s"$base/v1/sessions/$h/statements",
+      """{"statement":"CREATE TABLE mc_clicks (user_id INT) WITH ('connector'='datagen','rows-per-second'='50','fields.user_id.min'='1','fields.user_id.max'='5')"}""")._2)("operationHandle").toString
+    assert(pollStatus(base, h, ddl, Set("FINISHED", "ERROR")) == "FINISHED")
+    val op = obj(post(s"$base/v1/sessions/$h/statements",
+      """{"statement":"SELECT user_id, COUNT(*) AS n FROM mc_clicks GROUP BY user_id"}""")._2)("operationHandle").toString
+    assert(pollStatus(base, h, op, Set("RUNNING", "ERROR")) == "RUNNING")
+    val es = gw.sessions.get(h).get
+    val info = es.ops.get(OperationHandle(op)).get
+    def jobState(jid: String): Option[String] =
+      arr(obj(get(s"$mon/jobs/overview")._2)("jobs")).map(obj)
+        .find(_("jid") == jid).map(_("state").toString)
+    def await(what: String)(cond: => Boolean): Unit = {
+      val end = System.currentTimeMillis() + 30000
+      while (!cond && System.currentTimeMillis() < end) Thread.sleep(100)
+      assert(cond, what)
+    }
+    await("the stream should start")(info.streamingQuery.nonEmpty)
+    val jid = info.streamingQuery.get.id.toString
+    await("the monitor should list the stream RUNNING")(jobState(jid).contains("RUNNING"))
+    val (code, body) = patch(s"$mon/jobs/$jid?mode=cancel")
+    assert(code == 202, s"PATCH cancel answered $code $body")
+    await("the stream should stop")(es.spark.streams.active.isEmpty)
+    assert(pollStatus(base, h, op, Set("CANCELED", "FINISHED", "ERROR")) == "CANCELED")
+    await(s"the monitor should show the stream CANCELED, got ${jobState(jid)}")(
+      jobState(jid).contains("CANCELED"))
+    assert(delete(s"$base/v1/sessions/$h") == 200)
+  }
+
+  test("batch-only gateway sessions hang no streaming listener bus on the shared Spark bus") {
+    val base = gw.gatewayAddress
+    val before = org.apache.spark.ListenerBusProbe.streamingQueryBuses(spark.sparkContext)
+    (1 to 5).foreach { _ =>
+      val h = obj(post(s"$base/v1/sessions",
+        """{"properties":{"execution.runtime-mode":"batch"}}""")._2)("sessionHandle").toString
+      val op = obj(post(s"$base/v1/sessions/$h/statements",
+        """{"statement":"SELECT 1"}""")._2)("operationHandle").toString
+      assert(pollStatus(base, h, op, Set("FINISHED", "ERROR")) == "FINISHED")
+      assert(delete(s"$base/v1/sessions/$h") == 200)
+    }
+    val added =
+      org.apache.spark.ListenerBusProbe.streamingQueryBuses(spark.sparkContext) - before
+    assert(added == 0, s"$added streaming listener buses added by 5 batch-only sessions")
   }
 
   test("client-input errors surface as 400/404, never 500") {

@@ -4,9 +4,9 @@ import java.lang.ref.WeakReference
 import org.scalatest.funsuite.AnyFunSuite
 
 /** What `SessionManager.close` must release: a notebook session's child
-  * SparkSession, with everything the gateway hangs on it (the job
-  * registry's streaming listener), must become unreachable once closed —
-  * a long-lived gateway opens and closes sessions without end. */
+  * SparkSession must become unreachable once closed, while a job registry
+  * observes its queries — a long-lived gateway opens and closes sessions
+  * without end. */
 class SessionManagerSpec extends AnyFunSuite {
 
   private lazy val spark = graft.GraftSession.local("4")
@@ -39,7 +39,7 @@ class SessionManagerSpec extends AnyFunSuite {
   test("a closed session's child SparkSession becomes unreachable") {
     val registry = new JobRegistry(spark)
     try {
-      val sm = new SessionManager(spark, es => registry.attach(es.spark))
+      val sm = new SessionManager(spark)
       val child = runAndClose(sm, "nb")
       assert(sm.get("nb").isEmpty && sm.active.isEmpty)
       var gcs = 0
