@@ -8,7 +8,7 @@ import graft.streaming.ChangelogOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id, row_number, struct}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** One engine session ≈ one gateway session in the reference: mutable conf
@@ -604,7 +604,23 @@ final class EngineSession(val spark: SparkSession) {
       if (info.status == OpStatus.Canceled) q.stop()
       try q.awaitTermination() finally q.stop()
       store.markEos()
-    } finally temp.foreach(t => org.apache.commons.io.FileUtils.deleteQuietly(t.toFile))
+    } finally temp.foreach { t =>
+      info.streamingQuery.foreach(awaitTasks)
+      org.apache.commons.io.FileUtils.deleteQuietly(t.toFile)
+    }
+  }
+
+  /** Waits, up to 10 s, until no task of the stopped query `q` runs.
+    * `stop()` returns once the query thread ends, but a task killed in the
+    * middle of a state-store commit still writes into the checkpoint, and
+    * would re-create a temporary checkpoint deleted before it ends. */
+  private def awaitTasks(q: StreamingQuery): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def running = st.getJobIdsForGroup(q.runId.toString).iterator
+      .flatMap(st.getJobInfo).flatMap(_.stageIds)
+      .flatMap(st.getStageInfo).exists(_.numActiveTasks > 0)
+    val end = System.nanoTime() + 10e9.toLong
+    while (running && System.nanoTime() < end) Thread.sleep(10)
   }
 
   /** Cancels the session's live operations, stopping their streams. Goes

@@ -75,7 +75,6 @@ final class JobRegistry(spark: SparkSession) {
   // stage ids and job ids are independent counters — metrics arrive keyed
   // by stage, so record each job's stages at start
   private val stageToJob = TrieMap.empty[Int, Int]
-  private val canceledStreams = TrieMap.empty[String, Boolean]
   // batch job → SQL execution (spark.sql.execution.id property at start);
   // execution → physical plan tree (SQLExecutionStart listener event)
   private val jobToExecution = TrieMap.empty[Int, Long]
@@ -191,12 +190,11 @@ final class JobRegistry(spark: SparkSession) {
       streamHistory.updateWith(e.id)(h =>
         Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
     }
-    val canceled = canceledStreams.remove(e.id.toString).isDefined
+    // a graft stream runs on a processing-time trigger and never finishes
+    // on its own: a query that ends without an exception was stopped
     streamJobs.updateWith(e.id) {
       case Some(j) => Some(j.copy(state =
-        if (e.exception.isDefined) "FAILED"
-        else if (canceled) "CANCELED"
-        else "FINISHED"))
+        if (e.exception.isDefined) "FAILED" else "CANCELED"))
       case None => None
     }
     // cap terminated-stream history: drop the heavy per-query state (last
@@ -286,19 +284,14 @@ final class JobRegistry(spark: SparkSession) {
     p +: p.children.flatMap(flatten)
 
   /** Cancel by id (flinkJobClient.ts:164-175 analogue): a RUNNING stream
-    * stops through `stopStream` — by default the registry session's own
-    * query; the gateway passes `SessionManager.cancelStream`, which
-    * cancels the operation that owns the query — and a batch job cancels
-    * its job group. */
-  def cancel(id: String, stopStream: String => Boolean = stopOwnStream): Boolean =
-    if (streamJobs.exists { case (uid, j) => uid.toString == id && j.state == "RUNNING" }) {
-      canceledStreams.put(id, true)
+    * stops through `stopStream`, which cancels the operation that owns the
+    * query (the gateway passes `SessionManager.cancelStream`); a batch job
+    * cancels its job group. */
+  def cancel(id: String, stopStream: String => Boolean): Boolean =
+    if (streamJobs.exists { case (uid, j) => uid.toString == id && j.state == "RUNNING" })
       stopStream(id)
-    } else jobGroups.collectFirst { case (jid, g) if jid.toString == id && g.nonEmpty => g }
+    else jobGroups.collectFirst { case (jid, g) if jid.toString == id && g.nonEmpty => g }
       .exists { g => spark.sparkContext.cancelJobGroup(g); true }
-
-  private def stopOwnStream(id: String): Boolean =
-    spark.streams.active.find(_.id.toString == id).exists { q => q.stop(); true }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(sparkListener)
 }

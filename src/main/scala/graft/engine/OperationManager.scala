@@ -153,11 +153,14 @@ final class OperationManager(spark: SparkSession) {
     info.store.foreach(_.markEos())
   }
 
-  /** Cancels every live operation, stopping its stream, then the pool. */
+  /** Cancels every live operation, stopping its stream, then shuts the
+    * pool down without interrupting its threads: an interrupt landing in
+    * `DataStreamWriter.start()` would abort the start after the query
+    * thread is up, before the query is published, leaving it running. */
   def shutdown(): Unit = {
     ops.values.asScala
       .filter(i => i.status == OpStatus.Pending || i.status == OpStatus.Running)
       .foreach(i => cancel(i.handle))
-    pool.shutdownNow()
+    pool.shutdown()
   }
 }

@@ -725,15 +725,21 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("a cancel that lands during stream setup stops the stream once it starts") {
+    // a round counts only if the cancel found no query to stop: the query
+    // is published only once, so one still unpublished after `cancel`
+    // returns was unpublished when `cancel` looked for it
+    var landed = 0
+    var round = 0
     withStreamingSession { es =>
-      (1 to 10).foreach { round =>
+      while (landed < 10 && round < 30) {
+        round += 1
         val h = es.execute("SELECT g, COUNT(*) AS n FROM life_src GROUP BY g")
         val info = es.ops.get(h).get
         val end = System.nanoTime() + 30e9.toLong
         while (info.status == OpStatus.Pending && System.nanoTime() < end) Thread.onSpinWait()
-        assert(info.status == OpStatus.Running && info.streamingQuery.isEmpty,
-          s"round $round: the cancel should land during setup")
+        assert(info.status == OpStatus.Running, s"round $round: the statement should start")
         es.ops.cancel(h)
+        if (info.streamingQuery.isEmpty) landed += 1
         // setup goes on after the cancel: the query still starts, and must
         // then stop on its own
         awaitTrue(s"round $round: the query should be published")(info.streamingQuery.nonEmpty)
@@ -743,6 +749,8 @@ class EngineSpec extends AnyFunSuite {
         assert(info.status == OpStatus.Canceled)
       }
     }
+    info(s"$landed of $round cancels landed during setup")
+    assert(landed >= 5, s"only $landed of $round cancels landed during setup")
   }
 
   test("streaming statements leave no temporary checkpoint directory behind") {

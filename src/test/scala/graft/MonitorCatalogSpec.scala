@@ -56,7 +56,7 @@ class MonitorCatalogSpec extends AnyFunSuite {
       val sq = reg.streaming().head
       assert(sq.state == "RUNNING")
       // cancel through the registry (job-monitor cancel path)
-      assert(reg.cancel(sq.id))
+      assert(reg.cancel(sq.id, session.ops.cancelStream))
       val d3 = System.currentTimeMillis() + 10000
       while (reg.streaming().exists(_.state == "RUNNING") &&
         System.currentTimeMillis() < d3) Thread.sleep(200)

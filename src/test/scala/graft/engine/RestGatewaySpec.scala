@@ -244,6 +244,35 @@ class RestGatewaySpec extends AnyFunSuite {
     assert(delete(s"$base/v1/sessions/$h") == 200)
   }
 
+  test("a stream canceled by operation DELETE reads CANCELED in the monitor overview") {
+    val base = gw.gatewayAddress
+    val mon = gw.monitorAddress
+    val h = obj(post(s"$base/v1/sessions", "{}")._2)("sessionHandle").toString
+    val ddl = obj(post(s"$base/v1/sessions/$h/statements",
+      """{"statement":"CREATE TABLE od_clicks (user_id INT) WITH ('connector'='datagen','rows-per-second'='50','fields.user_id.min'='1','fields.user_id.max'='5')"}""")._2)("operationHandle").toString
+    assert(pollStatus(base, h, ddl, Set("FINISHED", "ERROR")) == "FINISHED")
+    val op = obj(post(s"$base/v1/sessions/$h/statements",
+      """{"statement":"SELECT user_id, COUNT(*) AS n FROM od_clicks GROUP BY user_id"}""")._2)("operationHandle").toString
+    assert(pollStatus(base, h, op, Set("RUNNING", "ERROR")) == "RUNNING")
+    val info = gw.sessions.get(h).get.ops.get(OperationHandle(op)).get
+    def jobState(jid: String): Option[String] =
+      arr(obj(get(s"$mon/jobs/overview")._2)("jobs")).map(obj)
+        .find(_("jid") == jid).map(_("state").toString)
+    def await(what: String)(cond: => Boolean): Unit = {
+      val end = System.currentTimeMillis() + 30000
+      while (!cond && System.currentTimeMillis() < end) Thread.sleep(100)
+      assert(cond, what)
+    }
+    await("the stream should start")(info.streamingQuery.nonEmpty)
+    val jid = info.streamingQuery.get.id.toString
+    await("the monitor should list the stream RUNNING")(jobState(jid).contains("RUNNING"))
+    assert(delete(s"$base/v1/sessions/$h/operations/$op") == 200)
+    assert(pollStatus(base, h, op, Set("CANCELED", "FINISHED", "ERROR")) == "CANCELED")
+    await(s"the monitor should show the stream CANCELED, got ${jobState(jid)}")(
+      jobState(jid).contains("CANCELED"))
+    assert(delete(s"$base/v1/sessions/$h") == 200)
+  }
+
   test("batch-only gateway sessions hang no streaming listener bus on the shared Spark bus") {
     val base = gw.gatewayAddress
     val before = org.apache.spark.ListenerBusProbe.streamingQueryBuses(spark.sparkContext)
