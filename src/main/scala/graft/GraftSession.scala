@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** One place for engine session defaults so Verify, Bench, and tests agree.
   *
@@ -8,6 +13,16 @@ import org.apache.spark.sql.SparkSession
   * splitting stand in for hand-tuned partition counts on a real cluster),
   * shuffle partitions sized to local cores (on a 1000-executor cluster this
   * would be a multiple of total cores — AQE coalesces the excess either way).
+  *
+  * Local file writes start no processes. Without the native libhadoop,
+  * Hadoop's local file system forks `chmod` for every file or directory it
+  * creates, and the FileContext checkpoint manager, Spark's default, forks
+  * `readlink` twice per rename (`getFileLinkStatus`). A streaming micro-batch
+  * writes its offset log, commit log and state-store deltas through them, a
+  * few ms per fork, so forks set the per-batch cost of a small stream. Hence
+  * `file://` is [[LocalFiles]], and checkpoints go through the FileSystem-
+  * based manager, which reaches it (the FileContext one is hard-wired to
+  * Hadoop's raw local file system). Checksums and rename commits stay.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
@@ -24,6 +39,9 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // native expressions as SQL functions (simhash64/srp_code/vec_dot)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFiles].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
     // deployment-specific overrides without a recompile (r19): semicolon-
     // separated k=v list, e.g. cluster memory/shuffle sizing per guide §9.
     // Later wins over the defaults above; empty/unset is a no-op, so the
@@ -41,5 +59,22 @@ object GraftSession {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+}
+
+/** Hadoop's checksummed local file system, with mode bits set through
+  * `java.nio` instead of a forked `chmod` (see [[GraftSession]]). */
+final class LocalFiles extends LocalFileSystem(new LocalFiles.Raw)
+
+object LocalFiles {
+  final class Raw extends RawLocalFileSystem {
+    /** The nine rwx bits; NIO cannot set the sticky bit, which no graft
+      * write asks for. */
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort
+      val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+      PosixFilePermission.values.foreach(b => if ((mode & (256 >> b.ordinal)) != 0) bits.add(b))
+      Files.setPosixFilePermissions(pathToFile(p).toPath, bits)
+    }
   }
 }

@@ -42,6 +42,9 @@ final class EngineSession(val spark: SparkSession) {
     * reference's interactive 500 ms (SURVEY §7.4 #6). */
   @volatile private var triggerInterval: String = "500 milliseconds"
   @volatile private var checkpointDir: Option[String] = None
+  /** Every temporary checkpoint [[stream]] made; [[close]] deletes those a
+    * late task re-created after their query's own delete. */
+  private val tempCheckpoints = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
 
   def executionMode: String = runtimeMode
   def trigger: String = triggerInterval
@@ -593,6 +596,7 @@ final class EngineSession(val spark: SparkSession) {
       case Some(dir) => (s"$dir/${info.handle.id}", None)
       case None =>
         val tmp = Files.createTempDirectory("graft-ck")
+        tempCheckpoints.add(tmp)
         (tmp.toString, Some(tmp))
     }
     try {
@@ -613,7 +617,10 @@ final class EngineSession(val spark: SparkSession) {
   /** Waits, up to 10 s, until no task of the stopped query `q` runs.
     * `stop()` returns once the query thread ends, but a task killed in the
     * middle of a state-store commit still writes into the checkpoint, and
-    * would re-create a temporary checkpoint deleted before it ends. */
+    * would re-create a temporary checkpoint deleted before it ends. The
+    * status store lists only the jobs whose start it has seen, so a task of
+    * a job submitted just before `stop()` can still do so; [[close]] sweeps
+    * those. */
   private def awaitTasks(q: StreamingQuery): Unit = {
     val st = spark.sparkContext.statusTracker
     def running = st.getJobIdsForGroup(q.runId.toString).iterator
@@ -623,9 +630,13 @@ final class EngineSession(val spark: SparkSession) {
     while (running && System.nanoTime() < end) Thread.sleep(10)
   }
 
-  /** Cancels the session's live operations, stopping their streams. Goes
-    * through the operations rather than `spark.streams`, which would hang
-    * a StreamingQueryListenerBus on the shared Spark bus for every batch-
-    * only session. */
-  def close(): Unit = ops.shutdown()
+  /** Cancels the session's live operations, stopping their streams, then
+    * deletes what is left of its temporary checkpoints. Goes through the
+    * operations rather than `spark.streams`, which would hang a
+    * StreamingQueryListenerBus on the shared Spark bus for every batch-only
+    * session. */
+  def close(): Unit = {
+    ops.shutdown()
+    tempCheckpoints.forEach(t => org.apache.commons.io.FileUtils.deleteQuietly(t.toFile))
+  }
 }

@@ -10,8 +10,11 @@ import org.apache.spark.sql.types._
   *
   *  - bounded (`number-of-rows`): `spark.range(n)` + column expressions —
   *    pure batch, scales linearly (range splits across partitions).
-  *  - unbounded (`rows-per-second`): `readStream.format("rate")` + the same
-  *    expressions over the rate source's `value`.
+  *  - unbounded (`rows-per-second`): [[PacedRate]] + the same expressions
+  *    over its `value`. It yields Spark's `rate` rows but releases each as
+  *    soon as its timestamp passes, not a whole second at a time, so a
+  *    query's first micro-batch holds rows and its first results come one
+  *    trigger after it starts (the `rate` source's first batch is empty).
   *
   * Field options honored (examples/01…flinknb:12, 02…flinknb:12,83):
   * `fields.<f>.min/.max`, `fields.<f>.length`, `fields.<f>.kind='sequence'`
@@ -31,10 +34,10 @@ object Datagen {
     project(base, spec)
   }
 
-  /** Streaming variant; rate source provides (timestamp, value). */
+  /** Streaming variant; [[PacedRate]] provides (timestamp, value). */
   def unbounded(spark: SparkSession, spec: TableSpec): DataFrame = {
     val rps = spec.options.getOrElse("rows-per-second", "1").toInt
-    val base = spark.readStream.format("rate")
+    val base = spark.readStream.format(classOf[PacedRate].getName)
       .option("rowsPerSecond", rps).load()
       .withColumnRenamed("value", "id")
     project(base, spec, rateTs = Some(col("timestamp")))

@@ -791,6 +791,35 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("closing a session leaves none of its temporary checkpoint directories behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpointDirs(): Set[String] = tmp.list().toSet.filter(_.startsWith("graft-ck"))
+    val before = checkpointDirs()
+    val sinkDir = java.nio.file.Files.createTempDirectory("graft-si-close")
+    withStreamingSession { es =>
+      es.executeSync(
+        """CREATE TABLE close_clicks (page_id INT, ts TIMESTAMP(3),
+          |  WATERMARK FOR ts AS ts - INTERVAL '1' SECOND) WITH (
+          |'connector' = 'datagen', 'rows-per-second' = '50',
+          |'fields.page_id.min' = '1', 'fields.page_id.max' = '5')""".stripMargin)
+      es.executeSync(
+        s"""CREATE TABLE close_sink (g INT, v INT) WITH (
+           |'connector' = 'filesystem', 'path' = '$sinkDir', 'format' = 'parquet')""".stripMargin)
+      Seq(
+        """SELECT g, v, rn FROM (
+          |  SELECT g, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY v DESC) AS rn
+          |  FROM life_src) WHERE rn <= 2""".stripMargin,
+        """SELECT TUMBLE_START(ts, INTERVAL '2' SECOND) AS w_start, COUNT(*) AS n
+          |FROM close_clicks GROUP BY TUMBLE(ts, INTERVAL '2' SECOND)""".stripMargin,
+        "INSERT INTO close_sink SELECT g, v FROM life_src"
+      ).map(es.execute).foreach(awaitCommitted(es, _))
+      assert((checkpointDirs() -- before).size == 3, "each stream has its own checkpoint")
+    } // closes the session with all three streams running
+    awaitTrue(s"the closed session left ${checkpointDirs() -- before} behind", 15000) {
+      (checkpointDirs() -- before).isEmpty
+    }
+  }
+
   test("SET 'execution.checkpointing.dir' checkpoints each stream under <dir>/<operation id>") {
     val dir = java.nio.file.Files.createTempDirectory("graft-setdir")
     withStreamingSession { es =>
