@@ -23,6 +23,18 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * `file://` is [[LocalFiles]], and checkpoints go through the FileSystem-
   * based manager, which reaches it (the FileContext one is hard-wired to
   * Hadoop's raw local file system). Checksums and rename commits stay.
+  *
+  * Every session's tasks share one class loader. Artifact isolation, Spark's
+  * default, gives each `newSession()` child's tasks a class loader of their
+  * own, and Spark caches generated classes by (class loader, source), so
+  * every notebook session recompiled, inside its tasks, each class the
+  * gateway had already compiled: a Janino compile per class, which sets the
+  * latency of a small statement. With isolation off, a class compiled for
+  * one session serves all; SQL conf, temp views and the current catalog stay
+  * per session, since `newSession()` isolates those itself. A jar added
+  * with `ADD JAR` in any session is therefore loadable by every session's
+  * tasks, as it is already listed by `LIST JARS` in every session and
+  * loaded by the driver's one jar class loader.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder = {
@@ -42,6 +54,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[LocalFiles].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[FileSystemBasedCheckpointFileManager].getName)
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // deployment-specific overrides without a recompile (r19): semicolon-
     // separated k=v list, e.g. cluster memory/shuffle sizing per guide §9.
     // Later wins over the defaults above; empty/unset is a no-op, so the

@@ -240,7 +240,7 @@ final class EngineSession(val spark: SparkSession) {
       !s.isBounded && refs.contains(s.name.toLowerCase))
 
   private def runQuery(original: String, rewritten: String): OperationHandle = {
-    val refs = referencedTables(original)
+    val refs = referencedTables(rewritten)
     val streams = if (runtimeMode == "batch") Nil else streamingTables(refs)
     val cdc = streams.filter(_.connector.endsWith("-cdc"))
     if (streams.isEmpty) runBatch(rewritten, refs)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One EngineSession per notebook, isolated via `SparkSession.newSession()`
   * — separate SQLConf, temp views, and current database over a shared
-  * SparkContext. Mirrors the reference's per-notebook gateway session
-  * (flinkNotebookController.ts:932-977, SURVEY §1.1 sessions row).
+  * SparkContext, task class loader and generated-code cache (see
+  * [[graft.GraftSession]]). Mirrors the reference's per-notebook gateway
+  * session (flinkNotebookController.ts:932-977, SURVEY §1.1 sessions row).
   */
 final class SessionManager(root: SparkSession) {
   private val sessions = TrieMap.empty[String, EngineSession]

@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The oracle row (CORRECTNESS gate) re-proves the same equality against
   * DuckDB's gaps-and-islands SQL at every round.
   */
-class BandedOrderedSpec extends AnyFunSuite {
+class BandedOrderedSpec extends AnyFunSuite with TempDirs {
   implicit lazy val spark: SparkSession = GraftSession.local("8")
   import spark.implicits._
 
@@ -92,7 +92,7 @@ class BandedOrderedSpec extends AnyFunSuite {
     // the previous band is EMPTY for this user — stitch candidate that
     // must pass through unmerged
     rows += row(9, 4 * h6 + 120, "view") += row(9, 4 * h6 + 200, "click")
-    val out = java.nio.file.Files.createTempDirectory("graft_seam").toString
+    val out = tempDir("graft_seam").toString
     rows.result().toDF("user_id", "ts", "event_id", "event_type", "value")
       .coalesce(1).write.mode("overwrite").parquet(s"$out/events.parquet")
     out

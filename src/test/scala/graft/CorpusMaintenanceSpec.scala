@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * chunker additionally gets its shift-robustness property — the reason it
   * exists — asserted against the fixed-grid chunker on a synthetic pair.
   */
-class CorpusMaintenanceSpec extends AnyFunSuite {
+class CorpusMaintenanceSpec extends AnyFunSuite with TempDirs {
   private val dir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local("4")
 
@@ -135,7 +135,7 @@ class CorpusMaintenanceSpec extends AnyFunSuite {
     val deltaId = (1L to 100L).find(id => md5hex(id.toString).head >= 'd').get
     val text = (1 to 60).map(i => s"tok$i").mkString(" ")
     val other = (1 to 60).map(i => s"oth$i").mkString(" ")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-incr").toString
+    val tmp = tempDir("graft-incr").toString
     Seq((corpusId, text), (deltaId, text), (deltaId + 100, other))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -198,7 +198,7 @@ class CorpusMaintenanceSpec extends AnyFunSuite {
     assert(cdcShared.size >= baseChunks.size - 2,
       s"CDC should re-align after the prefix (shared ${cdcShared.size} of ${baseChunks.size})")
     // the fixed 64/48 grid shares nothing under a 3-token shift
-    val fixedTmp = java.nio.file.Files.createTempDirectory("graft-cdc").toString
+    val fixedTmp = tempDir("graft-cdc").toString
     docs.withColumn("lang", org.apache.spark.sql.functions.lit("en"))
       .withColumn("source", org.apache.spark.sql.functions.lit("synthetic"))
       .withColumn("n_chars", org.apache.spark.sql.functions.length($"text").cast("long"))

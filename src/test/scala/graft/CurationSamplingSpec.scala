@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin the structural properties an oracle hash can't explain when it
   * breaks: determinism, conservation, monotonicity).
   */
-class CurationSamplingSpec extends AnyFunSuite {
+class CurationSamplingSpec extends AnyFunSuite with TempDirs {
   private val dir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local("4")
   private def nDocs: Long = Tables.load(spark, dir, "documents").count()
@@ -1399,7 +1399,7 @@ class CurationSamplingSpec extends AnyFunSuite {
     // DECIMAL MLE rollup — in plain Scala. This is the Scala-side twin of
     // the oracle's blk CTE, so the bounded path's parity no longer rests on
     // DuckDB alone.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_idim_blk").toString
+    val tmp = tempDir("graft_idim_blk").toString
     val rnd = new scala.util.Random(20260815L)
     val dim = 8
     val rows = (0 until 450).map { i =>

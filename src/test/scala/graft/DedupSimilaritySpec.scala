@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the ones with no SQL oracle (their hashing isn't expressible in DuckDB).
   * Ground truth is the exact variant of each.
   */
-class DedupSimilaritySpec extends AnyFunSuite {
+class DedupSimilaritySpec extends AnyFunSuite with TempDirs {
   private val dir = "/root/testdata/sf0.001"
   lazy val spark: SparkSession = GraftSession.local("4")
 
@@ -238,7 +238,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         case _ => Seq((idA, uniq(idA), vec(i)), (idB, uniq(idB), vec(i)))
       }
     }
-    val d = java.nio.file.Files.createTempDirectory("graft-binom").toString
+    val d = tempDir("graft-binom").toString
     rows.map { case (id, t, _) => (id, t) }.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     rows.map { case (id, _, v) => (id, v, 0) }
@@ -274,7 +274,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // scheme) and certify the full contract — contraction, ANN on
     // distinct reps, CC, re-expansion — against the exact path end-to-end
     import org.apache.spark.sql.functions.{col, lit}
-    val d = java.nio.file.Files.createTempDirectory("graft-semclone").toString
+    val d = tempDir("graft-semclone").toString
     val emb = Tables.load(spark, dir, "embeddings")
     (0 until 3).map { k =>
       val cols = (col("vec_id") + lit(k.toLong * 1000000000L)).as("vec_id") +:
@@ -294,7 +294,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // (0/0 → NULL) both leave them singletons, so the contraction must
     // NOT collapse them (nor let them near the SRP layer)
     val dims = emb.selectExpr("size(embedding)").first().getInt(0)
-    val dz = java.nio.file.Files.createTempDirectory("graft-semzero").toString
+    val dz = tempDir("graft-semzero").toString
     import spark.implicits._
     val zeros = Seq(5000000001L, 5000000002L)
       .map(id => (id, Array.fill(dims)(0.0f), 0)).toDF("vec_id", "embedding", "label")
@@ -504,7 +504,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // vectors -> k = max(16, ceil(9000/512)) = 18), replayed plain-Scala
     // with the same rule end-to-end
     import org.apache.spark.sql.functions.{col, lit}
-    val d = java.nio.file.Files.createTempDirectory("graft-autok").toString
+    val d = tempDir("graft-autok").toString
     val emb0 = Tables.load(spark, dir, "embeddings")
     (0 until 18).map { k =>
       val cols = (col("vec_id") + lit(k.toLong * 1000000000L)).as("vec_id") +:

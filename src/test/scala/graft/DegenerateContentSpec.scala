@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 30+ minutes). This spec pins the semantics those fixes chose, at unit
   * scale, so they cannot silently regress between sweeps.
   */
-class DegenerateContentSpec extends AnyFunSuite {
+class DegenerateContentSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local("4")
   import spark.implicits._
 
@@ -60,7 +60,7 @@ class DegenerateContentSpec extends AnyFunSuite {
 
   test("samp_weighted: zero-weight docs are unsampleable, never an error") {
     degenDocs.createOrReplaceTempView("unused") // doc frame goes via dir loader normally
-    val dir = java.nio.file.Files.createTempDirectory("degen").toString
+    val dir = tempDir("degen").toString
     degenDocs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SamplingOps.sampWeighted(spark, dir).collect()
     val picked = out.map(_.getLong(1)).toSet
@@ -92,7 +92,7 @@ class DegenerateContentSpec extends AnyFunSuite {
     import graft.streaming.StreamOps
     val gateDir = "/root/testdata/sf0.001"
     val d = degenDocs
-    val sdir = java.nio.file.Files.createTempDirectory("degen-stream").toString
+    val sdir = tempDir("degen-stream").toString
     d.repartition(3).write.mode("overwrite").parquet(sdir)
     def stream = StreamOps.readParquetStream(spark, sdir, d.schema)
     // model state comes from the GATE corpus (train offline, score on
@@ -147,7 +147,7 @@ class DegenerateContentSpec extends AnyFunSuite {
   }
 
   test("mm_phash/mm_phash64: empty-text docs are absent; multibyte text hashes") {
-    val dir = java.nio.file.Files.createTempDirectory("degen2").toString
+    val dir = tempDir("degen2").toString
     degenDocs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Seq(
       MultimodalOps.mmPhash(spark, dir),

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Golden values from FIXTURES.md §A (recorded in the reference notebooks'
   * persisted outputs).
   */
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local("4")
   lazy val session = new EngineSession(spark)
 
@@ -287,7 +287,7 @@ class EngineSpec extends AnyFunSuite {
 
   // ----------------------------- CDC end-to-end via file-backed Debezium JSON
   test("cdc table: Debezium changelog merges into the store with upsert/delete kinds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc")
+    val dir = tempDir("graft-cdc")
     // two files = two micro-batches (fileStream replays one file per
     // trigger, oldest-first): the delete in file b must tombstone a key
     // INSERTED by file a — batch-local compaction would swallow it
@@ -328,7 +328,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("cdc table: GROUP BY transformation converges to the compacted answer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-tx")
+    val dir = tempDir("graft-cdc-tx")
     // batch 1 puts a key into group 'north'; batch 2 deletes it — the
     // group's row must LEAVE the client-visible result (keyed Delete), not
     // linger at a stale count
@@ -372,7 +372,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("cdc transform: out-of-order change in a later batch loses (timestamp-wins)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-ooo")
+    val dir = tempDir("graft-cdc-ooo")
     // batch 2 carries a change to id=1 whose ts_ms is OLDER than the value
     // folded in batch 1: the snapshot must keep 'new' — timestamp-wins,
     // agreeing with the batch compaction path over the same directory
@@ -412,7 +412,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("cdc transform: delete's ordinal shadows an older out-of-order change") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-ooo-del")
+    val dir = tempDir("graft-cdc-ooo-del")
     // batch 1 deletes id=1 at ts 300; batch 2 replays an OLDER change (ts
     // 250) to the same key — the tombstone must keep shadowing it (the key
     // stays gone), matching the whole-directory batch compaction
@@ -446,7 +446,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("SQL streaming top-N: ROW_NUMBER <= k over a monitored directory converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-topn").toString
+    val dir = tempDir("graft-topn").toString
     // two files = two micro-batches (the monitored dir must contain BARE
     // parquet files — the file stream source doesn't recurse into the
     // subdirectories df.write creates, so write elsewhere and move the part
@@ -454,7 +454,7 @@ class EngineSpec extends AnyFunSuite {
     // top-2 per group spans BOTH files — a batch-local rank would get it
     // wrong.
     def addFile(rows: Seq[(Int, String, Int)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-topn-w").toString
+      val tmp = tempDir("graft-topn-w").toString
       spark.createDataFrame(rows).toDF("id", "grp", "score")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -500,8 +500,8 @@ class EngineSpec extends AnyFunSuite {
     // regression: materializeBounded's unconditional filesystem
     // re-registration must not replace the streaming view runStreaming just
     // registered (that made writeStream throw 'not a streaming Dataset')
-    val dir = java.nio.file.Files.createTempDirectory("graft-mon").toString
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mon-w").toString
+    val dir = tempDir("graft-mon").toString
+    val tmp = tempDir("graft-mon-w").toString
     spark.createDataFrame(Seq((1, "a"), (2, "a"), (3, "b"))).toDF("id", "grp")
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -530,9 +530,9 @@ class EngineSpec extends AnyFunSuite {
     // stream a notebook user declares with plain SQL — stateless column
     // expressions run per micro-batch in append mode, converging to the
     // same rows a batch scan of all files would produce
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur").toString
+    val dir = tempDir("graft-cur").toString
     def addFile(rows: Seq[(Long, String)], name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cur-w").toString
+      val tmp = tempDir("graft-cur-w").toString
       spark.createDataFrame(rows).toDF("doc_id", "text")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -593,7 +593,7 @@ class EngineSpec extends AnyFunSuite {
 
   // ------------------------------------ filesystem sink: INSERT INTO/OVERWRITE
   test("filesystem connector: INSERT INTO appends, INSERT OVERWRITE replaces") {
-    val path = java.nio.file.Files.createTempDirectory("graft-fs").toString
+    val path = tempDir("graft-fs").toString
     session.executeSync(
       s"""CREATE TABLE fs_sink (id INT, name STRING) WITH (
          |'connector' = 'filesystem', 'path' = '$path', 'format' = 'parquet')""".stripMargin)
@@ -609,7 +609,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("filesystem connector: CREATE on a missing path reads empty until the first INSERT") {
-    val path = java.nio.file.Files.createTempDirectory("graft-fs-new").toString +
+    val path = tempDir("graft-fs-new").toString +
       "/not_yet_written"
     session.executeSync(
       s"""CREATE TABLE fs_new (id INT, name STRING) WITH (
@@ -625,7 +625,7 @@ class EngineSpec extends AnyFunSuite {
 
   // ------------------------------------------- statement sets + sessions
   test("EXECUTE STATEMENT SET runs contained inserts sequentially") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ss").toString
+    val path = tempDir("graft-ss").toString
     session.executeSync(
       s"""CREATE TABLE ss_sink (id INT) WITH (
          |'connector' = 'filesystem', 'path' = '$path', 'format' = 'parquet')""".stripMargin)
@@ -654,6 +654,36 @@ class EngineSpec extends AnyFunSuite {
     mgr.closeAll()
   }
 
+  test("ADD JAR in one session: the tasks of every session, open or opened later, load its class") {
+    val dir = tempDir("graft-jar")
+    val cls = "GraftAddJarProbe"
+    val src = dir.resolve(s"$cls.java")
+    java.nio.file.Files.writeString(src, s"public class $cls {}")
+    assert(javax.tools.ToolProvider.getSystemJavaCompiler
+      .run(null, null, null, "-d", dir.toString, src.toString) == 0)
+    val jar = dir.resolve("graft-probe.jar")
+    val out = new java.util.jar.JarOutputStream(java.nio.file.Files.newOutputStream(jar))
+    try {
+      out.putNextEntry(new java.util.jar.JarEntry(s"$cls.class"))
+      out.write(java.nio.file.Files.readAllBytes(dir.resolve(s"$cls.class")))
+      out.closeEntry()
+    } finally out.close()
+
+    val mgr = new SessionManager(spark)
+    try {
+      val a = mgr.getOrCreate("nb-jar-a")
+      val b = mgr.getOrCreate("nb-jar-b")
+      a.executeSync(s"ADD JAR '$jar'")
+      val c = mgr.getOrCreate("nb-jar-c")
+      for (list <- Seq("LIST JARS", "SHOW JARS")) {
+        val listed = b.ops.fetch(b.executeSync(list).handle, 0).rows.map(_.fields.head.toString)
+        assert(listed.exists(_.endsWith("graft-probe.jar")), s"$list in B: $listed")
+      }
+      for ((name, es) <- Seq("A" -> a, "B" -> b, "C" -> c))
+        assert(EngineSpec.tasksLoad(es.spark, cls), s"the tasks of session $name cannot load $cls")
+    } finally mgr.closeAll()
+  }
+
   test("skew-salted join equals plain join") {
     import graft.operators.Salting
     val li = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
@@ -666,7 +696,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("streaming INSERT INTO filesystem table writes continuously until canceled") {
-    val path = java.nio.file.Files.createTempDirectory("graft-si").toString
+    val path = tempDir("graft-si").toString
     session.executeSync("SET 'execution.runtime-mode' = 'streaming'")
     session.executeSync(
       s"""CREATE TABLE si_sink (v BIGINT, ts TIMESTAMP(3)) WITH (
@@ -757,12 +787,12 @@ class EngineSpec extends AnyFunSuite {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def checkpointDirs(): Set[String] = tmp.list().toSet
       .filter(n => n.startsWith("graft-ck") || n.startsWith("temporary-"))
-    val cdcDir = java.nio.file.Files.createTempDirectory("graft-cdc-life")
+    val cdcDir = tempDir("graft-cdc-life")
     java.nio.file.Files.writeString(cdcDir.resolve("a.json"),
       """{"before":null,"after":{"id":1,"region":"east"},"op":"c","ts_ms":100}
         |{"before":null,"after":{"id":2,"region":"north"},"op":"c","ts_ms":101}
         |""".stripMargin)
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-si-life")
+    val sinkDir = tempDir("graft-si-life")
     withStreamingSession { es =>
       es.executeSync(
         s"""CREATE TABLE life_cdc (id INT, region STRING,
@@ -795,7 +825,7 @@ class EngineSpec extends AnyFunSuite {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def checkpointDirs(): Set[String] = tmp.list().toSet.filter(_.startsWith("graft-ck"))
     val before = checkpointDirs()
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-si-close")
+    val sinkDir = tempDir("graft-si-close")
     withStreamingSession { es =>
       es.executeSync(
         """CREATE TABLE close_clicks (page_id INT, ts TIMESTAMP(3),
@@ -821,7 +851,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("SET 'execution.checkpointing.dir' checkpoints each stream under <dir>/<operation id>") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-setdir")
+    val dir = tempDir("graft-setdir")
     withStreamingSession { es =>
       es.executeSync(s"SET 'execution.checkpointing.dir' = '$dir'")
       val h = es.execute("SELECT g, COUNT(*) AS n FROM life_src GROUP BY g")
@@ -1058,4 +1088,14 @@ class EngineSpec extends AnyFunSuite {
     assert(third.rows.map(r => (r.kind, r.fields)) ==
       Seq((RowKind.UpdateBefore, Seq("a", 99)), (RowKind.UpdateAfter, Seq("a", 100))))
   }
+}
+
+object EngineSpec {
+  /** Whether every task of a job loads class `name` through its context class loader. */
+  def tasksLoad(s: SparkSession, name: String): Boolean =
+    s.range(0, 4, 1, 4)
+      .mapPartitions(_ => Iterator(scala.util.Try(
+        Class.forName(name, false, Thread.currentThread.getContextClassLoader)).isSuccess))(
+        org.apache.spark.sql.Encoders.scalaBoolean)
+      .collect().forall(identity)
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Checkpoint, state-store and file-sink writes start no processes (the
   * `GraftSession` doc says why that matters). */
-class LocalWritesSpec extends AnyFunSuite {
+class LocalWritesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local("4")
 
   private def awaitTrue(what: String, deadlineMs: Long = 30000)(cond: => Boolean): Unit = {
@@ -27,7 +27,7 @@ class LocalWritesSpec extends AnyFunSuite {
 
   test("a TUMBLE stream and an INSERT OVERWRITE start no Hadoop shell process") {
     val es = new EngineSession(spark.newSession())
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft-fs-nofork")
+    val sinkDir = tempDir("graft-fs-nofork")
     // every process start whose stack passes through Hadoop's Shell: the
     // chmod, readlink, ls and stat forks of its local file system
     val shellStarts = new ConcurrentLinkedQueue[String]()

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The unbounded datagen source's contract: Spark's `rate` rows, released
   * as soon as their timestamps pass, continued across restarts. */
-class PacedRateSpec extends AnyFunSuite {
+class PacedRateSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local("4")
 
   private def awaitTrue(what: String, deadlineMs: Long = 30000)(cond: => Boolean): Unit = {
@@ -45,7 +45,7 @@ class PacedRateSpec extends AnyFunSuite {
 
   test("yields the rows of the rate formula, the same as Spark's rate source") {
     for (rps <- Seq(50, 300)) {
-      val ck = Files.createTempDirectory("graft-paced")
+      val ck = tempDir("graft-paced")
       val rows = collect(paced(rps), ck)(_.size >= 2 * rps).values.flatten.toSeq
       val start = startMs(ck)
       assert(rows.map(_._1).sorted == (0L until rows.size.toLong), s"$rps rows/s: values")
@@ -53,7 +53,7 @@ class PacedRateSpec extends AnyFunSuite {
         assert(ts == start + math.round(v * 1000.0 / rps), s"$rps rows/s: row $v at $ts")
       }
       // Spark's own rate source at the same rate, timed from its row 0
-      val rateCk = Files.createTempDirectory("graft-rate")
+      val rateCk = tempDir("graft-rate")
       val rate = collect(
         spark.readStream.format("rate").option("rowsPerSecond", rps).load(), rateCk)(
         _.size >= rps).values.flatten.toMap
@@ -113,7 +113,7 @@ class PacedRateSpec extends AnyFunSuite {
   }
 
   test("a query restarted on its checkpoint neither repeats nor skips a value") {
-    val ck = Files.createTempDirectory("graft-paced-restart")
+    val ck = tempDir("graft-paced-restart")
     val batches = collect(paced(50), ck)(_.size >= 20)
     val firstRun = batches.values.flatten.map(_._1).max
     collect(paced(50), ck, batches)(_.exists(_._1 > firstRun + 20))

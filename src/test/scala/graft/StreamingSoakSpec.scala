@@ -31,7 +31,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * jump to max on batch 1, and the soak would measure late-drop instead
   * of steady-state eviction.
   */
-class StreamingSoakSpec extends AnyFunSuite {
+class StreamingSoakSpec extends AnyFunSuite with TempDirs {
   private val soakOn = sys.env.get("GRAFT_SOAK").contains("1")
   private val srcDir = sys.env.getOrElse("GRAFT_SOAK_SRC", "/root/testdata/sf0.1")
   private val factor = 30
@@ -405,8 +405,8 @@ class StreamingSoakSpec extends AnyFunSuite {
   private def ckptRecoveryRun(mk: DataFrame => DataFrame,
       tag: String): Unit = {
     def run(interrupt: Boolean): Seq[String] = {
-      val ckpt = Files.createTempDirectory(s"soak-ckpt-$tag").toString
-      val out = Files.createTempDirectory(s"soak-out-$tag").toString
+      val ckpt = tempDir(s"soak-ckpt-$tag").toString
+      val out = tempDir(s"soak-out-$tag").toString
       def start() = mk(
         StreamOps.readParquetStream(spark, soakDir, soakSchema))
         .writeStream.outputMode("append")
@@ -463,8 +463,8 @@ class StreamingSoakSpec extends AnyFunSuite {
       tag: String, srcDirOverride: Option[String] = None): Unit = {
     val src = srcDirOverride.getOrElse(skewSoakDir)
     def run(interrupt: Boolean): Seq[String] = {
-      val ckpt = Files.createTempDirectory(s"soak-ckpt-$tag").toString
-      val out = Files.createTempDirectory(s"soak-out-$tag").toString
+      val ckpt = tempDir(s"soak-ckpt-$tag").toString
+      val out = tempDir(s"soak-out-$tag").toString
       def start() = mk(
         StreamOps.readParquetStream(spark, src, soakSchema))
         .writeStream.outputMode("update")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,14 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * The batch side of each is DuckDB-oracle-checked (WindowQueries), so
   * equality here transitively oracle-checks the streaming path.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private val dir = "/root/testdata/sf0.001"
   implicit lazy val spark: SparkSession = GraftSession.local("4")
 
   /** Split events into several parquet files so the file stream runs
     * multiple micro-batches (state actually carries across batches). */
   private lazy val streamDir: String = {
-    val d = Files.createTempDirectory("graft-stream").toString
+    val d = tempDir("graft-stream").toString
     Tables.load(spark, dir, "events")
       .repartitionByRange(4, col("ts"))
       .write.mode("overwrite").parquet(d)
@@ -302,7 +301,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC batch compaction: same-ts_ms changes order by file write time, not split packing") {
     import graft.streaming.ChangelogOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-tie")
+    val dir = tempDir("graft-cdc-tie")
     // the EARLIER-written file is deliberately LARGER: split-size packing
     // would scan it first and a position-only tiebreaker would crown its
     // change the winner — write order must decide instead
@@ -458,7 +457,7 @@ class StreamingSpec extends AnyFunSuite {
     // the hash-deterministic design claim made testable: whatever
     // micro-batch a doc arrives in, it lands in the same split
     val d = Tables.load(spark, dir, "documents")
-    val splitDocsDir = Files.createTempDirectory("graft-split-stream").toString
+    val splitDocsDir = tempDir("graft-split-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(splitDocsDir)
     val streamed = runToCompletion(
       graft.operators.CurationOps.dsSplitAssign(
@@ -531,7 +530,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming soft-dedup snapshots converge to the batch weights") {
     val d = Tables.load(spark, dir, "documents")
-    val sdDir = Files.createTempDirectory("graft-softdedup").toString
+    val sdDir = tempDir("graft-softdedup").toString
     d.repartition(4).write.mode("overwrite").parquet(sdDir)
     val streamed = runToCompletion(
       StreamOps.streamingSoftDedup(
@@ -559,7 +558,7 @@ class StreamingSpec extends AnyFunSuite {
     // is a logic bug, not bloom noise.
     val d = Tables.load(spark, dir, "documents")
     val sketch = graft.operators.DedupOps.substringDupSketch(spark, dir)
-    val cutDir = Files.createTempDirectory("graft-subcut-stream").toString
+    val cutDir = tempDir("graft-subcut-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(cutDir)
     val streamed = runToCompletion(
       StreamOps.streamingSubstringCut(
@@ -580,7 +579,7 @@ class StreamingSpec extends AnyFunSuite {
     val budget = batch.values.head._1
     // single wave (one file, one micro-batch): the per-wave quality sort
     // makes the stream's greedy fill the batch assembly exactly
-    val dir1 = Files.createTempDirectory("graft-budget-1").toString
+    val dir1 = tempDir("graft-budget-1").toString
     d.coalesce(1).write.mode("overwrite").parquet(dir1)
     val one = runToCompletion(
       StreamOps.streamingMixBudget(
@@ -594,7 +593,7 @@ class StreamingSpec extends AnyFunSuite {
       "single-wave stream must equal the batch assembly rollup")
     // multi-wave (4 files): closure law — every source ends at-or-past its
     // budget or fully admitted, and every doc got exactly one decision
-    val dir4 = Files.createTempDirectory("graft-budget-4").toString
+    val dir4 = tempDir("graft-budget-4").toString
     d.repartition(4).write.mode("overwrite").parquet(dir4)
     val four = runToCompletion(
       StreamOps.streamingMixBudget(
@@ -617,7 +616,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.SamplingOps
     val d = Tables.load(spark, dir, "documents")
     val buckets = SamplingOps.dsirLlrBuckets(spark, dir)
-    val streamDir = Files.createTempDirectory("graft-dsir-stream").toString
+    val streamDir = tempDir("graft-dsir-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(streamDir)
     val streamed = runToCompletion(
       StreamOps.streamingDsirScore(
@@ -648,7 +647,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(xxhash64(col("s")).as("hs")).distinct()
     val sketch = BloomSketch.buildSketch(evalSh, col("hs"), 1L << 20, 1L << 24)
     // stream the train docs through multiple micro-batches
-    val trainDir = Files.createTempDirectory("graft-bloom-stream").toString
+    val trainDir = tempDir("graft-bloom-stream").toString
     val train = d.filter(col("source") =!= "src0")
     train.repartition(4).write.mode("overwrite").parquet(trainDir)
     val streamed = runToCompletion(
@@ -664,7 +663,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming Gopher battery == batch battery doc-for-doc (stateless append)") {
     val d = Tables.load(spark, dir, "documents")
-    val docsDir = Files.createTempDirectory("graft-gopher-stream").toString
+    val docsDir = tempDir("graft-gopher-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(docsDir)
     val streamed = runToCompletion(
       StreamOps.streamingGopherFlags(
@@ -691,7 +690,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming PII scan == batch scan doc-for-doc (stateless append)") {
     val d = Tables.load(spark, dir, "documents")
-    val docsDir = Files.createTempDirectory("graft-pii-stream").toString
+    val docsDir = tempDir("graft-pii-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(docsDir)
     val streamed = runToCompletion(
       StreamOps.streamingPii(
@@ -708,7 +707,7 @@ class StreamingSpec extends AnyFunSuite {
     val d = Tables.load(spark, dir, "documents")
     val merges = graft.operators.CurationOps.txtBpeTrain(spark, dir).collect()
       .sortBy(_.getLong(0)).map(r => (r.getString(1), r.getString(2))).toSeq
-    val docsDir = Files.createTempDirectory("graft-bpe-stream").toString
+    val docsDir = tempDir("graft-bpe-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(docsDir)
     val streamed = runToCompletion(
       StreamOps.streamingBpeApply(
@@ -722,7 +721,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming CDC chunks == batch chunk grain (stateless append)") {
     val d = Tables.load(spark, dir, "documents")
-    val docsDir = Files.createTempDirectory("graft-cdc-stream").toString
+    val docsDir = tempDir("graft-cdc-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(docsDir)
     val streamed = runToCompletion(
       StreamOps.streamingCdcChunks(
@@ -749,13 +748,13 @@ class StreamingSpec extends AnyFunSuite {
     }.get
     import spark.implicits._
     val aug = d.unionByName(Seq((plantedId, corpusText)).toDF("doc_id", "text"))
-    val tmp = Files.createTempDirectory("graft-incr-static").toString
+    val tmp = tempDir("graft-incr-static").toString
     aug.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val withB = Tables.load(spark, tmp, "documents").withColumn("b", bucket)
     val index = DedupOps.fingerprintIndex(withB.filter(col("b") < "d")
       .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp")))
     val delta = withB.filter(col("b") >= "d").select("doc_id", "text")
-    val deltaDir = Files.createTempDirectory("graft-incr-stream").toString
+    val deltaDir = tempDir("graft-incr-stream").toString
     delta.repartition(4).write.mode("overwrite").parquet(deltaDir)
     val streamed = runToCompletion(
       StreamOps.streamingIncrementalExact(
@@ -777,7 +776,7 @@ class StreamingSpec extends AnyFunSuite {
     val d = Tables.load(spark, dir, "documents")
     val train = d.filter(col("source") =!= "src0").select("doc_id", "text")
     val (rare, evalGrams) = DedupOps.contamStatics(spark, dir)
-    val docsDir = Files.createTempDirectory("graft-contam-stream").toString
+    val docsDir = tempDir("graft-contam-stream").toString
     train.repartition(4).write.mode("overwrite").parquet(docsDir)
     val streamed = runToCompletion(
       StreamOps.streamingContamFraction(
@@ -806,7 +805,7 @@ class StreamingSpec extends AnyFunSuite {
           BigDecimal(f.toDouble).setScale(6,
             BigDecimal.RoundingMode.HALF_UP).toDouble).toSeq)
       }.toSeq
-    val vecsDir = Files.createTempDirectory("graft-assign-stream").toString
+    val vecsDir = tempDir("graft-assign-stream").toString
     e.repartition(4).write.mode("overwrite").parquet(vecsDir)
     val streamed = runToCompletion(
       StreamOps.streamingClusterAssign(
@@ -825,7 +824,7 @@ class StreamingSpec extends AnyFunSuite {
     val d = Tables.load(spark, dir, "documents")
     val fpIndex = graft.operators.TextQueries.winnowingFpIndex(spark, dir)
       .localCheckpoint()
-    val wDir = Files.createTempDirectory("graft-winnow-stream").toString
+    val wDir = tempDir("graft-winnow-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(wDir)
     val streamed = runToCompletion(
       StreamOps.streamingWinnowing(
@@ -845,7 +844,7 @@ class StreamingSpec extends AnyFunSuite {
     val d = Tables.load(spark, dir, "documents")
     val (sh, cnt, sketch) =
       graft.operators.DedupOps.containmentCorpusState(spark, dir)
-    val cDir = Files.createTempDirectory("graft-contain-stream").toString
+    val cDir = tempDir("graft-contain-stream").toString
     d.repartition(4).write.mode("overwrite").parquet(cDir)
     val streamed = runToCompletion(
       StreamOps.streamingContainment(
@@ -905,7 +904,7 @@ class StreamingSpec extends AnyFunSuite {
         .writeStream.outputMode("append").format("parquet")
         .option("path", out).option("checkpointLocation", ck).start()
 
-    val base = Files.createTempDirectory("graft-recovery")
+    val base = tempDir("graft-recovery")
     def mk(n: String) = { val p = base.resolve(n); p.toFile.mkdirs(); p.toString }
 
     // interrupted run: 3 batches, STOP, new query from the same

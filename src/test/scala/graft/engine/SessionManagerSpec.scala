@@ -1,12 +1,16 @@
 package graft.engine
 
 import java.lang.ref.WeakReference
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** What `SessionManager.close` must release: a notebook session's child
   * SparkSession must become unreachable once closed, while a job registry
   * observes its queries — a long-lived gateway opens and closes sessions
-  * without end. */
+  * without end. And what sessions must share: the tasks of every session run
+  * under one class loader, so code generated for one session is compiled
+  * once for all of them. */
 class SessionManagerSpec extends AnyFunSuite {
 
   private lazy val spark = graft.GraftSession.local("4")
@@ -47,4 +51,42 @@ class SessionManagerSpec extends AnyFunSuite {
       assert(child.get == null, s"child SparkSession still reachable after $gcs full GCs")
     } finally registry.close()
   }
+
+  test("sessions share one task class loader, so generated code compiles once") {
+    val sm = new SessionManager(spark)
+    try {
+      val a = sm.getOrCreate("nb-a")
+      val b = sm.getOrCreate("nb-b")
+      val (loadersA, loadersB) = (SessionManagerSpec.taskLoaders(a.spark),
+        SessionManagerSpec.taskLoaders(b.spark))
+      assert(loadersA.size == 1 && loadersA == loadersB,
+        s"task class loaders: A $loadersA, B $loadersB")
+      val agg = "SELECT product_id, COUNT(*) AS n, SUM(quantity) AS qty FROM orders_gen " +
+        "GROUP BY product_id"
+      Seq(a, b).foreach(_.executeSync(
+        "CREATE TABLE orders_gen (order_id INT, product_id INT, quantity INT) WITH (" +
+          "'connector' = 'datagen', 'number-of-rows' = '10000', " +
+          "'fields.order_id.kind' = 'sequence', 'fields.order_id.start' = '1', " +
+          "'fields.order_id.end' = '10000', 'fields.product_id.min' = '1', " +
+          "'fields.product_id.max' = '20', 'fields.quantity.min' = '1', " +
+          "'fields.quantity.max' = '10')"))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+      val inA = a.executeSync(agg).handle
+      assert(a.ops.fetch(inA, 0).rows.size == 20)
+      val before = compiles.getCount
+      val inB = b.executeSync(agg).handle
+      assert(b.ops.fetch(inB, 0).rows.size == 20)
+      val recompiled = compiles.getCount - before
+      assert(recompiled == 0, s"B compiled $recompiled classes that A had already compiled")
+    } finally sm.closeAll()
+  }
+}
+
+object SessionManagerSpec {
+  /** Identities of the context class loaders that a job's tasks run under. */
+  def taskLoaders(s: SparkSession): Set[Int] =
+    s.range(0, 8, 1, 4)
+      .mapPartitions(_ => Iterator(System.identityHashCode(Thread.currentThread.getContextClassLoader)))(
+        Encoders.scalaInt)
+      .collect().toSet
 }
