@@ -6,7 +6,7 @@ import scala.collection.mutable
 import graft.sources.Datagen
 import graft.streaming.ChangelogOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id, row_number, struct}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -120,7 +120,7 @@ final class EngineSession(val spark: SparkSession) {
     case DialectShim.InsertInto(target, overwrite, query) =>
       specs.get(target) match {
         case Some(spec) if spec.connector == "filesystem" =>
-          val refs = referencedTables(query)
+          val refs = referencedTables(spark.sessionState.sqlParser.parsePlan(query))
           val streams =
             if (runtimeMode == "batch") Nil
             else streamingTables(refs)
@@ -229,8 +229,8 @@ final class EngineSession(val spark: SparkSession) {
     * case-sensitive where SQL identifiers aren't). A parse failure
     * propagates: the operation surfaces status=Error with the parser's
     * message — swallowing it here would silently misroute the statement. */
-  private def referencedTables(sql: String): Set[String] =
-    spark.sessionState.sqlParser.parsePlan(sql).collect {
+  private def referencedTables(plan: LogicalPlan): Set[String] =
+    plan.collect {
       case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
         r.multipartIdentifier.last.toLowerCase
     }.toSet
@@ -240,20 +240,19 @@ final class EngineSession(val spark: SparkSession) {
       !s.isBounded && refs.contains(s.name.toLowerCase))
 
   private def runQuery(original: String, rewritten: String): OperationHandle = {
-    val refs = referencedTables(rewritten)
+    val plan = spark.sessionState.sqlParser.parsePlan(rewritten)
+    val refs = referencedTables(plan)
     val streams = if (runtimeMode == "batch") Nil else streamingTables(refs)
     val cdc = streams.filter(_.connector.endsWith("-cdc"))
     if (streams.isEmpty) runBatch(rewritten, refs)
-    else if (cdc.nonEmpty) runCdc(original, rewritten, cdc, streams, refs)
+    else if (cdc.nonEmpty) runCdc(original, rewritten, plan, cdc, streams, refs)
     else {
       // Flink's streaming top-N idiom can't go through the streaming
       // planner (Spark rejects rank-over-stream) — detect and route to the
       // stateful accumulator BEFORE planning
       val topn = streams match {
         case Seq(one) =>
-          StreamingTopNPattern.detect(
-              spark.sessionState.sqlParser.parsePlan(rewritten))
-            .filter(_.table.equalsIgnoreCase(one.name))
+          StreamingTopNPattern.detect(plan).filter(_.table.equalsIgnoreCase(one.name))
         case _ => None
       }
       topn match {
@@ -264,10 +263,10 @@ final class EngineSession(val spark: SparkSession) {
   }
 
   /** `SELECT * FROM <table>` and nothing else — the changelog-scan shape. */
-  private def isDirectScan(sql: String, table: String): Boolean = {
+  private def isDirectScan(plan: LogicalPlan, table: String): Boolean = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedStar}
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    spark.sessionState.sqlParser.parsePlan(sql) match {
+    plan match {
       case Project(Seq(_: UnresolvedStar), r: UnresolvedRelation) =>
         r.multipartIdentifier.last.equalsIgnoreCase(table)
       case r: UnresolvedRelation =>
@@ -317,7 +316,7 @@ final class EngineSession(val spark: SparkSession) {
     * for a Spark-native engine that would be flatMapGroupsWithState per
     * operator — out of proportion to the reference's interactive-notebook
     * use. */
-  private def runCdc(sql: String, rewritten: String, cdc: Seq[TableSpec],
+  private def runCdc(sql: String, rewritten: String, plan: LogicalPlan, cdc: Seq[TableSpec],
       streams: Seq[TableSpec], refs: Set[String]): OperationHandle = {
     val spec = cdc match {
       case Seq(one) => one
@@ -328,7 +327,7 @@ final class EngineSession(val spark: SparkSession) {
     if (streams.exists(_.connector != spec.connector) || streams.size > cdc.size)
       throw new IllegalArgumentException(
         "mixing a CDC table with other unbounded sources in one statement is not supported")
-    if (isDirectScan(sql, spec.name)) ops.submit(sql) { info =>
+    if (isDirectScan(plan, spec.name)) ops.submit(sql) { info =>
       val changelog = cdcChangelog(spec)
       val store = keyedStore(spec.schema)
       val merge = ChangelogOps.mergeBatch(

@@ -1,24 +1,19 @@
 package graft.engine
 
+import org.apache.spark.sql.catalyst.parser.{SqlBaseLexer => L}
 import org.apache.spark.sql.types._
 
 /** Parsed Flink-style `CREATE TABLE … WITH (…)` statement — the one DDL
   * family Spark SQL has no equivalent for (SURVEY.md §2.2, §7.3): schema,
   * optional WATERMARK clause, optional PRIMARY KEY, connector options.
-  *
-  * Reference shapes covered (all from /root/reference):
-  *  - examples/01-datagen-streaming.flinknb:12 — WATERMARK + datagen opts
-  *  - examples/02-datagen-batch.flinknb:12,83 — sequence fields, ROW<>, ARRAY<>
-  *  - flink-runtime/CONNECTORS.md:75-140 — filesystem/kafka/cdc DDL
+  * Reference shapes: examples/01-datagen-streaming.flinknb:12 (WATERMARK,
+  * datagen), examples/02-datagen-batch.flinknb:12,83 (ROW<>, ARRAY<>),
+  * flink-runtime/CONNECTORS.md:75-140 (filesystem/kafka/cdc).
   */
 final case class WatermarkSpec(column: String, delay: String)
 
-final case class TableSpec(
-    name: String,
-    schema: StructType,
-    watermark: Option[WatermarkSpec],
-    primaryKey: Seq[String],
-    options: Map[String, String]) {
+final case class TableSpec(name: String, schema: StructType, watermark: Option[WatermarkSpec],
+    primaryKey: Seq[String], options: Map[String, String]) {
   def connector: String = options.getOrElse("connector", "")
   /** filesystem tables are bounded scans UNLESS continuous directory
     * monitoring is on ('source.monitor-interval', the Flink option that
@@ -29,153 +24,94 @@ final case class TableSpec(
 }
 
 object FlinkDdl {
+  import DialectShim.Stmt
 
-  private val CreateTableRe =
-    """(?is)\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([`\w.]+)\s*\((.*)\)\s*WITH\s*\((.*)\)\s*;?\s*""".r
-
-  def isCreateTableWith(sql: String): Boolean = CreateTableRe.matches(sql)
-
-  def parse(sql: String): TableSpec = sql match {
-    case CreateTableRe(name, body, opts) =>
-      val entries = splitTopLevel(body)
-      val wmRe = """(?is)WATERMARK\s+FOR\s+(\w+)\s+AS\s+\w+\s*-\s*INTERVAL\s*'(\d+)'\s*(\w+)""".r
-      val pkRe = """(?is)PRIMARY\s+KEY\s*\(([^)]*)\)\s*(?:NOT\s+ENFORCED)?""".r
-      var watermark: Option[WatermarkSpec] = None
-      var pk: Seq[String] = Nil
-      val fields = entries.flatMap { e =>
-        e.trim match {
-          case wmRe(c, n, unit) =>
-            watermark = Some(WatermarkSpec(c, s"$n ${unit.toLowerCase}s".replaceAll("ss$", "s")))
-            None
-          case pkRe(cols) =>
-            pk = cols.split(',').map(_.trim.stripPrefix("`").stripSuffix("`")).toSeq
-            None
-          case colDef =>
-            val (col, rest) = colDef.splitAt(colDef.indexOf(' '))
-            // strip column constraints/comments the type parser doesn't
-            // model: NOT NULL / NULL / COMMENT '…' (nullability lives on
-            // StructField and defaults true; Flink treats it as a hint too)
-            val tpe = rest.trim
-              .replaceAll("(?is)\\s+COMMENT\\s+'[^']*'\\s*$", "")
-              .replaceAll("(?is)\\s+NOT\\s+NULL\\s*$", "")
-              .replaceAll("(?is)\\s+NULL\\s*$", "")
-            Some(StructField(col.trim.stripPrefix("`").stripSuffix("`"),
-              parseType(tpe.trim)))
-        }
-      }
-      TableSpec(name.stripPrefix("`").stripSuffix("`"), StructType(fields),
-        watermark, pk, parseOptions(opts))
-    case _ => throw new IllegalArgumentException(s"not a CREATE TABLE … WITH: $sql")
+  def parse(sql: String): TableSpec = DialectShim.route(sql) match {
+    case DialectShim.EngineDdl(spec) => spec
+    case _ => throw new IllegalArgumentException(s"not a CREATE TABLE … WITH: ${sql.take(80)}")
   }
 
-  /** Split on commas at nesting level zero. Respects () and <> nesting and
-    * treats single-quoted strings as opaque, so a COMMENT containing commas
-    * or angle brackets can't mis-nest the split (doubled '' escapes toggle
-    * twice — harmless). A bare `<`/`>` OUTSIDE a string or generic type —
-    * e.g. a comparison inside a (future) computed-column expression —
-    * leaves the depth unbalanced and is rejected with a clear error
-    * instead of silently mis-splitting the remaining columns. */
-  private[engine] def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inQuote = false
-    val cur = new StringBuilder
-    s.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case c if inQuote => cur += c
-      case c @ ('(' | '<') => depth += 1; cur += c
-      case c @ (')' | '>') => depth -= 1; cur += c
-      case ',' if depth == 0 => out += cur.toString; cur.clear()
-      case c => cur += c
+  /** `CREATE TABLE [IF NOT EXISTS] name (entries) WITH (options)`, else
+    * None (Spark's own CREATE TABLE forms). An entry is a column, `WATERMARK
+    * FOR c AS c [- INTERVAL 'n' UNIT]` or `PRIMARY KEY (…) [NOT ENFORCED]`;
+    * a computed column `c AS expr` fails by name. Nullability and comments
+    * are hints in Flink: every column comes out nullable, without comment. */
+  private[engine] def createTable(s: Stmt): Option[TableSpec] = {
+    val at = if (s.word(2) == "IF" && s.word(3) == "NOT" && s.word(4) == "EXISTS") 5 else 2
+    val open = s.nameEnd(at)
+    val body = if (open > at && s.kind(open) == L.LEFT_PAREN) s.close(open) else -1
+    if (body < 0 || s.word(body + 1) != "WITH" || s.kind(body + 2) != L.LEFT_PAREN ||
+      s.close(body + 2) != s.n - 1) return None
+    var (watermark, pk) = (Option.empty[WatermarkSpec], Seq.empty[String])
+    val columns = s.split(open + 1, body).flatMap { case (a, b) =>
+      if (s.word(a) == "WATERMARK" && s.word(a + 1) == "FOR" && s.word(a + 3) == "AS") {
+        val delay = if (b == a + 5) Some("0 seconds")
+          else if (s.kind(a + 5) == L.MINUS) interval(s, a + 6, b) else None
+        watermark = Some(WatermarkSpec(s.name(a + 2, a + 3), delay.getOrElse(throw
+          new IllegalArgumentException(s"unsupported watermark '${s.text(a, b)}': use " +
+            "WATERMARK FOR ts AS ts [- INTERVAL 'n' UNIT]"))))
+        None
+      } else if (s.word(a) == "PRIMARY" && s.word(a + 1) == "KEY" && s.close(a + 2) > 0) {
+        pk = s.split(a + 3, s.close(a + 2)).map { case (c, d) => s.name(c, d) }
+        None
+      } else if (s.word(a + 1) == "AS") throw new IllegalArgumentException(
+        s"computed columns are not supported: column ${s.name(a, a + 1)} is '${s.text(a, b)}'")
+      else Some(column(s, a, b))
     }
-    if (depth != 0 || inQuote) throw new IllegalArgumentException(
-      s"unbalanced (), <> or quote in DDL list: '$s' — comparison operators " +
-        "in column definitions are not supported (computed columns are not " +
-        "part of the envelope); put < > inside a COMMENT '…' string")
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
+    val schema = StructType.fromDDL(columns.mkString(", "))
+    Some(TableSpec(s.name(at, open), StructType(schema.map(f => StructField(f.name, f.dataType))),
+      watermark, pk, options(s, body + 3, s.n - 1)))
   }
 
-  /** Flink SQL type → Spark type (SURVEY.md §1.2 mapping table). */
-  private[engine] def parseType(t: String): DataType = {
-    val up = t.trim.toUpperCase
-    // scale is optional (Flink: DECIMAL(p) ⇒ scale 0)
-    val DecimalRe = """(?:DECIMAL|NUMERIC)\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
-    val VarcharRe = """(?:VARCHAR|CHAR)\s*(?:\(\s*\d+\s*\))?""".r
-    val TsRe = """TIMESTAMP(?:\s*\(\s*\d\s*\))?""".r
-    val TsLtzRe = """TIMESTAMP_LTZ(?:\s*\(\s*\d\s*\))?""".r
-    val TimeRe = """TIME(?:\s*\(\s*\d\s*\))?""".r
-    val BinRe = """(?:BYTES|BINARY|VARBINARY)(?:\s*\(\s*\d+\s*\))?""".r
-    up match {
-      case "INT" | "INTEGER" => IntegerType
-      case "BIGINT" => LongType
-      case "SMALLINT" => ShortType
-      case "TINYINT" => ByteType
-      case "STRING" => StringType
-      case VarcharRe() => StringType
-      case "DOUBLE" => DoubleType
-      case "FLOAT" | "REAL" => FloatType
-      case "BOOLEAN" => BooleanType
-      case DecimalRe(p, s) =>
-        DecimalType(p.toInt, Option(s).map(_.toInt).getOrElse(0))
-      case "DECIMAL" | "NUMERIC" => DecimalType(10, 0) // Flink's default p/s
-      case "DATE" => DateType
-      // Flink TIME has no Spark equivalent: millis-of-day (SURVEY §7.3)
-      case TimeRe() => IntegerType
-      case TsLtzRe() => TimestampType
-      // Flink TIMESTAMP(n) is local-date-time (⇒ NTZ), but Spark event-time
-      // watermarks require TimestampType; with the session pinned to UTC the
-      // two are indistinguishable, so map to TimestampType for watermark
-      // compatibility (SURVEY §1.2 note).
-      case TsRe() => TimestampType
-      case BinRe() => BinaryType
-      case _ if up.startsWith("ROW<") =>
-        val inner = t.trim.substring(4, t.trim.length - 1)
-        StructType(splitTopLevel(inner).map { f =>
-          val (n, tt) = f.splitAt(f.indexOf(' '))
-          StructField(n.trim.stripPrefix("`").stripSuffix("`"), parseType(tt.trim))
-        })
-      case _ if up.startsWith("ARRAY<") =>
-        ArrayType(parseType(t.trim.substring(6, t.trim.length - 1)))
-      case _ if up.startsWith("MAP<") =>
-        val inner = splitTopLevel(t.trim.substring(4, t.trim.length - 1))
-        MapType(parseType(inner(0)), parseType(inner(1)))
-      case other => throw new IllegalArgumentException(s"unsupported type: $other")
+  /** Flink type spellings Spark's type parser lacks. TIME → millis-of-day
+    * (SURVEY §7.3); TIMESTAMP(n), NTZ in Flink, → TimestampType, which
+    * event-time watermarks need (the session is pinned to UTC, SURVEY §1.2). */
+  private val Aliases = Map("ROW" -> "STRUCT", "BYTES" -> "BINARY", "VARBINARY" -> "BINARY",
+    "BINARY" -> "BINARY", "TIMESTAMP" -> "TIMESTAMP", "TIMESTAMP_LTZ" -> "TIMESTAMP",
+    "TIME" -> "INT", "CHAR" -> "STRING", "VARCHAR" -> "STRING")
+
+  /** Column tokens [a, b) in Spark's DDL: aliases mapped (their `(n)`
+    * dropped), a bare NULL dropped, and column and ROW field names (words
+    * followed by a word other than NOT, NULL or COMMENT) backquoted. */
+  private def column(s: Stmt, a: Int, b: Int): String = {
+    val out = new StringBuilder
+    var i = a
+    while (i < b) {
+      val (w, t) = (s.word(i), s.text(i, i + 1))
+      if (s.isWord(i) && s.isWord(i + 1) && !Set("NOT", "NULL", "COMMENT")(s.word(i + 1)))
+        out ++= (if (t.startsWith("`")) t else s"`$t`") += ' '
+      else if (Aliases.contains(w)) {
+        out ++= Aliases(w) += ' '
+        if (w != "ROW" && s.kind(i + 1) == L.LEFT_PAREN && s.close(i + 1) > 0) i = s.close(i + 1)
+      } else if (w != "NULL" || s.word(i - 1) == "NOT") out ++= t += ' '
+      i += 1
     }
+    out.toString
   }
 
-  /** `'k' = 'v', …` option list. */
-  private[engine] def parseOptions(s: String): Map[String, String] = {
-    val OptRe = """'([^']*)'\s*=\s*'([^']*)'""".r
-    OptRe.findAllMatchIn(s).map(m => m.group(1) -> m.group(2)).toMap
-  }
+  /** `INTERVAL 'n' UNIT` as tokens [a, b) → "n units". */
+  private[engine] def interval(s: Stmt, a: Int, b: Int): Option[String] =
+    if (b != a + 3 || s.word(a) != "INTERVAL" || s.kind(a + 1) != L.STRING_LITERAL) None
+    else Some(s"${s.str(a + 1)} ${s.word(a + 2).toLowerCase.stripSuffix("s")}s")
+
+  /** `'k' = 'v', …` in tokens [a, b); any other entry fails by its text. */
+  private[engine] def options(s: Stmt, a: Int, b: Int): Map[String, String] =
+    s.split(a, b).map { case (c, d) =>
+      if (d == c + 3 && s.kind(c) == L.STRING_LITERAL && s.kind(c + 1) == L.EQ &&
+        s.kind(c + 2) == L.STRING_LITERAL) s.str(c) -> s.str(c + 2)
+      else throw new IllegalArgumentException(
+        s"option entries read 'key' = 'value', not: ${s.text(c, d)}")
+    }.toMap
 
   /** Spark type → Flink logical-type ROOT name (the gateway envelope's
-    * `logicalType.type` vocabulary) — the reverse of [[parseType]], so a
-    * declared envelope type round-trips to the same root. Lossy where the
-    * forward mapping is (TIME degrades to INTEGER, TIMESTAMP/TIMESTAMP_LTZ
-    * both land on TimestampType and reverse to the NTZ root — the session
-    * is pinned to UTC, where the two are indistinguishable). Container
-    * types report their root only (ARRAY/MAP/ROW), not nested element
-    * types — the reference client renders column names and ignores the
-    * type payload entirely (flinkNotebookController.ts:348-356). */
-  def flinkTypeRoot(dt: DataType): String = dt match {
-    case IntegerType => "INTEGER"
-    case LongType => "BIGINT"
-    case ShortType => "SMALLINT"
-    case ByteType => "TINYINT"
-    case StringType => "VARCHAR"
-    case DoubleType => "DOUBLE"
-    case FloatType => "FLOAT"
-    case BooleanType => "BOOLEAN"
-    case _: DecimalType => "DECIMAL"
-    case DateType => "DATE"
-    case TimestampType | TimestampNTZType => "TIMESTAMP_WITHOUT_TIME_ZONE"
-    case BinaryType => "VARBINARY"
-    case _: ArrayType => "ARRAY"
-    case _: MapType => "MAP"
-    case _: StructType => "ROW"
-    case other => other.typeName.toUpperCase
+    * `logicalType.type`), lossy where the DDL mapping is (TIME, _LTZ);
+    * containers report their root only: the reference client ignores the
+    * type payload (flinkNotebookController.ts:348-356). */
+  def flinkTypeRoot(dt: DataType): String = {
+    val root = dt.simpleString.takeWhile(c => c != '(' && c != '<')
+    Map("int" -> "INTEGER", "string" -> "VARCHAR", "binary" -> "VARBINARY", "struct" -> "ROW",
+      "timestamp" -> "TIMESTAMP_WITHOUT_TIME_ZONE", "timestamp_ntz" -> "TIMESTAMP_WITHOUT_TIME_ZONE"
+    ).getOrElse(root, root.toUpperCase)
   }
 
   /** (root name, nullable) per field — the ResultStore/gateway shape. */

@@ -922,6 +922,23 @@ class EngineSpec extends AnyFunSuite with TempDirs {
         |  WATERMARK FOR event_time AS event_time - INTERVAL '5' SECOND
         |) WITH ('connector' = 'datagen')""".stripMargin)
     assert(wm.watermark.contains(WatermarkSpec("event_time", "5 seconds")))
+
+    // Flink's zero-delay watermark: bounded out-of-orderness 0
+    val wm0 = FlinkDdl.parse(
+      "CREATE TABLE t0 (ts TIMESTAMP(3), WATERMARK FOR ts AS ts) WITH ('connector' = 'datagen')")
+    assert(wm0.watermark.contains(WatermarkSpec("ts", "0 seconds")))
+
+    // '' inside a quoted value reads as ', in WITH (…) and in SET
+    val quoted = FlinkDdl.parse(
+      "CREATE TABLE q (a INT) WITH ('connector' = 'filesystem', 'path' = '/tmp/it''s')")
+    assert(quoted.options("path") == "/tmp/it's")
+    assert(DialectShim.route("SET 'pipeline.name' = 'it''s'") ==
+      DialectShim.SetConf("pipeline.name", "it's"))
+
+    // an option entry that is not 'k' = 'v' fails by name, not dropped
+    val unquoted = intercept[IllegalArgumentException](FlinkDdl.parse(
+      "CREATE TABLE u (a INT) WITH ('connector' = 'datagen', 'number-of-rows' = 10)"))
+    assert(unquoted.getMessage.contains("'number-of-rows' = 10"), unquoted.getMessage)
   }
 
   test("DDL parser covers the reference renderer's full type envelope") {
@@ -961,6 +978,11 @@ class EngineSpec extends AnyFunSuite with TempDirs {
         "CREATE TABLE bad (a INT, c AS a < 3) WITH ('connector' = 'datagen')")
     }
     assert(e.getMessage.contains("computed columns"))
+    val computed = intercept[IllegalArgumentException] {
+      FlinkDdl.parse("CREATE TABLE bad (a INT, b AS a + 1) WITH ('connector' = 'datagen')")
+    }
+    assert(computed.getMessage.contains("computed columns") &&
+      computed.getMessage.contains("column b"), computed.getMessage)
   }
 
   test("datagen MAP fields honor the length option with distinct keys") {
@@ -990,6 +1012,40 @@ class EngineSpec extends AnyFunSuite with TempDirs {
         "GROUP BY SESSION(ts, INTERVAL '30' SECOND)")
     assert(sess.contains("session_window(ts, '30 seconds')"))
     assert(sess.contains("session_window.start"))
+    // only the whole word followed by `(` is a window call; strings stay
+    val untouched = "SELECT MY_TUMBLE(ts, INTERVAL '1' MINUTE), " +
+      "\"TUMBLE(ts, INTERVAL '1' MINUTE)\" FROM t"
+    assert(DialectShim.rewriteGroupWindows(untouched) == untouched)
+  }
+
+  test("dialect hostile-input bound: routing is linear, malformed input fails by offset") {
+    def seconds(sql: String): Double = {
+      val t0 = System.nanoTime
+      DialectShim.route(sql)
+      (System.nanoTime - t0) / 1e9
+    }
+    // the shape a greedy `\((.*)\)\s*WITH\s*\((.*)\)` backtracks on: 128 KB
+    val create = (n: Int) => "CREATE TABLE t (a INT" + ") WITH (" * n
+    val literal = "SELECT '" + "x" * 400000 + "'"
+    for (sql <- Seq(create(16000), literal)) {
+      val s = seconds(sql)
+      assert(s <= 1.0, f"${sql.take(20)}… (${sql.length / 1024} KB) routed in $s%.2f s")
+    }
+    assert(DialectShim.route(literal) == DialectShim.Passthrough(literal))
+    // doubling the input at most about doubles the time (best of 5 each)
+    val (small, large) = (create(16000), create(32000))
+    val (t1, t2) = (Seq.fill(5)(seconds(small)).min, Seq.fill(5)(seconds(large)).min)
+    assert(t2 <= 2.5 * t1 + 0.005, f"128 KB: $t1%.4f s, 256 KB: $t2%.4f s")
+
+    val stderr = new java.io.ByteArrayOutputStream
+    val old = System.err
+    System.setErr(new java.io.PrintStream(stderr))
+    try for ((bad, at) <- Seq("SELECT 'it''s" -> 11, "SELECT `c;d" -> 7, "SELECT 1 /* open" -> 9,
+        "CREATE TABLE t (a INT) WITH ('k' = 'v)" -> 35)) {
+      val e = intercept[IllegalArgumentException](DialectShim.route(bad))
+      assert(e.getMessage.contains(s"offset $at"), s"$bad: ${e.getMessage}")
+    } finally System.setErr(old)
+    assert(stderr.size == 0, stderr.toString)
   }
 
   // ------------------------------------------------- result store protocol

@@ -1,14 +1,17 @@
 package graft
 
-import graft.engine.{FlinkDdl, ResultStore, TableSpec}
+import graft.engine.{DialectShim, FlinkDdl, ResultStore, TableSpec}
 import graft.sources.Datagen
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests (SURVEY §5): result-store pagination invariants and
-  * datagen range/sequence guarantees under generated parameters.
+/** Property tests (SURVEY §5): result-store pagination invariants,
+  * datagen range/sequence guarantees and the dialect front end's
+  * statement-set split, group-window rewrite and DDL parse under
+  * generated parameters.
   * (scalatestplus bridge isn't in the offline cache — samples are drawn
   * directly from scalacheck Gens with a fixed seed.)
   */
@@ -98,6 +101,73 @@ class PropertySpec extends AnyFunSuite {
       assert(nRemoved == toks.size - expectKept.size, s"doc $id: n_removed")
       assert(nKept == expectKept.size, s"doc $id: n_kept")
       assert(fp == expectFp, s"doc $id: survivor stream must preserve order/repeats")
+    }
+  }
+
+  // ------------------------------------------------ dialect front end
+  /** A payload that means something to a naive splitter or rewriter. */
+  private val payload = Gen.oneOf(";", ",", "<", ")", "TUMBLE(ts, INTERVAL '1' MINUTE)", "\u00e9\ud83d\ude00;")
+  /** The payload hidden where the SQL lexer makes it opaque: a '…'
+    * literal (with '' escapes), a "…" string, a `…` identifier, or a line
+    * or block comment before a plain column. */
+  private val carriers: Seq[String => String] = Seq(
+    p => "'" + p.replace("'", "''") + "'", p => "'it''s " + p.replace("'", "''") + "'",
+    p => "\"" + p + "\"", p => "`" + p + "`",
+    p => s"-- $p\n c", p => s"/* $p */ c")
+  private val hidden: Gen[String] =
+    for (p <- payload; f <- Gen.oneOf(carriers)) yield f(p)
+  private val items = Gen.choose(1, 4).flatMap(Gen.listOfN(_, hidden)).map(_.mkString(", "))
+
+  test("dialect property: a statement set splits only on top-level semicolons") {
+    val stmts = Gen.choose(1, 5).flatMap(n => Gen.listOfN(n, items)).map(_.zipWithIndex.map {
+      case (sel, k) => s"INSERT INTO sink$k SELECT $sel FROM src$k"
+    })
+    for (ss <- samples(stmts, 60)) {
+      val sql = ss.mkString("EXECUTE STATEMENT SET BEGIN\n", ";\n", ";\nEND;")
+      assert(DialectShim.route(sql) == DialectShim.StatementSet(ss), sql)
+    }
+  }
+
+  test("dialect property: the group-window rewrite leaves literals and comments byte-identical") {
+    for (sel <- samples(items, 60)) {
+      val flink = s"SELECT $sel, TUMBLE_END(ts, INTERVAL '1' MINUTE) AS e FROM t " +
+        s"GROUP BY HOP(ts, INTERVAL '1' MINUTE, INTERVAL '2' HOUR), $sel"
+      val spark = s"SELECT $sel, window.end AS e FROM t " +
+        s"GROUP BY window(ts, '2 hours', '1 minutes'), $sel"
+      assert(DialectShim.rewriteGroupWindows(flink) == spark)
+      assert(DialectShim.route(flink) == DialectShim.Passthrough(spark))
+      assert(DialectShim.route(s"INSERT INTO s $flink") ==
+        DialectShim.InsertInto("s", overwrite = false, spark))
+    }
+  }
+
+  test("dialect property: a CREATE TABLE with hidden payloads in COMMENTs parses to its columns") {
+    val types = Gen.oneOf(Seq[(String, DataType)](
+      "INT" -> IntegerType, "STRING" -> StringType, "VARCHAR(10)" -> StringType,
+      "DECIMAL(5, 2)" -> DecimalType(5, 2), "TIMESTAMP(3)" -> TimestampType,
+      "ARRAY<BIGINT>" -> ArrayType(LongType), "MAP<STRING, INT>" -> MapType(StringType, IntegerType),
+      "ROW<x INT, `time` TIME(0)>" -> StructType(Seq(
+        StructField("x", IntegerType), StructField("time", IntegerType))),
+      "ROW<a ROW<b BYTES>>" -> StructType(Seq(StructField("a",
+        StructType(Seq(StructField("b", BinaryType))))))))
+    val column = for {
+      (ddl, tpe) <- types
+      p <- payload
+      nn <- Gen.oneOf("", " NOT NULL")
+      comment <- Gen.oneOf("", s" COMMENT '${p.replace("'", "''")}'")
+      sep <- Gen.oneOf(", ", s" /* $p */, ", s", -- $p\n")
+    } yield (s"$ddl$nn$comment", sep, tpe, p)
+    val table = Gen.choose(1, 6).flatMap(Gen.listOfN(_, column))
+    for (cols <- samples(table, 60)) {
+      val body = cols.zipWithIndex.map { case ((ddl, sep, _, _), i) =>
+        s"c$i $ddl" + (if (i < cols.size - 1) sep else "") }.mkString
+      val opts = cols.zipWithIndex.map { case ((_, _, _, p), i) =>
+        s"'o$i' = '${p.replace("'", "''")}'" }.mkString(", ")
+      val sql = s"CREATE TABLE t ($body) WITH ($opts)"
+      val spec = FlinkDdl.parse(sql)
+      assert(spec.schema == StructType(cols.zipWithIndex.map { case ((_, _, t, _), i) =>
+        StructField(s"c$i", t) }), sql)
+      assert(spec.options == cols.zipWithIndex.map { case ((_, _, _, p), i) => s"o$i" -> p }.toMap)
     }
   }
 }
