@@ -56,7 +56,7 @@ if [ "${GRAFT_SKIP_PERTURB:-0}" = "1" ]; then
 else
   plog=$(mktemp)
   SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch \
-    "runMain graft.ScaleSmoke 30 all perturb reuse once json=/tmp/graft_perturb_p30.json" \
+    "Test/runMain graft.ScaleSmoke 30 all perturb reuse once json=/tmp/graft_perturb_p30.json" \
     >"$plog" 2>&1
   pstatus=$?
   grep -E '\[scale\] (corpus ready|reusing|walls written)' "$plog"
@@ -78,7 +78,7 @@ else
     else
     elog=$(mktemp)
     SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch \
-      "runMain graft.ScaleSmoke 10 $heavies perturb reuse once json=/tmp/graft_perturb_p10.json" \
+      "Test/runMain graft.ScaleSmoke 10 $heavies perturb reuse once json=/tmp/graft_perturb_p10.json" \
       >"$elog" 2>&1
     estatus=$?
     grep -E '\[scale\] (corpus ready|reusing|walls written)' "$elog"
@@ -98,7 +98,7 @@ if [ "${GRAFT_SKIP_PERTURB:-0}" = "1" ]; then
 else
   slog=$(mktemp)
   SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch \
-    "runMain graft.ScaleSmoke 30 all perturb skew reuse once json=/tmp/graft_perturb_p30s.json" \
+    "Test/runMain graft.ScaleSmoke 30 all perturb skew reuse once json=/tmp/graft_perturb_p30s.json" \
     >"$slog" 2>&1
   sstatus=$?
   grep -E '\[scale\] (corpus ready|reusing|walls written)' "$slog"
@@ -116,7 +116,7 @@ else
     else
     selog=$(mktemp)
     SPARK_GRAFT_SF_DIR="$SF_BENCH" sbt -batch \
-      "runMain graft.ScaleSmoke 10 $sheavies perturb skew reuse once json=/tmp/graft_perturb_p10s.json" \
+      "Test/runMain graft.ScaleSmoke 10 $sheavies perturb skew reuse once json=/tmp/graft_perturb_p10s.json" \
       >"$selog" 2>&1
     sestatus=$?
     grep -E '\[scale\] (corpus ready|reusing|walls written)' "$selog"

@@ -6,7 +6,7 @@ package graft
   * apart. Every value was SET BY A MEASUREMENT recorded in BASELINE.md —
   * none is a guess — and each entry cites the rung that set it. Operators
   * still take these as default parameters, so probe tooling
-  * (ScaleProbe/ScaleSmoke) can override per-run without recompiling.
+  * (Probe/ScaleSmoke) can override per-run without recompiling.
   */
 object GraftTuning {
 

@@ -25,8 +25,9 @@ object DialectShim {
 
   /** One statement's tokens on the default channel (no whitespace or
     * comments) and, per `(`, the index of its `)` (-1 when unclosed). An
-    * unclosed quote, backquote or comment fails, naming its offset; other
-    * stray characters are left to Spark's parser. */
+    * unclosed quote, backquote or comment fails, naming its offset (and,
+    * when a backslash precedes a later matching quote, that the backslash
+    * escaped it); other stray characters are left to Spark's parser. */
   private[engine] final class Stmt(sql: String) {
     private val cs = CharStreams.fromString(sql)
     val toks: IndexedSeq[Token] = {
@@ -35,7 +36,10 @@ object DialectShim {
       Iterator.continually(lexer.nextToken()).takeWhile(_.getType != Token.EOF).filter { t =>
         if (t.getType == L.UNRECOGNIZED && "'\"`".contains(t.getText) ||
           lexer.has_unclosed_bracketed_comment) throw new IllegalArgumentException(
-          s"unclosed quote, backquote or comment at offset ${t.getStartIndex}: ${t.getText.take(2)}")
+          s"unclosed quote, backquote or comment at offset ${t.getStartIndex}: ${t.getText.take(2)}" +
+            // Flink has no backslash escapes; Spark's lexer reads \' as one
+            (if (!"'\"".contains(t.getText) || sql.indexOf("\\" + t.getText, t.getStartIndex) < 0) ""
+             else s" (a backslash escapes the next character in this engine, so \\${t.getText} does not close it)"))
         t.getChannel == Token.DEFAULT_CHANNEL
       }.toIndexedSeq
     }

@@ -1,6 +1,7 @@
 package graft.engine
 
-import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
@@ -61,6 +62,32 @@ final case class CheckpointEntry(
     stateRows: Long,
     stateBytes: Long)
 
+/** One batch job as the listener saw it: the monitor's [[JobInfo]] row
+  * plus the job group (what cancel cancels), the SQL execution (whose plan
+  * gives the vertices) and the per-job costs a profile prints. Times are
+  * epoch ms (`endMs` is -1 while running); `description` is the thread's
+  * `spark.job.description` at submit, else Spark's short call site (the
+  * result stage's name, as Spark's UI shows it);
+  * `stages` counts the stages this job ran, not the ones it skipped. */
+final case class BatchJob(
+    id: Int,
+    group: String,
+    executionId: Option[Long],
+    description: String,
+    state: String,
+    startMs: Long,
+    endMs: Long = -1L,
+    stages: Int = 0,
+    tasks: Int = 0,
+    recordsIn: Long = 0L,
+    recordsOut: Long = 0L,
+    inputBytes: Long = 0L,
+    shuffleReadBytes: Long = 0L,
+    shuffleWriteBytes: Long = 0L,
+    executorRunMs: Long = 0L) {
+  def info: JobInfo = JobInfo(id.toString, group, state, recordsIn, recordsOut, inputBytes)
+}
+
 final case class JobDetails(
     job: JobInfo,
     vertices: Seq[VertexInfo],
@@ -68,155 +95,116 @@ final case class JobDetails(
     checkpoints: Option[CheckpointStats])
 
 final class JobRegistry(spark: SparkSession) {
-
-  private val batchJobs = TrieMap.empty[Int, JobInfo]
-  private val streamJobs = TrieMap.empty[java.util.UUID, JobInfo]
-  private val jobGroups = TrieMap.empty[Int, String]
-  // stage ids and job ids are independent counters — metrics arrive keyed
-  // by stage, so record each job's stages at start
-  private val stageToJob = TrieMap.empty[Int, Int]
-  // batch job → SQL execution (spark.sql.execution.id property at start);
-  // execution → physical plan tree (SQLExecutionStart listener event)
-  private val jobToExecution = TrieMap.empty[Int, Long]
-  private val executionPlans = TrieMap.empty[Long, SparkPlanInfo]
-  // streaming: last progress + committed-batch counter per query. Commits
-  // key off batchId ADVANCING, not event count — Spark re-emits idle
-  // progress events for an unchanged batch (noDataProgressEventInterval),
-  // which must not inflate the "completed checkpoint = committed
-  // micro-batch" contract.
-  private val streamProgress = TrieMap.empty[java.util.UUID, StreamingQueryProgress]
-  private val streamCommits = TrieMap.empty[java.util.UUID, Long]
-  private val streamLastBatch = TrieMap.empty[java.util.UUID, Long]
-  private val streamFailures = TrieMap.empty[java.util.UUID, Long]
-  // retained checkpoint HISTORY per query (newest last), ring-capped —
-  // Flink retains a bounded history list for /jobs/{jid}/checkpoints
-  // package-visible so MonitorCatalogSpec tracks the real cap, not a copy
-  private[graft] val MaxCheckpointHistory = 64
-  private val streamHistory = TrieMap.empty[java.util.UUID, Vector[CheckpointEntry]]
+  import JobRegistry._
 
   /** History caps: a long-lived gateway session executes unbounded numbers
     * of statements, and retaining every SparkPlanInfo tree / job row would
-    * grow driver memory monotonically. Ids are monotonic, so pruning the
-    * smallest keys evicts the oldest history; details() on an evicted job
-    * degrades to overview-only, matching the reference UI (its monitor
-    * shows recent jobs). */
+    * grow driver memory monotonically. Each map drops its oldest entries
+    * past its cap; details() on an evicted job degrades to overview-only,
+    * matching the reference UI (its monitor shows recent jobs). A running
+    * stream is never evicted: the stream list holds at most [[MaxStreams]]
+    * streams unless more than that many are running. */
   private val MaxHistory = 1000
   private val MaxPlans = 256
-  private def prune[V](m: TrieMap[Int, V], cap: Int): Unit =
-    while (m.size > cap) m.keys.minOption.foreach(m.remove)
-  private def pruneL[V](m: TrieMap[Long, V], cap: Int): Unit =
-    while (m.size > cap) m.keys.minOption.foreach(m.remove)
+  // package-visible so MonitorCatalogSpec tracks the real caps, not copies
+  private[graft] val MaxStreams = 256
+  // retained checkpoint HISTORY per query (newest last), ring-capped —
+  // Flink retains a bounded history list for /jobs/{jid}/checkpoints
+  private[graft] val MaxCheckpointHistory = 64
 
-  private val sparkListener = new SparkListener {
+  private val batchJobs = new Bounded[Int, BatchJob](MaxHistory)
+  // stage ids and job ids are independent counters — metrics arrive keyed
+  // by stage, so record at job start the stages each job lists
+  private val stageToJob = new Bounded[Int, Int](4 * MaxHistory)
+  // SQL execution → physical plan tree (SQLExecutionStart listener event)
+  private val executionPlans = new Bounded[Long, SparkPlanInfo](MaxPlans)
+  private val streams = new Bounded[java.util.UUID, StreamRecord](MaxStreams,
+    keep = _.job.state == "RUNNING")
+
+  private[graft] val sparkListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val props = Option(e.properties)
-      val group = props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-      props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-        .foreach(eid => jobToExecution.put(e.jobId, eid.toLong))
-      jobGroups.put(e.jobId, group)
-      e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-      batchJobs.put(e.jobId,
-        JobInfo(e.jobId.toString, group, "RUNNING", 0, 0, 0))
-      prune(batchJobs, MaxHistory); prune(jobGroups, MaxHistory)
-      prune(stageToJob, 4 * MaxHistory); prune(jobToExecution, MaxHistory)
+      def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+      // a stage listed by an earlier job is that job's: later jobs skip it
+      e.stageIds.foreach(stageToJob.putIfAbsent(_, e.jobId))
+      batchJobs.put(e.jobId, BatchJob(e.jobId, prop("spark.jobGroup.id").getOrElse(""),
+        prop("spark.sql.execution.id").map(_.toLong),
+        prop("spark.job.description").orElse(prop("callSite.short"))
+          .getOrElse(e.stageInfos.maxByOption(_.stageId).fold("")(_.name)),
+        "RUNNING", e.time))
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) stageToJob.get(e.stageId).foreach { jobId =>
-        batchJobs.updateWith(jobId) {
-          case Some(j) => Some(j.copy(
-            numRecordsIn = j.numRecordsIn + m.inputMetrics.recordsRead,
-            numBytesIn = j.numBytesIn + m.inputMetrics.bytesRead,
-            numRecordsOut = j.numRecordsOut + m.outputMetrics.recordsWritten))
-          case None => None
-        }
+        // one task per stage that ran: the first attempt of its first task
+        val first = e.stageAttemptId == 0 && e.taskInfo.index == 0 && e.taskInfo.attemptNumber == 0
+        batchJobs.update(jobId)(j => j.copy(
+          stages = j.stages + (if (first) 1 else 0),
+          tasks = j.tasks + 1,
+          recordsIn = j.recordsIn + m.inputMetrics.recordsRead,
+          recordsOut = j.recordsOut + m.outputMetrics.recordsWritten,
+          inputBytes = j.inputBytes + m.inputMetrics.bytesRead,
+          shuffleReadBytes = j.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = j.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          executorRunMs = j.executorRunMs + m.executorRunTime))
       }
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
-      batchJobs.updateWith(e.jobId) {
-        case Some(j) => Some(j.copy(state =
-          if (e.jobResult.toString.contains("Succeeded")) "FINISHED" else "FAILED"))
-        case None => None
-      }
+      batchJobs.update(e.jobId)(_.copy(endMs = e.time, state =
+        if (e.jobResult.toString.contains("Succeeded")) "FINISHED" else "FAILED"))
     override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
       case s: SparkListenerSQLExecutionStart =>
         executionPlans.put(s.executionId, s.sparkPlanInfo)
-        pruneL(executionPlans, MaxPlans)
       case e: QueryStartedEvent =>
-        streamJobs.put(e.id, JobInfo(e.id.toString,
-          Option(e.name).getOrElse(""), "RUNNING", 0, 0, 0))
-      case e: QueryProgressEvent => streamProgressed(e.progress)
-      case e: QueryTerminatedEvent => streamTerminated(e)
+        streams.put(e.id, StreamRecord(JobInfo(e.id.toString,
+          Option(e.name).getOrElse(""), "RUNNING", 0, 0, 0)))
+      case e: QueryProgressEvent => streams.update(e.progress.id)(progressed(_, e.progress))
+      case e: QueryTerminatedEvent => streams.update(e.id)(terminated(_, e))
       case _ => ()
     }
   }
 
-  private def streamProgressed(p: StreamingQueryProgress): Unit = {
-    streamProgress.put(p.id, p)
-    val isNewBatch = streamLastBatch.put(p.id, p.batchId).forall(_ < p.batchId)
-    if (isNewBatch) {
-      streamCommits.updateWith(p.id)(c => Some(c.getOrElse(0L) + 1L))
-      import scala.jdk.CollectionConverters._
-      val dur = p.durationMs.asScala
-        .get("triggerExecution").map(_.longValue()).getOrElse(0L)
-      val entry = CheckpointEntry(
+  // Commits key off batchId ADVANCING, not event count — Spark re-emits
+  // idle progress events for an unchanged batch (noDataProgressEventInterval),
+  // which must not inflate the "completed checkpoint = committed
+  // micro-batch" contract.
+  private def progressed(s: StreamRecord, p: StreamingQueryProgress): StreamRecord = {
+    val job = s.job.copy(
+      numRecordsIn = s.job.numRecordsIn + p.numInputRows,
+      numRecordsOut = s.job.numRecordsOut +
+        Option(p.sink).map(_.numOutputRows).filter(_ > 0).getOrElse(0L))
+    if (p.batchId <= s.lastBatch) s.copy(job = job, progress = Some(p))
+    else s.copy(job = job, progress = Some(p), lastBatch = p.batchId, commits = s.commits + 1,
+      history = s.retain(CheckpointEntry(
         id = p.batchId,
         status = "COMPLETED",
         // progress.timestamp is ISO-8601 UTC; the wire field is epoch ms
         triggerTimestamp = java.time.Instant.parse(p.timestamp).toEpochMilli,
-        durationMs = dur,
+        durationMs = p.durationMs.asScala.get("triggerExecution").map(_.longValue()).getOrElse(0L),
         stateRows = p.stateOperators.map(_.numRowsTotal).sum,
-        stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum)
-      streamHistory.updateWith(p.id)(h =>
-        Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
-    }
-    streamJobs.updateWith(p.id) {
-      case Some(j) => Some(j.copy(
-        numRecordsIn = j.numRecordsIn + p.numInputRows,
-        numRecordsOut = j.numRecordsOut +
-          Option(p.sink).map(_.numOutputRows).filter(_ > 0).getOrElse(0L)))
-      case None => None
-    }
+        stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum), MaxCheckpointHistory))
   }
 
-  private def streamTerminated(e: QueryTerminatedEvent): Unit = {
-    if (e.exception.isDefined) {
-      streamFailures.updateWith(e.id)(c => Some(c.getOrElse(0L) + 1L))
-      // a failed run is one FAILED history row (Flink records failed
-      // checkpoints in the same list); id = the batch that didn't commit
-      val failedId = streamLastBatch.get(e.id).map(_ + 1L).getOrElse(0L)
-      val entry = CheckpointEntry(failedId, "FAILED",
-        System.currentTimeMillis(), 0L, 0L, 0L)
-      streamHistory.updateWith(e.id)(h =>
-        Some((h.getOrElse(Vector.empty) :+ entry).takeRight(MaxCheckpointHistory)))
-    }
-    // a graft stream runs on a processing-time trigger and never finishes
-    // on its own: a query that ends without an exception was stopped
-    streamJobs.updateWith(e.id) {
-      case Some(j) => Some(j.copy(state =
-        if (e.exception.isDefined) "FAILED" else "CANCELED"))
-      case None => None
-    }
-    // cap terminated-stream history: drop the heavy per-query state (last
-    // progress) for the oldest streams this registry no longer sees RUNNING
-    if (streamProgress.size > MaxPlans) {
-      val running = streamJobs.collect { case (id, j) if j.state == "RUNNING" => id }.toSet
-      streamProgress.keys.filterNot(running.contains)
-        .take(streamProgress.size - MaxPlans)
-        .foreach { id =>
-          Seq(streamProgress, streamHistory, streamCommits, streamLastBatch, streamFailures)
-            .foreach(_.remove(id))
-        }
-    }
-  }
+  // a graft stream runs on a processing-time trigger and never finishes on
+  // its own: a query that ends without an exception was stopped. A failed
+  // run is one FAILED history row (Flink records failed checkpoints in the
+  // same list); id = the batch that didn't commit.
+  private def terminated(s: StreamRecord, e: QueryTerminatedEvent): StreamRecord =
+    if (e.exception.isEmpty) s.copy(job = s.job.copy(state = "CANCELED"))
+    else s.copy(job = s.job.copy(state = "FAILED"), failures = s.failures + 1,
+      history = s.retain(CheckpointEntry(s.lastBatch + 1, "FAILED",
+        System.currentTimeMillis(), 0L, 0L, 0L), MaxCheckpointHistory))
 
   spark.sparkContext.addSparkListener(sparkListener)
 
   /** Overview grouped by state (jobMonitorProvider.ts:112,146-157). */
   def overview(): Map[String, Seq[JobInfo]] =
-    (batchJobs.values ++ streamJobs.values).toSeq.groupBy(_.state)
+    (batchJobs.values.map(_.info) ++ streaming()).groupBy(_.state)
 
-  def streaming(): Seq[JobInfo] = streamJobs.values.toSeq
+  def streaming(): Seq[JobInfo] = streams.values.map(_.job)
+
+  /** Retained batch jobs, oldest first. */
+  def jobs(): Seq[BatchJob] = batchJobs.values
 
   /** Per-job drill-down: operator vertices + durations + checkpoint stats —
     * the reference fetches `/jobs/:id` vertices and `/jobs/:id/checkpoints`
@@ -227,71 +215,94 @@ final class JobRegistry(spark: SparkSession) {
     * the last `StreamingQueryProgress` (parallelism = its shuffle-partition
     * count), `durations` = the progress's phase durations, checkpoints =
     * committed-batch counts + commit duration + state size. */
-  def details(id: String): Option[JobDetails] = {
-    val batch = batchJobs.collectFirst { case (jid, j) if jid.toString == id => (jid, j) }
-    batch match {
-      case Some((jid, j)) =>
-        val vertices = jobToExecution.get(jid).flatMap(executionPlans.get) match {
-          case Some(plan) => flatten(plan).map(n =>
-            VertexInfo(n.nodeName, spark.sparkContext.defaultParallelism, j.state))
-          case None => Nil
-        }
-        Some(JobDetails(j, vertices, Map.empty, None))
-      case None =>
-        streamJobs.collectFirst { case (uid, j) if uid.toString == id => (uid, j) }
-          .map { case (uid, j) =>
-            val prog = streamProgress.get(uid)
-            val vertices = prog.toSeq.flatMap(_.stateOperators.toSeq).map { so =>
-              VertexInfo(so.operatorName, so.numShufflePartitions.toInt, j.state,
-                so.numRowsTotal, so.numRowsUpdated)
-            }
-            val durations: Map[String, Long] = prog match {
-              case Some(p) =>
-                import scala.jdk.CollectionConverters._
-                p.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap
-              case None => Map.empty
-            }
-            val ckpt = prog.map { p =>
-              val commits = streamCommits.getOrElse(uid, 0L)
-              val failed = streamFailures.getOrElse(uid, 0L)
-              CheckpointStats(
-                total = commits + failed,
-                completed = commits,
-                failed = failed,
-                latestCompleted = commits > 0,
-                lastCommitDurationMs =
-                  durations.getOrElse("walCommit", 0L) +
-                    durations.getOrElse("commitOffsets", 0L) +
-                    durations.getOrElse("commitBatch", 0L),
-                stateRows = p.stateOperators.map(_.numRowsTotal).sum,
-                stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum)
-            }
-            JobDetails(j, vertices, durations, ckpt)
-          }
-    }
-  }
+  def details(id: String): Option[JobDetails] =
+    batchJob(id).map { j =>
+      val vertices = j.executionId.flatMap(executionPlans.get).toSeq.flatMap(flatten).map(n =>
+        VertexInfo(n.nodeName, spark.sparkContext.defaultParallelism, j.state))
+      JobDetails(j.info, vertices, Map.empty, None)
+    }.orElse(stream(id).map { s =>
+      val vertices = s.progress.toSeq.flatMap(_.stateOperators.toSeq).map { so =>
+        VertexInfo(so.operatorName, so.numShufflePartitions.toInt, s.job.state,
+          so.numRowsTotal, so.numRowsUpdated)
+      }
+      val durations: Map[String, Long] = s.progress.fold(Map.empty[String, Long])(
+        _.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap)
+      val ckpt = s.progress.map { p =>
+        CheckpointStats(
+          total = s.commits + s.failures,
+          completed = s.commits,
+          failed = s.failures,
+          latestCompleted = s.commits > 0,
+          lastCommitDurationMs =
+            durations.getOrElse("walCommit", 0L) +
+              durations.getOrElse("commitOffsets", 0L) +
+              durations.getOrElse("commitBatch", 0L),
+          stateRows = p.stateOperators.map(_.numRowsTotal).sum,
+          stateBytes = p.stateOperators.map(_.memoryUsedBytes).sum)
+      }
+      JobDetails(s.job, vertices, durations, ckpt)
+    })
 
   /** Retained checkpoint history for a streaming query (oldest→newest,
     * ring-capped at [[MaxCheckpointHistory]]) — the `history` list the
     * reference reads from `/jobs/{jid}/checkpoints`
     * (flinkJobClient.ts:180-188). Batch jobs have no checkpoints: empty. */
   def checkpointHistory(id: String): Seq[CheckpointEntry] =
-    streamHistory.collectFirst {
-      case (uid, h) if uid.toString == id => h
-    }.getOrElse(Vector.empty)
+    stream(id).fold(Seq.empty[CheckpointEntry])(_.history)
 
   private def flatten(p: SparkPlanInfo): Seq[SparkPlanInfo] =
     p +: p.children.flatMap(flatten)
+
+  // a monitor id is the job's own id text: a batch job id or a stream UUID
+  private def batchJob(id: String) = key(id)(_.toInt).flatMap(batchJobs.get)
+  private def stream(id: String) = key(id)(java.util.UUID.fromString).flatMap(streams.get)
+  private def key[K](id: String)(parse: String => K): Option[K] =
+    Try(parse(id)).toOption.filter(_.toString == id)
 
   /** Cancel by id (flinkJobClient.ts:164-175 analogue): a RUNNING stream
     * stops through `stopStream`, which cancels the operation that owns the
     * query (the gateway passes `SessionManager.cancelStream`); a batch job
     * cancels its job group. */
   def cancel(id: String, stopStream: String => Boolean): Boolean =
-    if (streamJobs.exists { case (uid, j) => uid.toString == id && j.state == "RUNNING" })
-      stopStream(id)
-    else jobGroups.collectFirst { case (jid, g) if jid.toString == id && g.nonEmpty => g }
+    if (stream(id).exists(_.job.state == "RUNNING")) stopStream(id)
+    else batchJob(id).map(_.group).filter(_.nonEmpty)
       .exists { g => spark.sparkContext.cancelJobGroup(g); true }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(sparkListener)
+}
+
+private object JobRegistry {
+
+  /** One streaming query: its monitor row, last progress, committed and
+    * failed micro-batch counts and retained checkpoint history. */
+  final case class StreamRecord(
+      job: JobInfo,
+      progress: Option[StreamingQueryProgress] = None,
+      lastBatch: Long = -1L,
+      commits: Long = 0L,
+      failures: Long = 0L,
+      history: Vector[CheckpointEntry] = Vector.empty) {
+    def retain(e: CheckpointEntry, cap: Int): Vector[CheckpointEntry] =
+      (history :+ e).takeRight(cap)
+  }
+
+  /** An insertion-ordered map that, past `cap` entries, drops its oldest
+    * ones that `keep` does not hold on to. One lock: the listener bus
+    * writes while monitor requests read. */
+  final class Bounded[K, V](cap: Int, keep: V => Boolean = (_: V) => false) {
+    private val m = new java.util.LinkedHashMap[K, V]()
+    def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+    def values: Seq[V] = synchronized(m.values.asScala.toVector)
+    def put(k: K, v: V): Unit = synchronized { m.put(k, v); evict() }
+    def putIfAbsent(k: K, v: V): Unit = synchronized { if (!m.containsKey(k)) put(k, v) }
+    def update(k: K)(f: V => V): Unit = synchronized {
+      Option(m.get(k)).foreach { v => m.put(k, f(v)); evict() }
+    }
+    private def evict(): Unit = {
+      var excess = m.size - cap
+      val it = m.values.iterator
+      while (excess > 0 && it.hasNext)
+        if (!keep(it.next())) { it.remove(); excess -= 1 }
+    }
+  }
 }

@@ -2108,7 +2108,7 @@ object DedupOps {
     *    never broadcast-hinted).
     *
     * Why contraction replaced the r17-r19 per-round propagation +
-    * pointer-jump loop: r20's CcProbe measured the node-level jump
+    * pointer-jump loop: r20's cc probe measured the node-level jump
     * rounds converging LINEARLY on shuffled-id chains (60-node chain: 33
     * rounds; 20000-node: >50 and threw) — label values land at random
     * POSITIONS, so chasing label→label through node ids advances the
@@ -2122,9 +2122,22 @@ object DedupOps {
     * the residual fitting THROWS: partial labels would silently violate
     * the min-of-component contract. Correctness is pinned by the
     * equivalence spec (driver finish vs forced cap=0 contraction on a
-    * mixed graph) and the 1000-link-chain test. */
+    * mixed graph) and the 1000-link-chain test.
+    *
+    * Each round's jobs carry a job description naming the round and the
+    * residual entering it, so a job listener (`graft.Probe cc`) can count
+    * jobs per round; the caller's description is restored on return. */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
       driverEdgeCap: Int = GraftTuning.CcDriverEdgeCap): DataFrame = {
+    val sc = edges.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try contractComponents(edges, maxRounds, driverEdgeCap,
+      round => sc.setJobDescription(s"connected components round $round"))
+    finally sc.setJobDescription(callerDescription)
+  }
+
+  private def contractComponents(edges: DataFrame, maxRounds: Int,
+      driverEdgeCap: Int, describe: String => Unit): DataFrame = {
     // materialize AND reset plan statistics. localCheckpoint truncates
     // lineage but PRESERVES the optimized plan's size estimate
     // (originStats) — and Catalyst's join size estimate is the PRODUCT of
@@ -2149,6 +2162,7 @@ object DedupOps {
     // already at its component minimum, so the loop's first round counts
     // zero changes and exits: one propagation round instead of 2-3 at any
     // corpus size. Non-clique shapes just start one hop closer.
+    describe("0: seed labels and residual graph")
     var labels = mat(edges.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("label"))
       .select(col("src").as("doc_id"), col("label")))
@@ -2164,7 +2178,7 @@ object DedupOps {
     // two basins — and everything after runs at label-graph grain. r19
     // paid 3 edge-table joins per propagation round; the r19 verdict
     // flagged that ~2× per-round tax for the >cap regime, and this
-    // round's CcProbe measured the deeper problem: the node-level
+    // round's cc probe measured the deeper problem: the node-level
     // pointer-jump rounds converged LINEARLY on shuffled chains (60-node
     // chain: 33 rounds; 20000-node: >50 — label values land at random
     // POSITIONS, so chasing label→label through node ids advances the
@@ -2192,8 +2206,6 @@ object DedupOps {
       .filter(col("ls") =!= col("ld"))
     var lg = mat(eLab.distinct())
     var sample = lg.limit(driverEdgeCap + 1).collect()
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      System.err.println(s"[cc] iter=0 residual=${sample.length}")
     if (sample.isEmpty) {
       // seed labels already constant across every edge (cliques — the
       // overwhelmingly common near-dup shape): done, zero rounds
@@ -2222,6 +2234,7 @@ object DedupOps {
         .withColumn("cur", col("orig")))
       var iter = 1
       while (sample.length > driverEdgeCap && iter < maxRounds) {
+        describe(s"$iter: residual > $driverEdgeCap edges")
         val sym = lg.union(lg.select(col("ld").as("ls"), col("ls").as("ld")))
         val step = mat(sym.groupBy(col("ls"))
           .agg(least(min(col("ld")), col("ls")).as("nxt")))
@@ -2238,8 +2251,6 @@ object DedupOps {
             col("cur") === col("__c"), "left")
           .select(col("orig"), coalesce(col("nxt"), col("cur")).as("cur")))
         sample = lg.limit(driverEdgeCap + 1).collect()
-        if (sys.env.contains("GRAFT_CC_TRACE"))
-          System.err.println(s"[cc] iter=$iter residual=${sample.length}")
         iter += 1
       }
       if (sample.length > driverEdgeCap) throw new IllegalStateException(

@@ -440,7 +440,7 @@ object MultimodalOps {
     * broadcast hints (a >cap code table must shuffle). Both paths are the
     * same Ham≤1 relation; a spec replays the forced-distributed path
     * against the driver default and asserts row equality, and the r14
-    * rung MEASURED it (ScaleProbe `mm`, width 32, perturb corpora):
+    * rung MEASURED it (Probe `mm`, width 32, perturb corpora):
     * forced-distributed 7.1 / 18.1 / 17.2 s at p10/p30/p100 (50k/150k/
     * 500k docs) vs driver-auto 6.4 / 7.5 / 10.6 s — the distributed
     * twin's wall is FLAT across the decade because the pointer-jumping

@@ -349,16 +349,43 @@ class DedupSimilaritySpec extends AnyFunSuite with TempDirs {
   test("connected components converge on a 1000-link chain in O(log n) rounds") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    // adversarial worst case for plain min-label propagation (would need
-    // ~999 rounds — the pointer-jump step must close it in ≤ 25)
-    val chain = (0L until 1000L).map(i => (i, i + 1))
-    val pairsDf = chain.toDF("id_a", "id_b")
-    val edges = pairsDf.union(pairsDf.select(col("id_b"), col("id_a")))
-      .toDF("src", "dst")
-    val labels = DedupOps.connectedComponents(edges, maxRounds = 25)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels.size == 1001)
-    assert(labels.values.forall(_ == 0L), "one chain = one component, rep = min id")
+    // every round's jobs carry a description naming the round, and the
+    // caller's description comes back on return
+    val sc = spark.sparkContext
+    val reg = new graft.engine.JobRegistry(spark)
+    sc.setJobDescription("chain caller")
+    def rounds(chain: Seq[(Long, Long)], driverEdgeCap: Int): (Map[Long, Long], Seq[Int]) = {
+      val pairsDf = chain.toDF("id_a", "id_b")
+      val edges = pairsDf.union(pairsDf.select(col("id_b"), col("id_a")))
+        .toDF("src", "dst")
+      val t0 = System.currentTimeMillis()
+      val out = DedupOps.connectedComponents(edges, maxRounds = 25, driverEdgeCap = driverEdgeCap)
+      assert(sc.getLocalProperty("spark.job.description") == "chain caller")
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      org.apache.spark.ListenerBusProbe.drain(sc)
+      val descs = reg.jobs().filter(_.startMs >= t0).map(_.description)
+      assert(descs.contains("chain caller"), s"the final labels run as the caller: $descs")
+      val Round = "connected components round (\\d+).*".r
+      (labels, descs.collect { case Round(n) => n.toInt }.distinct)
+    }
+    try {
+      // adversarial worst case for plain min-label propagation (would need
+      // ~999 rounds — the pointer-jump step must close it in ≤ 25)
+      val chain = (0L until 1000L).map(i => (i, i + 1))
+      val (labels, driverRounds) = rounds(chain, GraftTuning.CcDriverEdgeCap)
+      assert(labels.size == 1001)
+      assert(labels.values.forall(_ == 0L), "one chain = one component, rep = min id")
+      assert(driverRounds == Seq(0), "the residual fits the cap: round 0, then the driver")
+      // the same chain over shuffled ids with the driver finish off runs
+      // distributed contraction rounds, numbered from 0 without a gap
+      val perm = scala.util.Random.javaRandomToRandom(new java.util.Random(5))
+        .shuffle((0L to 1000L).toVector)
+      val (forced, forcedRounds) = rounds(chain.map { case (a, b) =>
+        (perm(a.toInt), perm(b.toInt)) }, 0)
+      assert(forced.size == 1001 && forced.values.forall(_ == 0L))
+      assert(forcedRounds.size > 1 && forcedRounds == (0 to forcedRounds.max),
+        s"rounds: $forcedRounds")
+    } finally { sc.setJobDescription(null); reg.close() }
   }
 
   test("CC driver union-find finish ≡ pure distributed rounds (r19 residual contraction)") {

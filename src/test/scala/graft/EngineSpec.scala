@@ -1041,9 +1041,12 @@ class EngineSpec extends AnyFunSuite with TempDirs {
     val old = System.err
     System.setErr(new java.io.PrintStream(stderr))
     try for ((bad, at) <- Seq("SELECT 'it''s" -> 11, "SELECT `c;d" -> 7, "SELECT 1 /* open" -> 9,
-        "CREATE TABLE t (a INT) WITH ('k' = 'v)" -> 35)) {
+        "CREATE TABLE t (a INT) WITH ('k' = 'v)" -> 35,
+        "CREATE TABLE t (a INT) WITH ('path' = 'C:\\dir\\')" -> 38)) {
       val e = intercept[IllegalArgumentException](DialectShim.route(bad))
       assert(e.getMessage.contains(s"offset $at"), s"$bad: ${e.getMessage}")
+      // a Flink literal ending in a backslash: the message says why it is unclosed
+      assert(e.getMessage.contains("backslash") == bad.contains('\\'), e.getMessage)
     } finally System.setErr(old)
     assert(stderr.size == 0, stderr.toString)
   }

@@ -124,4 +124,51 @@ class MonitorCatalogSpec extends AnyFunSuite {
       session.ops.cancel(h)
     } finally reg.close()
   }
+
+  test("job registry: the stream list keeps every running stream and a bounded tail") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryStartedEvent, QueryTerminatedEvent}
+    val reg = new JobRegistry(spark)
+    try {
+      def start(id: java.util.UUID): Unit = reg.sparkListener.onOtherEvent(
+        new QueryStartedEvent(id, java.util.UUID.randomUUID(), s"q-$id", "2026-01-01T00:00:00.000Z"))
+      val running = Seq.fill(3)(java.util.UUID.randomUUID())
+      running.take(2).foreach(start)
+      val ended = Seq.fill(2000)(java.util.UUID.randomUUID())
+      ended.zipWithIndex.foreach { case (id, i) =>
+        start(id)
+        reg.sparkListener.onOtherEvent(new QueryTerminatedEvent(id, java.util.UUID.randomUUID(),
+          if (i % 2 == 0) None else Some("boom")))
+        if (i == 1000) start(running(2))
+      }
+      val listed = reg.streaming()
+      assert(listed.size <= reg.MaxStreams + 3, s"${listed.size} streams listed")
+      assert(running.forall(id => listed.exists(j => j.id == id.toString && j.state == "RUNNING")))
+      val evicted = ended.head.toString
+      assert(!listed.exists(_.id == evicted))
+      assert(reg.details(evicted).isEmpty)
+      assert(reg.checkpointHistory(evicted).isEmpty)
+      // the newest terminated streams stay, with their failed checkpoint row
+      val last = ended.last.toString
+      assert(reg.details(last).exists(_.job.state == "FAILED"))
+      assert(reg.checkpointHistory(last).map(_.status) == Seq("FAILED"))
+    } finally reg.close()
+  }
+
+  test("job registry: batch job records carry tasks, shuffle bytes, times and a description") {
+    val reg = new JobRegistry(spark)
+    val sc = spark.sparkContext
+    try {
+      // the group tells this query's jobs from any other job on the shared
+      // context; no job description, so the record falls back to the call site
+      sc.setJobGroup("batch-record", null)
+      spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusProbe.drain(sc)
+      val jobs = reg.jobs().filter(_.group == "batch-record")
+      assert(jobs.nonEmpty && jobs.forall(_.state == "FINISHED"), s"$jobs")
+      assert(jobs.map(_.tasks).sum > 0 && jobs.map(_.stages).sum > 0, s"$jobs")
+      assert(jobs.map(_.shuffleWriteBytes).sum > 0 && jobs.map(_.shuffleReadBytes).sum > 0, s"$jobs")
+      assert(jobs.forall(j => j.endMs >= j.startMs && j.description.nonEmpty), s"$jobs")
+    } finally reg.close()
+  }
 }

@@ -1,17 +1,33 @@
 package graft
 
+import graft.engine.{BatchJob, JobRegistry}
 import graft.operators.{DedupOps, SimilarityOps}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The scale-debugging probe kit, one parameterized entry point — grown
-  * out of the ad-hoc AnnProbe/IvfProbe/IvfProbe2/PqProbe/PqProbe10x
-  * one-offs that bisected the r11/r12 scale cliffs (the triple-evaluated
-  * IVF cell assignment, the 114 s array-laden ANN verify, the PQ
-  * resolution saturation). Run against a ScaleSmoke-derived corpus
-  * (`/tmp/graft_scale_{x,p}N`) or a testdata SF dir. Builder-side tool,
-  * not part of any gate.
+/** The probe kit, one parameterized entry point for measuring the engine
+  * by hand — grown out of the ad-hoc AnnProbe/IvfProbe/IvfProbe2/PqProbe/
+  * PqProbe10x one-offs that bisected the r11/r12 scale cliffs (the
+  * triple-evaluated IVF cell assignment, the 114 s array-laden ANN verify,
+  * the PQ resolution saturation) and the TimeQuery/PlanAudit/ProfileQuery/
+  * CcProbe mains. Run against a testdata SF dir or a ScaleSmoke-derived
+  * corpus (`/tmp/graft_scale_{x,p}N`). Not part of any gate.
   *
-  * Modes (`Test/runMain graft.ScaleProbe <mode> [args]`):
+  * Modes (`Test/runMain graft.Probe <mode> [args]`):
+  *  - `time <sfDir> <q,…>` — per query: warm once, then the min of 3 runs.
+  *  - `plan <sfDir> [q …]` — `explain("formatted")` of the named driver
+  *    queries (all of them when none are named).
+  *  - `profile <sfDir> <q> [reps]` — after a warm pass, one cold-cache run
+  *    per rep and every Spark job it launched, read from a [[JobRegistry]]:
+  *    the DRIVER GAP since the previous job ended (planning, collects,
+  *    eigensolves, literal construction all hide there), duration, stages,
+  *    tasks, input / shuffle bytes and summed executor run time, then the
+  *    jobs grouped by description. At bench scale most operators are
+  *    overhead-bound; this table says whether a second goes to executors
+  *    or to the driver.
+  *  - `cc [n] [cap]` — connectedComponents on an n-node shuffled-id chain
+  *    (default 20000) with driverEdgeCap `cap` (default 0: every round
+  *    distributed): wall, correctness and jobs per contraction round.
   *  - `ann <dir> [budget]` — stage-isolated timing of dd_semdedup_ann:
   *    contraction, candidate generation, distinct, and the verify
   *    strategies, every stage the operator's own `private[graft]` helper
@@ -33,11 +49,16 @@ import org.apache.spark.sql.functions._
   *  - `annop <dir>` — phase-level wall of the FULL dd_semdedup_ann
   *    (contraction / candidates+verify / CC / expansion), plus the
   *    shipped operator end-to-end with a row-count drift assert.
+  *  - `trio <dir>` — the banded ordered trio (below).
   *
   * `ann ... both` times the two-join verify even past the crossover —
   * the honest way to measure WHERE the curves cross. */
-object ScaleProbe {
+object Probe {
   def main(args: Array[String]): Unit = args.headOption match {
+    case Some("time") => time(args.drop(1))
+    case Some("plan") => plan(args.drop(1))
+    case Some("profile") => profile(args.drop(1))
+    case Some("cc") => cc(args.drop(1))
     case Some("ann") => ann(args.drop(1))
     case Some("ivf") => ivf(args.drop(1))
     case Some("pq")  => pq(args.drop(1))
@@ -45,8 +66,116 @@ object ScaleProbe {
     case Some("annop") => annop(args.drop(1))
     case Some("trio") => trio(args.drop(1))
     case other => sys.error(
-      s"usage: ScaleProbe <ann|ivf|pq|mm|annop|trio> [args] — got $other")
+      s"usage: Probe <time|plan|profile|cc|ann|ivf|pq|mm|annop|trio> [args] — got $other")
   }
+
+  // fail fast on a typo'd name BEFORE paying session startup
+  private def query(name: String): (SparkSession, String) => DataFrame =
+    SparkEntry.queries.getOrElse(name, sys.error(s"unknown query name: $name — valid: " +
+      SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
+
+  private def time(args: Seq[String]): Unit = {
+    val (dir, fns) = (args(0), args(1).split(",").toSeq.map(n => n -> query(n)))
+    val spark = GraftSession.local()
+    fns.foreach { case (name, fn) =>
+      spark.catalog.clearCache()
+      fn(spark, dir).count() // warm
+      val times = (1 to 3).map { _ =>
+        spark.catalog.clearCache()
+        val t0 = System.nanoTime()
+        fn(spark, dir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"[time] $name min=${times.min}%.3f samples=${times.map(t => f"$t%.3f").mkString(",")}")
+    }
+    spark.stop()
+  }
+
+  private def plan(args: Seq[String]): Unit = {
+    val dir = args(0)
+    val names = if (args.length > 1) args.drop(1) else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach(query)
+    val spark = GraftSession.local()
+    names.foreach { n =>
+      spark.catalog.clearCache()
+      println(s"\n========== $n ==========")
+      query(n)(spark, dir).explain("formatted")
+    }
+    spark.stop()
+  }
+
+  private def profile(args: Seq[String]): Unit = {
+    val (dir, name, fn) = (args(0), args(1), query(args(1)))
+    val reps = args.lift(2).fold(1)(_.toInt)
+    val spark = GraftSession.local()
+    val registry = new JobRegistry(spark)
+    fn(spark, dir).count() // warm: codegen + page cache, the Bench discipline
+    for (_ <- 1 to reps) {
+      spark.catalog.clearCache()
+      val t0 = System.currentTimeMillis()
+      fn(spark, dir).count()
+      val wall = System.currentTimeMillis() - t0
+      val jobs = jobsSince(spark, registry, t0)
+      def mb(b: Long): String = f"${b / 1048576.0}%8.2f"
+      println(f"\n[profile] $name wall=${wall / 1000.0}%.3f s, jobs: ${jobs.size}")
+      println("  job   gap_ms   dur_ms  stg tasks  input_MB shRead_MB shWrite_MB exec_ms  desc")
+      var prevEnd = t0
+      var (sumGap, sumDur) = (0L, 0L)
+      jobs.foreach { j =>
+        val gap = j.startMs - prevEnd
+        val end = math.max(j.endMs, j.startMs)
+        prevEnd = math.max(prevEnd, end)
+        sumGap += math.max(0, gap); sumDur += end - j.startMs
+        println(f"  ${j.id}%4d $gap%8d ${end - j.startMs}%8d ${j.stages}%4d ${j.tasks}%5d " +
+          f"${mb(j.inputBytes)} ${mb(j.shuffleReadBytes)}  ${mb(j.shuffleWriteBytes)} " +
+          f"${j.executorRunMs}%7d  ${j.description.take(60)}")
+      }
+      println(f"[profile] $name wall=${wall}ms driver_gaps=${sumGap}ms job_time=${sumDur}ms")
+      byDescription("profile", jobs)
+    }
+    registry.close()
+    spark.stop()
+  }
+
+  private def cc(args: Seq[String]): Unit = {
+    val n = args.headOption.fold(20000)(_.toInt)
+    val cap = args.lift(1).fold(0)(_.toInt)
+    val spark = GraftSession.local()
+    import spark.implicits._
+    // shuffled-id chain: the worst case for min-label propagation (each
+    // round merges one basin layer)
+    val perm = scala.util.Random.javaRandomToRandom(new java.util.Random(11))
+      .shuffle((0L until n.toLong).toVector)
+    val pairs = perm.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
+    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .localCheckpoint()
+    val registry = new JobRegistry(spark)
+    val t0 = System.currentTimeMillis()
+    val labels = DedupOps.connectedComponents(edges, maxRounds = 50, driverEdgeCap = cap)
+    val correct = labels.filter(col("label") === 0L).count() == n.toLong
+    val wall = (System.currentTimeMillis() - t0) / 1e3
+    val jobs = jobsSince(spark, registry, t0)
+    println(f"[cc] n=$n cap=$cap correct=$correct wall=$wall%.2f s jobs=${jobs.size}")
+    byDescription("cc", jobs)
+    registry.close()
+    spark.stop()
+  }
+
+  /** The registry's jobs that started at or after `t0`, once the listener
+    * bus has delivered every event posted so far. */
+  private def jobsSince(spark: SparkSession, registry: JobRegistry,
+      t0: Long): Seq[BatchJob] = {
+    org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    registry.jobs().filter(_.startMs >= t0).sortBy(_.startMs)
+  }
+
+  /** Job count and summed executor time per job description, in order of
+    * first appearance. */
+  private def byDescription(tag: String, jobs: Seq[BatchJob]): Unit =
+    jobs.groupBy(_.description).toSeq.sortBy(_._2.head.startMs).foreach { case (d, js) =>
+      println(f"[$tag] ${js.size}%4d jobs ${js.map(_.executorRunMs).sum}%7d exec_ms  $d")
+    }
 
   /** `trio <dir>` — phase-isolated walls for the banded ordered trio
     * (r17): the unbanded single-window forms, the banded forms, and the

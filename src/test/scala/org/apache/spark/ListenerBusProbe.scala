@@ -2,7 +2,7 @@ package org.apache.spark
 
 import scala.jdk.CollectionConverters._
 
-/** Reads the listeners on a SparkContext's shared bus, which Spark keeps
+/** Reaches into a SparkContext's shared listener bus, which Spark keeps
   * package-private. */
 object ListenerBusProbe {
 
@@ -12,4 +12,8 @@ object ListenerBusProbe {
   def streamingQueryBuses(sc: SparkContext): Int =
     sc.listenerBus.listeners.asScala
       .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+
+  /** Blocks until every event posted to the shared bus so far has been
+    * delivered to every listener. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
